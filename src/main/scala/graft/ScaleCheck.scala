@@ -285,7 +285,17 @@ object ScaleCheck {
     // close map — tenancy-hot cells; measured anyway per the r12 rule)
     "q_diebold_mariano", "q_dunn_posthoc", "q_growth_accounting",
     "q_langid_accuracy", "q_mode", "q_ordinal_association",
-    "q_p_chart", "q_rosenbluth_index", "q_sobel_mediation")
+    "q_p_chart", "q_rosenbluth_index", "q_sobel_mediation",
+    // round-15 driver-map gate catches: the 18 queries the committed
+    // 8-core bench_out.json puts >= 1 s (0.22-0.71 s where the mid-r10
+    // map has them) — report scans and global sorts, text censuses,
+    // rank tests, the as-of tolerance join and the per-day series folds
+    "q_constraint_check", "q_corpus_report", "q_filter_pred",
+    "q_join_asof_tolerance", "q_lang_id", "q_lexical_richness",
+    "q_maxsim_late_interaction", "q_mmr_rerank", "q_resample_ffill",
+    "q_returns_by_brand", "q_runs_test", "q_sax_weekly", "q_scan_project",
+    "q_seasonal_mann_kendall", "q_seasonality_index", "q_sequence_motifs",
+    "q_shapley_attribution", "q_van_elteren")
 
   /** Per-copy key shift for the event/order key domains: copies get
     * disjoint user populations (×M users, SAME time span — per-era
