@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Per-round benchmark: every declared query at the given SF, one JSON
   * line on stdout. Queries execute fully — results go to the `noop`
   * sink, so projections/sorts/joins all run (a bare `.count()` would let
@@ -10,19 +9,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shared size-based session block (BenchConf): 64 MB broadcast
     // threshold (r14), size-based AQE partition coalescing + shuffled-
     // hash join enablement (r15) — rationale and measurements in
     // BenchConf's doc
-    val spark = BenchConf(SparkSession.builder()
-      .master(s"local[$cpus]"), sfDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: session + codegen + parquet footer reads
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val spark = Harness.session(sfDir)
+    Harness.warm(spark, sfDir)
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // min-of-N: the host shows tens-of-percent drift between
       // identical runs (shared-tenancy CPU), and min-of-N is the
       // standard estimator for the machine-limited cost. Two runs
@@ -32,27 +25,26 @@ object Bench {
       // the machine cost (r9: 35 driver-battery queries spiked >0.4 s
       // and all but four reverted in the same-binary close run). The
       // third rep bounds added wall time to the spiked minority. Each
-      // run is isolated from leftovers (broadcast blocks, shuffle
-      // buffers): drop what's droppable and GC outside the timing.
-      def one(): Double = {
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val t1 = one(); val t2 = one()
-      val times =
-        if (math.abs(t1 - t2) > 0.25 * math.min(t1, t2)) Seq(t1, t2, one())
-        else Seq(t1, t2)
+      // run is isolated from leftovers (Harness.measure drops what's
+      // droppable and GCs outside the timing). A query that throws in
+      // any run is reported as failed, never timed.
+      def one() = Harness.measure(spark, name)(fn(spark, sfDir)).map(_.total)
+      val times = for {
+        t1 <- one()
+        t2 <- one()
+        t3 <- if (math.abs(t1 - t2) > 0.25 * math.min(t1, t2)) one().map(Some(_))
+          else Right(None)
+      } yield (Seq(t1, t2) ++ t3).min -> t1
       // keep rep1 alongside the min (r14 verdict item 5): session
       // artifacts (graph edges, pinned censuses) memoize per JVM, so
       // for the first query that touches one, rep1 carries the build
       // cost the min-of-N estimator hides — bench_out.json reports
       // both so the ingest/query split is visible per query.
-      (name, times.min, t1)
+      name -> times
     }
+    val results = runs.collect { case (k, Right((v, r1))) => (k, v, r1) }
+    val failed = runs.collect { case (k, Left(_)) => "\"" + k + "\"" }
+      .mkString("\"failed\":[", ",", "]")
     // write-path metric: the noop sink above times compute only, but at
     // 100 TB the sink is half the job — time the one real write path in
     // the surface (z-order layout → range-partition → sorted parquet)
@@ -63,7 +55,7 @@ object Bench {
       System.gc()
       val t0 = System.nanoTime()
       try graft.ops.Relational.zorderRows(spark, sfDir)
-        .repartitionByRange(cpus.toInt, org.apache.spark.sql.functions.col("z"))
+        .repartitionByRange(Harness.cpus, org.apache.spark.sql.functions.col("z"))
         .sortWithinPartitions("z")
         .write.mode("overwrite").parquet(writeDir)
       catch { case e: Throwable => System.err.println(s"[bench] write: $e") }
@@ -75,7 +67,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val json =
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs,"write":${f2(writeSec)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs,$failed,"write":${f2(writeSec)},"sf":"$sfDir"}"""
     // also write the full JSON to a file: log-tail capture truncated the
     // round-2 per-query map, degrading the judge's evidence
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -90,7 +82,7 @@ object Bench {
       .mkString("{", ",", "}")
     val out1 = sys.env.getOrElse("SPARK_GRAFT_BENCH_REP1", "bench_rep1.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(out1),
-      (s"""{"metric":"rep1","unit":"sec","queries":$qs1,"sf":"$sfDir"}""" + "\n")
+      (s"""{"metric":"rep1","unit":"sec","queries":$qs1,$failed,"sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))
     // The driver captures only the LAST 2000 chars of stdout and JSON-
     // parses what it finds there. The plain 467-entry map is ~12 KB and
@@ -101,7 +93,8 @@ object Bench {
     // bench_out.json (written above, committed per round) named as the
     // full map of record. Greedy fill from the slowest down — those are
     // the entries the perf grading actually reads.
-    val budget = 1200 // chars for the inline "queries" map body
+    // chars for the inline "queries" map body, less what the failed list takes
+    val budget = 1200 - failed.length
     val bySlow = results.map { case (k, v, _) => (k, v) }.sortBy(-_._2)
     val inline = new StringBuilder
     var kept = 0
@@ -116,7 +109,7 @@ object Bench {
       fits
     }
     val shortJson =
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec","n_queries":${results.size},"queries":{${inline.result()}},"queries_note":"slowest $kept of ${results.size}; full map in bench_out.json","write":${f2(writeSec)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec","n_queries":${results.size},"queries":{${inline.result()}},"queries_note":"slowest $kept of ${results.size}; full map in bench_out.json",$failed,"write":${f2(writeSec)},"sf":"$sfDir"}"""
     // stop BEFORE the metric lines: Spark's console appender shares
     // stdout, so a late executor/stop WARN after the println would
     // un-tail the JSON the driver greps ("parsed": null in r2/r3)

@@ -69,9 +69,9 @@ object BenchConf {
     * little reduce-side parallelism for data-scale compute), 8 → 16 →
     * 32 within ±6% of each other once the tungsten writer and
     * advisory coalescing are on — so the formula targets the flat
-    * region's low end. Unreadable dirs fall back to 1 advisory
+    * region's low end. An unreadable dir falls back to 1 advisory
     * partition (AQE skew split still breaks up anything that
-    * materializes big).
+    * materializes big), with one stderr line naming the dir and why.
     */
   def sizeDerivedPartitions(dir: String): Int = {
     val bytes =
@@ -80,18 +80,23 @@ object BenchConf {
         try s.filter(java.nio.file.Files.isRegularFile(_))
           .mapToLong(java.nio.file.Files.size(_)).sum()
         finally s.close()
-      } catch { case _: Exception => 0L }
+      } catch {
+        case e: Exception =>
+          System.err.println(
+            s"[graft] WARN: cannot size '$dir' ($e); using 1 shuffle partition")
+          0L
+      }
     val target = 2L << 20
     math.max(1L, math.min((bytes + target - 1) / target, 1L << 20)).toInt
   }
 
-  def apply(b: SparkSession.Builder): SparkSession.Builder =
-    apply(b, sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-
-  def apply(b: SparkSession.Builder, dir: String): SparkSession.Builder = {
-    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+  /** `SPARK_GRAFT_SHUFFLE_PARTITIONS` when set, else [[sizeDerivedPartitions]]. */
+  def shufflePartitions(dir: String): Int =
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .map(_.toInt).getOrElse(sizeDerivedPartitions(dir))
-    b.config("spark.sql.shuffle.partitions", parts.toString)
+
+  def apply(b: SparkSession.Builder, dir: String): SparkSession.Builder =
+    b.config("spark.sql.shuffle.partitions", shufflePartitions(dir).toString)
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
@@ -110,5 +115,4 @@ object BenchConf {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         (64L * 1024 * 1024).toString)
-  }
 }

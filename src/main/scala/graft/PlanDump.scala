@@ -8,7 +8,8 @@ import java.nio.file.{Files, Paths}
   * queries, the artifact of the "explain, then iterate until it's the
   * plan you'd want" loop.
   *
-  * Run: `sbt "runMain graft.PlanDump [sfDir]"`.
+  * Run from the repo root, over the committed PLANS.md:
+  * `sbt "runMain graft.PlanDump [sfDir]"`.
   */
 object PlanDump {
   private val picks: Seq[(String, String)] = Seq(
@@ -139,130 +140,39 @@ object PlanDump {
     "q_kendall_tau_b" -> "concordance masses over the pinned bounded grid artifact: P = Σc·A (2-D exclusive prefix), Q = Σc·(CXL − A − By); marginal tie masses from grid marginals; constant-size windows only — shares ONE build with Hoeffding's D and Somers' D",
     "q_damped_holt" -> "calendar-bounded day census → ONE sorted fold (φ-damped level/trend recurrence, Spark aggregate ≡ DuckDB recursive CTE, bit-equal doubles); h=7 multiplier is a pinned literal — no data-sized window, one orders scan")
 
-  /** Round-5 census-reuse audit (VERDICT r4 item 8): every helper or
-    * query whose expensive subtree feeds MULTIPLE consumers, with its
-    * disposition. Emitted into PLANS.md so the audit survives
-    * regeneration.
-    */
-  private val censusAudit: String =
-    """## Census-reuse audit (round 5)
-      |
-      |Pattern audited: an expensive subtree (corpus scan+explode+agg, or a
-      |fact join) referenced by 2+ consumers (scalar aggs, grid joins,
-      |rejoins) without a persist — each consumer re-plans and re-executes
-      |the subtree. Disposition per query:
-      |
-      || query | shared subtree | consumers | disposition |
-      ||---|---|---|---|
-      || q_tvd_drift / q_ks_drift / q_wasserstein / q_chi2 | (source,lang)/(source,len) census | n scalar + per-src + per-lang/value + grid join | **persisted** (PlanGuard: single scan) |
-      || q_kendall_tau | nation×year rank frame over 3-join rev | rk self-join ×2, adj self-join ×2 | **persisted** (PlanGuard: single scan) |
-      || q_also_bought | basket collect_set over orders⋈lineitem | pair fan-out + support census + N scalar | **persisted** (3 passes → 1) |
-      || q_rare_token_docs | per-doc TF matrix | doc-token stream + corpus freq census | **restructured + persisted** (freq = Σ tf) |
-      || q_novelty | distinct (doc,bigram) stream | df census + rejoin | **persisted** |
-      || q_zipf_fit | vocab census | top-100 cut + max(cnt) base | **persisted** |
-      || q_collocations | unigram + bigram censuses | joins ×2 + totals ×2 | **persisted; totals derived from censuses** |
-      || q_dsir_weights | en/corpus vocab censuses | joins + (tt,tn) totals | **persisted; totals derived** |
-      || q_bm25 / q_rank_fusion | doc-length census | corpus stats + score join | **persisted** |
-      || q_class_weights | label census | totals + weight projection | **persisted** |
-      || q_top_supplier | 3-month supplier revenue census | global max + filter | **persisted** |
-      || q_important_parts | per-part value census | corpus total + share projection | **persisted** |
-      || q_excess_share | (part,supp) qty census | per-part totals + rejoin | **persisted** |
-      || q_freshness (freshnessFinish) | (priority,day) census | high-water agg + rollup | **persisted** |
-      || q_tfidf | TF matrix | df census + score join | persisted (round 3); nDocs is a separate 1-column scan — accepted (stats-then-scan) |
-      || q_histogram_numeric, q_dormant_customers, q_vocab_growth, zorderRows | raw column-pruned scan | 1-row stats agg + main pass | **accepted**: stats-then-scan needs two passes by definition; the extra pass is a pruned scan with no explode/join, and caching the raw fact to save it would cost more than the scan |
-      || q_gaps_islands / q_error_burn / q_rolling_median / q_seasonality / q_changepoint / q_calendar_gaps | calendar-bounded day census | single consumer chain | **single plan** — no reuse to pay for |
-      || q_psi / q_woe_iv | bin/category census + smoothed proportions | pinned-fold total + output join | **persisted** (PlanGuard budget 0) |
-      || q_pr_curve / q_ks_model | per-score census | RangeRank rank pass + 1-row class totals | **persisted** (totals read the cache, not events) |
-      || q_js_drift | (source,lang) census | n scalar + both marginals + dense grid | **persisted** (the r4 drift discipline) |
-      || q_survival_km | per-duration-day census | prefix-product curve + output join | **persisted**; per-row O(days²) fold → one prefix-product pass |
-      || q_lexicon_hits | hit-sized filtered token explode | occurrence census + distinct-doc census | **persisted** (hit-sized, ≪ corpus) |
-      || q_corpus_report | projected corpus base (source,lang,len,md5) | volume census + lang census + hash census | **persisted** (1 corpus scan, 3 readouts) |
-      || q_auc / q_lift_gain / q_calibration / q_target_encoding / q_cohen_kappa / q_mcc / q_brier_score / q_ece / q_mutual_info / q_effective_sample_size / q_preference_pairs | — | single consumer chain (or RangeRank's internal persist) | **single plan** |
-      || q_rfm_segments | per-customer RFM census | band cube (single chain); ref date folded as 1-row crossJoin(broadcast) — no second action | **single plan** |
-      || q_k_anonymity / q_l_diversity / q_export_shards / q_orc_source / q_sql_surface / q_decontaminate_embed / q_assortativity | — | single consumer chain | **single plan** |
-      || q_fairness_gaps | 5-row cohort confusion census | population totals + output projection | **persisted** (PlanGuard: zero raw scans) |
-      || q_forecast_eval | exact-cents day census (medianDaily) | actual side + d−7 forecast side of the self-join | **persisted** (one orders scan) |
-      || q_schema_evolution | — | single consumer chain (two disjoint-filter branches of one table is the union's honest input, not reuse) | **single plan** |
-      || q_label_prop / q_kcore | per-round frame | next round + per-round census | **checkpoint/persist per round** (census reads the materialized cache; kcore's edge tally reuses the materialization count) |
-      || q_cuped | per-user (variant, pre, post) cents frame | pooled moments + per-variant sums | **persisted** (budget guard 0) |
-      || q_diff_in_diff | 2×2 (variant, period) census | DiD pivot + output | **persisted** (budget guard 0) |
-      || q_mrr | per-source reciprocal-rank frame | pinned corpus fold + output | **persisted** (budget guard 0) |
-      || q_srm / q_span_corruption | — | single consumer chain | **single plan** |
-      |
-      |Round-6 additions:
-      |
-      || query | shared subtree | consumers | disposition |
-      ||---|---|---|---|
-      || q_anova | ≤5-row (n, Σ, Σ²) moment census | totals agg + term projection | **persisted** (budget guard 0; caught by the guard before it shipped) |
-      || q_confusion_multi | ≤25-cell confusion census | row totals + col totals + diagonal | **persisted** (budget guard 0) |
-      || q_langid_accuracy | guess-vs-label cells | per-lang totals + accuracy + output | **persisted** (budget guard 0) |
-      || q_map_at_k | projected relevance base | relevant-total census + top-k ranking | **persisted** (budget guard 0) |
-      || q_stickiness | (user, day) distinct census | DAU census + ×7 and ×28 fan-outs | **persisted** (budget guard 0) |
-      || q_also_bought (alsoBoughtBaskets) | capped basket frame | pair fan-out + support census + N scalar + ScaleCheck invariant | **persisted** (unchanged; invariant measured on counts) |
-      || q_log_loss / q_holt_smoothing / q_group_percentiles / q_json_key_census / q_reorder_interval / q_basket_size_dist / q_supplier_concentration / q_discount_band / q_char_trigrams / q_time_to_first / q_user_activity_hist / q_window_funnel / q_session_stats / q_activity_heatmap / q_token_histogram / q_dedup_rate_by_source / q_quality_gate / q_readability / q_lang_margin / q_fleiss_kappa / q_percent_rank / q_ntile_orders / q_ltv_deciles / q_moving_avg / q_sql_recursive / q_binary_source / q_phrase_search / q_local_clustering | — | single consumer chain (or RangeRank's internal persist / memoized artifact) | **single plan** |
-      || q_power_iteration / q_centroid_shift | quantized matrix / component-sum census | 5 rounds / per-label + global readouts | **persisted** |
-      || q_seasonality_index | ≤35-cell dow×type census | per-type marginal + per-dow marginal + total + index join | **persisted** (budget guard 0) |
-      || q_deep_discount | (p_type, basis-point) joined frame | per-type moment census + 2σ threshold pass | **persisted** (budget guard 0) |
-      || q_trade_matrix / q_returns_by_brand / q_customer_migration | — | single consumer chain | **single plan** |
-      || q_bleu_pairs | per-doc unigram + bigram censuses | candidate side, d+20 reference side, length frame | **persisted both** (budget guard 0) |
-      || q_token_coverage | vocab census | RangeRank total order + (total, vocab_n) agg | **persisted** (budget guard 0) |
-      || q_decile_transition | CASE-split per-customer halves | 2 RangeRank decile passes + the base join | **persisted** (budget guard 0) |
-      || q_type_share_drift | (week, type) census | weekly totals + share/drift frame | **persisted** (budget guard 0) |
-      || q_doc_prefix_dup | prefix projection | class census + per-source rejoin | **persisted** (budget guard 0) |
-      || q_brand_affinity | distinct (order, brand) projection | pair fan-out + brand marginals + order total | **persisted** (budget guard 0) |
-      || q_token_gini / q_inter_event_quantiles | census → RangeRank | RangeRank's internal range-parted persist | **single plan** (budget guard 0) |
-      || q_cramers_v / q_char_entropy / q_trigram_hapax / q_user_lifespan / q_discount_quantity_curve / q_margin_waterfall / q_order_value_cv / q_runs_test | — | single consumer chain (window marginals live on the census, not a rescan) | **single plan** |
-      || q_spearman_customers | CASE-split per-customer halves | 2 RangeRank rank passes + the d² join | **persisted** (budget guard 0) |
-      || q_split_balance | (split, lang) census | split totals + lang totals + corpus total + deviation join | **persisted** (budget guard 0) |
-      || q_source_keywords | (source, token) census | df census + source count + score join | **persisted** (budget guard 0) |
-      || q_payload_key_drift | (week, keys) projection | weekly totals + key explode | **persisted** (budget guard 0) |
-      || q_seasonality_index / q_type_share_drift | dow×type / week×type census | marginals + index (streaming twins share the census) | **persisted in finish** (budget guard 0) |
-      || q_cosine_histogram | embeddings self-join | left + right probe sides | **accepted 2 scans**: a 3-column columnar rescan beats caching the embedding corpus |
-      || q_cold_start_parts | part 2-column projection | anti side + brand totals | **accepted 2 scans** (stats-then-scan class) |
-      || q_supplier_trend / q_weekend_effect / q_cross_shard_dup / q_multisource_depth / q_depth_value_corr / q_brand_affinity (persisted ob) | — | single consumer chain | **single plan** |
-      || q_bleu_corpus | per-doc unigram + bigram censuses | candidate/reference/length totals | **persisted both** (budget guard 0) |
-      || q_skipgram_pmi | unigram + window-3 pair censuses | joins ×2 + totals ×2 | **persisted; totals derived** (budget guard 0) |
-      || q_sequence_motifs | per-user ordered sequence frame | ×4 motif fan-out | **persisted** (budget guard 0) |
-      || q_dup_jaccard_bands | shared pair core | band census | **memoized checkpoint** (q_dedup_ngram's artifact; budget guard 0) |
-      || q_power_user_share | per-user census → RangeRank | internal range-parted persist | **single plan** (budget guard 0) |
-      || q_bounce_rate / q_label_purity / q_assortment_entropy | — | single consumer chain | **single plan** |
-      || q_fk_orphans | — | 4 independent edge probes (child + parent key census each) | **accepted 8 scans** — per-edge audits scan each edge by definition |
-      || q_month_end_load / q_filter_impact_curve / q_brand_momentum / q_interaction_effects | band/length/(brand,year)/(lang,source) census | totals broadcast / cut joins / delta+argmax / marginal means | **persisted** (budget guard 0) |
-      || q_nation_self_sufficiency / q_order_cadence / q_velocity_flags / q_aov_monthly / q_value_by_hour / q_priority_migration / q_token_length_hist / q_props_fill_by_type / q_supplier_continuity / q_length_moments / q_discount_tax_grid / q_user_type_diversity | — | single consumer chain | **single plan** |
-      || q_dedup_candidate_stats | shared pair core | degree histogram | **memoized checkpoint** (budget guard 0) |
-      || q_lang_vocab_jaccard / q_vocab_private_share / q_customer_growth | (lang, gram) / (source, token) / (customer, month) distinct census | self-join + sizes / df rejoin / first-month + activity join | **persisted** (budget guard 0) |
-      || q_brand_loyalty / q_session_value_bands / q_order_concentration | — | single consumer chain | **single plan** |
-      || q_psi_timeline | (week, bin) census | dense grid + base-week slice + per-week folds (streaming twin shares the census) | **persisted in finish** (budget guard 0) |
-      || q_brand_price_index | (brand, type) cents census | type averages + index join | **persisted** (budget guard 0) |
-      || q_dedup_savings | memoized CC cluster artifact | loser flags → per-source savings | **memoized** (one doc scan) |
-      || q_mann_whitney / q_mcnemar / q_user_streaks / q_sql_lateral / q_line_position_effect† | — | single consumer chain (†persisted projection feeds totals + rejoin) | **single plan / persisted** (budget guards 1/1/1/2/0) |
-      || q_levene | (segment, cents) value-domain census | group totals + cumulative-median pick + deviation rejoin | **persisted** (budget guard 0) |
-      || q_hits | directed c→s edge set, src-partitioned | 2×2 half-round contribution joins + per-half-round max agg | **persisted + count()** (budget guard 0; ranks localCheckpoint per half-round) |
-      || q_adamic_adar | — | single basket-fan-out chain (pair census consumes everything) | **single plan** (budget guard 2) |
-      || q_source_kl | (source, token) census | corpus top-200 + dense grid join + per-source totals | **persisted** (budget guard 0) |
-      || q_payload_dedup | md5-hashed payload frame | keeper census + loser rejoin | **persisted** (budget guard 0) |
-      || q_theil_between | ≤\|nations\| (n, Σcents) census | totals agg + term projection | **persisted** (budget guard 0) |
-      || q_bigram_cond_entropy | token arrays + head-restricted bigram census | uni head cut + bi census / den + terms | **persisted both** (budget guard 0) |
-      || q_mcnemar (census+finish split) | 2×2 agreement census | streaming twin shares mcnemarCensus; batch is a single chain | **single plan** (budget guard 1) |
-      || q_decayed_popularity (census+finish split) | (type, day) census | max-date anchor + weighted agg; streaming twin shares decayCensus | **persisted** (budget guard 0) |
-      || q_kruskal_wallis | (cents, segment) census + midrank frame | midranks / per-group rank sums / tie term | **persisted both** (budget guard 0) |
-      || q_reciprocity | distinct directed-edge frame | edge count + reverse semi-probe | **persisted** (budget guard 0) |
-      || q_basket_lift | distinct (order, brand) census | pair fan-out + marginals + N scalar | **persisted** (budget guard 0) |
-      || q_closeness | src-partitioned edge cache | 4 frontier joins + seed probe | **persisted** (kcore discipline; budget guard 0) |
-      || q_cronbach_alpha | (user, item) cents census | item moments + user totals + N scalar | **persisted** (budget guard 0) |
-      || q_durbin_watson | daily cents census | OLS fit agg + residual pass | **persisted** (budget guard 0) |
-      || q_simpson_reversal | per-brand moment census | pooled column-sum + per-brand slopes | **persisted** (pooled = exact sum of census; budget guard 0) |
-      || q_doc_anomaly_chi2 | (doc, letter) census | ≤26-row profile + per-doc terms | **persisted** (budget guard 0) |
-      || q_temperature_mix | per-source char census | pinned normalizer + readout | **persisted** (budget guard 0) |
-      || q_negative_sampling | top-200 head census | pinned normalizer + prob projection | **persisted** (budget guard 0) |
-      || q_kendall_w | (region, brand, cents) census + rank sums | dense grid ×2 dims + rejoin; rs feeds N + S | **persisted both** (budget guard 0) |
-      || q_max_drawdown | windowed drawdown frame | global max + trough pick | **persisted** (budget guard 0) |
-      || q_sax_weekly | daily cents census | moment agg + symbolization | **persisted** (budget guard 0) |
-      || q_jarque_bera / q_poisson_dispersion / q_contribution_clipping (census+finish) | power-sum / arrival / per-user censuses | single batch chain; streaming twins share the census fn | **single plan** (budget guards 1/1/0) |
-      |""".stripMargin
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val sb = new StringBuilder
+    sb.append("# PLANS — physical-plan evidence (generated by `graft.PlanDump`)\n\n")
+    sb.append(s"Source data: `$sfDir`. Regenerate after plan-affecting changes:\n")
+    sb.append("`sbt \"runMain graft.PlanDump\"`.\n\n")
+    // the census-reuse table and the tail artifact-delta sections are
+    // HAND-MAINTAINED per round (new query rows land there at commit
+    // time); regeneration carries the live PLANS.md versions, so it
+    // needs a live PLANS.md
+    // UTF-8 EXPLICITLY: the platform default charset is ASCII in the
+    // build container (file.encoding=ANSI_X3.4-1968), and a
+    // default-charset read decodes every multi-byte character in the
+    // hand-maintained sections to U+FFFD before writeString re-encodes
+    // the damage — 114 silently mangled lines in round 10 until the
+    // close audit caught it. Read and write must both pin UTF-8
+    // (writeString already does).
+    require(Files.exists(Paths.get("PLANS.md")),
+      "PLANS.md not found: PlanDump regenerates the live file from the repo root")
+    val live = new String(Files.readAllBytes(Paths.get("PLANS.md")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    // fail LOUDLY when a splice marker is missing — a silent fallback
+    // would drop the hand-maintained sections
+    def markerGone(which: String): Nothing =
+      sys.error(s"PLANS.md splice marker '$which' not found — " +
+        "refusing to regenerate over a reworded live file; restore the marker")
+    val censusStart = live.indexOf("## Census-reuse audit")
+    if (censusStart < 0) markerGone("## Census-reuse audit")
+    val censusEnd = live.indexOf("\n## q_", censusStart)
+    if (censusEnd < censusStart) markerGone("\\n## q_ (census table end)")
+    sb.append(live.substring(censusStart, censusEnd))
+    val tailStart = live.indexOf("\n## Shared basket pair-core artifact")
+    if (tailStart < 0) markerGone("\\n## Shared basket pair-core artifact")
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -271,66 +181,13 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — physical-plan evidence (generated by `graft.PlanDump`)\n\n")
-    sb.append(s"Source data: `$sfDir`. Regenerate after plan-affecting changes:\n")
-    sb.append("`sbt \"runMain graft.PlanDump\"`.\n\n")
-    // the census-reuse table and the tail artifact-delta sections are
-    // HAND-MAINTAINED per round (new query rows land there at commit
-    // time); regeneration must carry the live PLANS.md versions, not
-    // the round-5 snapshot baked in below — otherwise one PlanDump run
-    // silently reverts three rounds of budget rows
-    // UTF-8 EXPLICITLY: the platform default charset is ASCII in the
-    // build container (file.encoding=ANSI_X3.4-1968), and a
-    // default-charset read decodes every multi-byte character in the
-    // hand-maintained sections to U+FFFD before writeString re-encodes
-    // the damage — 114 silently mangled lines in round 10 until the
-    // close audit caught it. Read and write must both pin UTF-8
-    // (writeString already does).
-    val live = try {
-      Some(new String(java.nio.file.Files.readAllBytes(
-        Paths.get("PLANS.md")), java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => None }
-    // fail LOUDLY when a live PLANS.md exists but a splice marker is
-    // missing — a silent fallback would revert the census table to the
-    // baked-in round-5 snapshot / drop the hand-maintained tail, the
-    // exact silent-revert failure this splice was written to prevent
-    def markerGone(which: String): Nothing =
-      sys.error(s"PLANS.md exists but splice marker '$which' not found — " +
-        "refusing to regenerate over a reworded live file; restore the " +
-        "marker (or delete PLANS.md to rebuild from the baked-in snapshot)")
-    val census = live.map { cur =>
-      val st = cur.indexOf("## Census-reuse audit")
-      if (st < 0) markerGone("## Census-reuse audit")
-      val en = cur.indexOf("\n## q_", st)
-      if (en < st) markerGone("\\n## q_ (census table end)")
-      cur.substring(st, en)
-    }.getOrElse(censusAudit)
-    sb.append(census)
-    val tail = live.map { cur =>
-      val st = cur.indexOf("\n## Shared basket pair-core artifact")
-      if (st < 0) markerGone("\\n## Shared basket pair-core artifact")
-      cur.substring(st + 1)
-    }
     picks.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-      // cap per-plan output: iterative queries whose rounds persist
-      // their frames print every cache's FULL build plan (nested per
-      // round — pagerank's formatted dump alone hit ~16k lines). The
-      // evidence lives in the top operators and scans, which formatted
-      // mode prints first.
-      val full = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).trim
-      val lines = full.linesIterator.toSeq
-      val MaxLines = 300
-      if (lines.size <= MaxLines) sb.append(full)
-      else sb.append(lines.take(MaxLines).mkString("\n"))
-        .append(s"\n... [truncated: ${lines.size - MaxLines} more lines " +
-          "of nested cache build plans]")
-      sb.append("\n```\n")
+        .append(Harness.planText(df, 300))
+        .append("\n```\n")
     }
-    tail.foreach(t => sb.append("\n").append(t))
+    sb.append("\n").append(live.substring(tailStart + 1))
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${picks.size} plans)")
     spark.stop()

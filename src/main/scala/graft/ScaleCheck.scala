@@ -325,36 +325,28 @@ object ScaleCheck {
     val mults = if (args.length > 3)
       args(3).split(',').map(_.trim.toInt).toSeq
     else Mults
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Bench-identical session block (BenchConf): slopes must be
     // measured on the same plans the battery times. Note the ×M
     // dirs GROW past 64 MB with depth, so a side that broadcasts at
     // ×1 falls back to shuffle at ×16/×32 — which is exactly the
     // scale behavior the deep rows exist to demonstrate.
-    val spark = BenchConf(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(base)
 
     mults.foreach(m => buildScaled(spark, base, s"$work/m$m", m))
 
-    // warmup (session + codegen)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
     mults.foreach { m =>
       val dir = s"$work/m$m"
-      val times = picks.map { name =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[scale] $name@m$m: $e") }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-      val qs = times.map { case (k, v) => "\"" + k + "\":" + v }
+      // each ×M dir gets the partition count Bench would give it, and
+      // its tables' ingest re-layouts are paid before the first pick
+      spark.conf.set("spark.sql.shuffle.partitions",
+        BenchConf.shufflePartitions(dir).toString)
+      Harness.warm(spark, dir)
+      val times = picks.map(name => name -> Harness.run(spark, dir, name))
+      val qs = times.collect { case (k, Right(r)) => "\"" + k + "\":" + r.total }
         .mkString("{", ",", "}")
-      println(s"""{"m":$m,"queries":$qs}""")
+      val failed = times.collect { case (k, Left(_)) => "\"" + k + "\"" }
+        .mkString("[", ",", "]")
+      println(s"""{"m":$m,"queries":$qs,"failed":$failed}""")
     }
 
     // q_also_bought SF-invariant, asserted on COUNTS rather than

@@ -109,12 +109,10 @@ object MapReduceJob {
       // RangePartitioner places ordering-equal keys in one partition
       // (partition choice is a function of the ordering alone), so the
       // per-partition sorted runs contain every member of each group.
+      // An empty input samples no range bounds, so it gets 1 partition.
       val parts = math.min(numPartitions, math.max(1, mapped.partitions.length))
-      val partitioner =
-        if (mapped.isEmpty()) new HashPartitioner(1)
-        else new RangePartitioner(parts, mapped)
       mapped
-        .repartitionAndSortWithinPartitions(partitioner)
+        .repartitionAndSortWithinPartitions(new RangePartitioner(parts, mapped))
         .mapPartitions { it =>
           // equal-key run detection under derived equality
           // !(a<b) && !(b<a) — `JobContext.cpp:102-104`

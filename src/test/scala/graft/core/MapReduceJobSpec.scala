@@ -59,6 +59,15 @@ class MapReduceJobSpec extends SparkSpec {
     assert(out.toMap === (0 until 10).map(k => k -> 100).toMap)
   }
 
+  test("ordering-only path starts 2 Spark jobs: the range sample and the run") {
+    import MapReduceJobSpec._
+    val input = sc.parallelize((0 until 1000).map(i => (i, null: Null)), 8)
+    val handle = MapReduceJob.startOrderingOnly(spark, input, new OKeyClient, 4)
+    handle.waitForJob()
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(handle.groupId).length === 2)
+  }
+
   test("ordering-only path on empty input") {
     import MapReduceJobSpec._
     val input = sc.parallelize(Seq.empty[(Int, Null)], 2)
