@@ -56,9 +56,14 @@ object Harness {
     measure(spark, q)(fn(spark, dir))
   }
 
-  /** One timed run of `build`: a failure, not a time, when it throws. */
+  /** One timed run of `build`: a failure, not a time, when it throws. Its
+    * jobs are described `<label> build`, or `<label> execute` for the write,
+    * whose planning runs inside it.
+    */
   def measure(spark: SparkSession, label: String)(
       build: => DataFrame): Either[Throwable, Run] = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
     spark.catalog.clearCache()
     System.gc()
     val writes = new ConcurrentLinkedQueue[QueryExecution]()
@@ -72,8 +77,10 @@ object Harness {
     spark.listenerManager.register(planned)
     val t0 = System.nanoTime()
     try {
+      sc.setJobDescription(s"$label build")
       val df = build
       val t1 = System.nanoTime()
+      sc.setJobDescription(s"$label execute")
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
@@ -86,7 +93,10 @@ object Harness {
       case e: Throwable =>
         System.err.println(s"[harness] $label failed: $e")
         Left(e)
-    } finally spark.listenerManager.unregister(planned)
+    } finally {
+      sc.setJobDescription(outer)
+      spark.listenerManager.unregister(planned)
+    }
   }
 
   final case class JobRow(id: Int, seconds: Double, stages: Int, desc: String)

@@ -1,7 +1,8 @@
 package graft.ops
 
 import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lifecycle for the engine's memoized /tmp parquet artifacts (graph
   * edges, basket pair core, bucketed/partitioned layouts, dedup
@@ -90,6 +91,22 @@ object Artifacts {
       release.asInstanceOf[((SparkSession, String), Any) => Unit]))
     m
   }
+
+  /** Free the storage a memoized frame holds: the blocks of the RDD a
+    * `localCheckpoint` pinned under the frame's `LogicalRDD`, which
+    * `Dataset.unpersist` does not touch, and any SQL-cache entry.
+    */
+  def release(df: DataFrame): Unit = {
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(false)
+      case _ => ()
+    }
+    df.unpersist(false): Unit
+  }
+
+  /** A [[memo]] of frames whose hook is [[release]]. */
+  def frameMemo(): ConcurrentHashMap[(SparkSession, String), DataFrame] =
+    memo[DataFrame]((_, df) => release(df))
 
   /** Drop every memoized artifact for `dir` (all sessions, all
     * families), calling each memo's release hook on the evicted values

@@ -58,9 +58,7 @@ object Censuses {
     }
   }
 
-  private val priorityCentsMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val priorityCentsMemo = Artifacts.frameMemo()
 
   /** The (o_orderpriority, total-price cents) count census — exact,
     * bounded by |priorities| × |distinct cents|. Consumers derive their
@@ -91,9 +89,7 @@ object Censuses {
         sum(when(col("p").isin("1-URGENT", "2-HIGH"), lit(0L))
           .otherwise(col("c"))).cast("long").as("c2"))
 
-  private val orderCentsMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val orderCentsMemo = Artifacts.frameMemo()
 
   /** Ungrouped (v, c) order-value census — [[priorityCents]] summed
     * over the priority alphabet, pinned separately because its
@@ -107,9 +103,7 @@ object Censuses {
         .agg(sum(col("c")).cast("long").as("c"))
         .localCheckpoint(true))
 
-  private val scoreCensusMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val scoreCensusMemo = Artifacts.frameMemo()
 
   /** Pinned per-score census over events — the ranking-quality
     * battery's sufficient statistic ([[ModelEval.scoreCensus]]): the
@@ -134,9 +128,7 @@ object Censuses {
       ModelEval.scoreCensus(Tables.load(s, dir, "events"))
         .localCheckpoint(true))
 
-  private val ksCountsMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val ksCountsMemo = Artifacts.frameMemo()
 
   /** Pinned (source, n_chars) document-length census — the drift
     * battery's sufficient statistic ([[Curation.ksCounts]]): the KS /
@@ -149,9 +141,7 @@ object Censuses {
         .select(col("source"), col("v"), col("c").cast("long").as("c"))
         .localCheckpoint(true))
 
-  private val quantityBucketMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val quantityBucketMemo = Artifacts.frameMemo()
 
   /** The bounded (quantity, thousand-dollar price bucket) grid census
     * over lineitem (≤ 50 × ~110 cells at any corpus size), pinned —
@@ -169,9 +159,7 @@ object Censuses {
         .agg(count(lit(1)).cast("long").as("c"))
         .localCheckpoint(true))
 
-  private val shingles5Memo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val shingles5Memo = Artifacts.frameMemo()
 
   /** The word-5-gram shingle table over documents, pinned: (doc_id,
     * source, sh) — one row per shingle INSTANCE (multiset, not
@@ -195,9 +183,7 @@ object Censuses {
                i -> concat_ws(' ', slice(toks, i, 5)))""")).as("sh"))
         .localCheckpoint(true))
 
-  private val shingleCensus5Memo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val shingleCensus5Memo = Artifacts.frameMemo()
 
   /** Global (sh, cnt) multiplicity census over [[shingles5]], pinned —
     * the duplicate-shingle lookup side of the boilerplate lens.
@@ -209,9 +195,7 @@ object Censuses {
         .agg(count(lit(1)).as("cnt"))
         .localCheckpoint(true))
 
-  private val charTrigramsMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val charTrigramsMemo = Artifacts.frameMemo()
 
   /** Per-language character-trigram census (lang, tri, cnt), pinned —
     * the language-fingerprint sufficient statistic (vocabulary-sized
@@ -231,9 +215,7 @@ object Censuses {
         .agg(count(lit(1)).as("cnt"))
         .localCheckpoint(true))
 
-  private val wordTrigramsMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val wordTrigramsMemo = Artifacts.frameMemo()
 
   /** Per-source word-trigram census (source, g, c), pinned — the
     * vocabulary-growth/hapax sufficient statistic.
@@ -251,9 +233,7 @@ object Censuses {
         .agg(count(lit(1)).as("c"))
         .localCheckpoint(true))
 
-  private val rankedAnsariMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val rankedAnsariMemo = Artifacts.frameMemo()
 
   /** [[ansariCountsOf]] with its exclusive value-order prefix sums
     * attached and pinned: (v, c1, c2, off1, off2) where off_i =
@@ -290,9 +270,7 @@ object Censuses {
         .localCheckpoint(true)
     })
 
-  private val rankedOrderCentsMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val rankedOrderCentsMemo = Artifacts.frameMemo()
 
   /** [[orderCents]] with its exclusive count prefix and total pinned:
     * (v, c, off, n) where off = Σ c over strictly smaller values and n
@@ -319,9 +297,7 @@ object Censuses {
         .localCheckpoint(true)
     })
 
-  private val rankedPriorityCentsMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val rankedPriorityCentsMemo = Artifacts.frameMemo()
 
   /** [[priorityCents]] with per-priority exclusive prefixes pinned:
     * (p, v, c, off, vs, n) — off = Σ c and vs = Σ v·c (DECIMAL(38,0))
@@ -351,9 +327,7 @@ object Censuses {
         .localCheckpoint(true)
     })
 
-  private val rankedFlagPriceMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val rankedFlagPriceMemo = Artifacts.frameMemo()
 
   /** [[flagPrice]] with per-flag exclusive count prefix and total
     * pinned: (f, v, c, off, n). The MAD family's median picks become
@@ -376,9 +350,7 @@ object Censuses {
         .localCheckpoint(true)
     })
 
-  private val priorityPriceBucketMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val priorityPriceBucketMemo = Artifacts.frameMemo()
 
   /** The second ordinal grid (r13 §21 seed): (priority digit,
     * thousand-dollar total-price bucket) over orders — ≤ 5 × ~600
@@ -400,9 +372,7 @@ object Censuses {
         .agg(count(lit(1)).cast("long").as("c"))
         .localCheckpoint(true))
 
-  private val rankedConoverDevMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val rankedConoverDevMemo = Artifacts.frameMemo()
 
   /** The Conover squared-ranks DEVIATION census with prefixes and
     * group totals pinned (the §21 r13 seed): per [[rankedAnsari]]
@@ -450,9 +420,25 @@ object Censuses {
         .localCheckpoint(true)
     })
 
-  private val flagPriceMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val brandBasketsMemo = Artifacts.frameMemo()
+
+  /** The brand-basket census, pinned: [[Pairs.census]] over each order's
+    * set of part brands (lineitem ⋈ part) with
+    * [[Pairs.withMarginals]]' lookups attached — (a, b, n, n_a, n_b,
+    * n_all), at most C(25,2) + 25 + 1 rows at any corpus size. The
+    * association readouts (q_brand_affinity, q_basket_lift,
+    * q_association_metrics) finish row by row on its pair cells.
+    */
+  def brandBaskets(s: SparkSession, dir: String): DataFrame =
+    brandBasketsMemo.computeIfAbsent((s, dir), _ =>
+      Pairs.withMarginals(Pairs.census(
+        Tables.load(s, dir, "lineitem").select("l_orderkey", "l_partkey")
+          .join(Tables.load(s, dir, "part").select("p_partkey", "p_brand"),
+            col("l_partkey") === col("p_partkey")),
+        "l_orderkey", "p_brand"))
+        .localCheckpoint(true))
+
+  private val flagPriceMemo = Artifacts.frameMemo()
 
   /** The (l_returnflag, l_extendedprice) count census over lineitem —
     * extended prices are exact cent-valued doubles, so grouping on the

@@ -68,12 +68,10 @@ object Curation {
     * independent of SF (whale accounts are dropped, not exploded).
     */
   private def alsoBoughtBasketsRaw(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("item"))
-      .distinct()
-      .groupBy("cust")
-      .agg(sort_array(collect_set(col("item"))).as("items"))
+    Pairs.sets(t(s, dir, "orders")
+        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").as("cust"), col("l_suppkey").as("item"))
+        .distinct(), "cust", "item")
       .filter(size(col("items")) <= 128)
 
   /** The materialized "basket project": the capped basket frame AND its
@@ -98,16 +96,13 @@ object Curation {
       val pp = s"$root/paircore"
       alsoBoughtBasketsRaw(s, dir)
         .write.mode("overwrite").parquet(bp)
-      s.read.schema("cust BIGINT, items ARRAY<BIGINT>").parquet(bp)
-        .filter(size(col("items")) >= 2)
-        .select(
-          round(lit(1.0e12) / log(size(col("items")).cast("double")), 0)
-            .cast("long").as("w12"),
-          explode(expr(
-            """flatten(transform(items, (x, i) ->
-                 transform(slice(items, i + 2, size(items)),
-                   y -> x * 4294967296L + y)))""")).as("pk"))
-        .groupBy("pk")
+      Pairs.fanOut(s.read.schema("cust BIGINT, items ARRAY<BIGINT>").parquet(bp)
+          .filter(size(col("items")) >= 2)
+          .select(
+            round(lit(1.0e12) / log(size(col("items")).cast("double")), 0)
+              .cast("long").as("w12"),
+            col("items")))
+        .groupBy((col("a") * 4294967296L + col("b")).as("pk"))
         .agg(count(lit(1)).cast("long").as("common"),
           sum(col("w12").cast(org.apache.spark.sql.types
             .DecimalType(38, 0))).as("aa12"))

@@ -127,14 +127,9 @@ object Dedup {
     * the worst-case fan-out at cap².
     */
   private def sharedShinglePairs(sh: DataFrame): DataFrame =
-    sh.groupBy("shingle")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ds) - 2), i ->
-             transform(sequence(i + 1, size(ds) - 1), j ->
-               struct(ds[i] AS a, ds[j] AS b))))""")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+    Pairs.fanOut(sh.groupBy("shingle")
+        .agg(sort_array(collect_list(col("doc_id"))).as("items"))
+        .filter(size(col("items")) >= 2).select("items"))
       .groupBy("a", "b").agg(count(lit(1)).as("inter_sz"))
 
   /** Shared-shingle pair core (a < b, inter_sz, sz_a, sz_b) over capped
@@ -148,7 +143,7 @@ object Dedup {
     * can't force a silent recompute.
     */
   private val pairMemo =
-    Artifacts.memo[DataFrame] { (_, df) => df.unpersist(false); () }
+    Artifacts.frameMemo()
 
   private def shinglePairCore(s: SparkSession, dir: String): DataFrame =
     pairMemo.computeIfAbsent((s, dir), _ => {
@@ -361,7 +356,7 @@ object Dedup {
   }
 
   private val labelMemo =
-    Artifacts.memo[DataFrame] { (_, df) => df.unpersist(false); () }
+    Artifacts.frameMemo()
 
   private def dupClusters(s: SparkSession, dir: String): DataFrame =
     labelMemo.computeIfAbsent((s, dir), _ =>
@@ -840,16 +835,9 @@ object Dedup {
           .select(col("source"), col("sh"))
           .distinct()
         val per = sh.groupBy("source").agg(count(lit(1)).as("n"))
-        sh.groupBy("sh")
-          .agg(sort_array(collect_set(col("source"))).as("srcs"))
-          .filter(size(col("srcs")) >= 2)
-          .select(explode(expr(
-            """flatten(transform(srcs, (a, i) ->
-                 transform(slice(srcs, i + 2, size(srcs)),
-                   b -> named_struct('src_a', a, 'src_b', b))))"""))
-            .as("p"))
-          .select(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"))
-          .groupBy("src_a", "src_b")
+        Pairs.fanOut(Pairs.sets(sh, "sh", "source")
+            .filter(size(col("items")) >= 2).select("items"))
+          .groupBy(col("a").as("src_a"), col("b").as("src_b"))
           .agg(count(lit(1)).as("n_shared"))
           .join(broadcast(per.select(col("source").as("src_a"),
             col("n").as("n_a"))), Seq("src_a"))

@@ -1098,13 +1098,9 @@ object EventTime {
       (s, dir) => {
         val ut = t(s, dir, "events")
           .select(col("user_id"), col("event_type")).distinct()
-        val pairs = ut.groupBy("user_id")
-          .agg(sort_array(collect_set(col("event_type"))).as("types"))
-          .select(explode(expr(
-            """flatten(transform(types, (x, i) ->
-                 transform(slice(types, i + 2, size(types)),
-                   y -> struct(x AS ta, y AS tb))))""")).as("p"))
-          .groupBy(col("p.ta").as("ta"), col("p.tb").as("tb"))
+        val pairs = Pairs.fanOut(
+            Pairs.sets(ut, "user_id", "event_type").select("items"))
+          .groupBy(col("a").as("ta"), col("b").as("tb"))
           .agg(count(lit(1)).as("n_both"))
         val sz = ut.groupBy("event_type").agg(count(lit(1)).as("n"))
         pairs
@@ -7216,9 +7212,7 @@ object EventTime {
     * contract) so the point estimate and the rank CI read one
     * materialization instead of each paying the pair join.
     */
-  private val senPairsMemo = graft.ops.Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val senPairsMemo = graft.ops.Artifacts.frameMemo()
 
   private def senPairs(s: SparkSession, dir: String): DataFrame =
     senPairsMemo.computeIfAbsent((s, dir), _ => Censuses.pinned(s) {

@@ -102,13 +102,9 @@ object Graph {
       .filter(col("l_shipdate") >= lit("1998-01-01").cast("timestamp")
         && col("l_shipdate") < lit("1999-01-01").cast("timestamp"))
       .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .groupBy("l_orderkey")
-      .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-      .filter(size(col("items")) <= 128)
-    b.select(explode(expr(
-        s"""flatten(transform(items, (x, i) ->
-             transform(slice(items, i + 2, size(items)),
-               y -> x * ${pk}L + y)))""")).as("e"))
+    Pairs.fanOut(Pairs.sets(b, "l_orderkey", "l_partkey")
+        .filter(size(col("items")) <= 128).select("items"))
+      .select((col("a") * pk + col("b")).as("e"))
       .distinct()
       .select(expr(s"e div ${pk}L").as("u"), (col("e") % pk).as("v"))
   }
@@ -133,8 +129,7 @@ object Graph {
     closed: DataFrame, nEdges: Long, nWedges: Long)
 
   private val wedgeMemo = Artifacts.memo[WedgeCore] { case (_, w) =>
-    w.pairs.unpersist(false); w.deg.unpersist(false)
-    w.closed.unpersist(false); ()
+    Seq(w.pairs, w.deg, w.closed).foreach(Artifacts.release)
   }
 
   private[graft] def wedgeCore(s: SparkSession, dir: String): WedgeCore =

@@ -28,6 +28,15 @@ object Relational {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
+  /** The brand pairs co-bought in at least 50 orders, off the pinned
+    * brand-basket census: (b1, b2, n_ab, n_a, n_bb, n_orders).
+    */
+  private def brandRules(s: SparkSession, dir: String): DataFrame =
+    Censuses.brandBaskets(s, dir)
+      .filter(col("b").isNotNull && col("n") >= 50)
+      .select(col("a").as("b1"), col("b").as("b2"), col("n").as("n_ab"),
+        col("n_a"), col("n_b").as("n_bb"), col("n_all").as("n_orders"))
+
   val queries: Seq[Q] = Seq(
 
     // ── scan / projection ────────────────────────────────────────────────
@@ -7204,39 +7213,17 @@ object Relational {
     // Market-basket lift at the BRAND level: the alphabet (≤25 brands)
     // bounds per-order fan-out at C(25,2) with no cap needed — the
     // q_also_bought shape where the key space itself is the guard. The
-    // distinct (order, brand) projection is persisted (pair fan-out,
-    // brand marginals and the order total all read one join); pairs fan
-    // out ROW-LOCALLY from the sorted per-order brand set.
+    // pair counts, brand marginals and order total are cells of the
+    // pinned brand-basket census (Censuses.brandBaskets); the query is a
+    // row-local finish over its pair cells.
     Q("q_brand_affinity",
-      (s, dir) => {
-        val ob = t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-          .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand")),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("p_brand")).distinct()
-          .persist()
-        val pairs = ob.groupBy("l_orderkey")
-          .agg(sort_array(collect_set(col("p_brand"))).as("bs"))
-          .select(explode(expr(
-            """flatten(transform(bs, (x, i) ->
-                 transform(slice(bs, i + 2, size(bs)),
-                   y -> struct(x AS ba, y AS bb))))""")).as("p"))
-          .groupBy(col("p.ba").as("ba"), col("p.bb").as("bb"))
-          .agg(count(lit(1)).as("n_both"))
-        val sz = ob.groupBy("p_brand").agg(count(lit(1)).as("n"))
-        val tot = ob.agg(countDistinct(col("l_orderkey")).as("n_orders"))
-        pairs
-          .join(sz.select(col("p_brand").as("ba"), col("n").as("n_a")),
-            Seq("ba"))
-          .join(sz.select(col("p_brand").as("bb"), col("n").as("n_b")),
-            Seq("bb"))
-          .crossJoin(broadcast(tot))
-          .select(col("ba"), col("bb"), col("n_both"),
-            (col("n_both").cast("double") * col("n_orders").cast("double")
-              / (col("n_a").cast("double") * col("n_b").cast("double")))
-              .as("lift"))
-          .orderBy("ba", "bb")
-      },
+      (s, dir) => Censuses.brandBaskets(s, dir)
+        .filter(col("b").isNotNull)
+        .select(col("a").as("ba"), col("b").as("bb"), col("n").as("n_both"),
+          (col("n").cast("double") * col("n_all").cast("double")
+            / (col("n_a").cast("double") * col("n_b").cast("double")))
+            .as("lift"))
+        .orderBy("ba", "bb"),
       Some("""WITH ob AS (
                 SELECT DISTINCT l_orderkey, p_brand
                 FROM lineitem JOIN part ON l_partkey = p_partkey),
@@ -8307,50 +8294,24 @@ object Relational {
     // ── market-basket association rules over brand pairs ────────────────
     // support / confidence / lift for brands co-bought in one order —
     // the classic rule-mining readout q_also_bought's raw pair counts
-    // stop short of. The corpus collapses ONCE to the distinct
-    // (order, brand) census (persisted: pair fan-out, brand marginals
-    // and the order total all read it); the pair self-join is
-    // co-partitioned on o_orderkey with b1 < b2 (≤C(25,2) pairs per
-    // order — catalog-bounded, never orders²), marginals broadcast
-    // (≤25 rows), and every ratio is one IEEE division of exact longs.
+    // stop short of. Pair counts (≤C(25,2) per order — catalog-bounded,
+    // never orders²), brand marginals and the order total are cells of
+    // the pinned brand-basket census (Censuses.brandBaskets); every
+    // ratio is one IEEE division of exact longs.
     Q("q_basket_lift",
-      (s, dir) => {
-        val cen = t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-          .join(broadcast(t(s, dir, "part")
-            .select(col("p_partkey"), col("p_brand"))),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
-          .distinct()
-          .persist()
-        val nOrders = cen.agg(countDistinct(col("ok")).as("n_orders"))
-        val marg = cen.groupBy(col("b"))
-          .agg(count(lit(1)).cast("long").as("n_b"))
-        val pairs = cen.as("x")
-          .join(cen.select(col("ok").as("ok2"), col("b").as("b2")),
-            col("ok") === col("ok2") && col("b") < col("b2"))
-          .groupBy(col("b").as("b1"), col("b2"))
-          .agg(count(lit(1)).cast("long").as("n_ab"))
-          .filter(col("n_ab") >= 50)
-        pairs
-          .join(broadcast(marg.select(col("b").as("b1"),
-            col("n_b").as("n_a"))), "b1")
-          .join(broadcast(marg.select(col("b").as("b2"),
-            col("n_b").as("n_bb"))), "b2")
-          .crossJoin(broadcast(nOrders))
-          .select(col("b1"), col("b2"), col("n_ab"),
-            round(col("n_ab").cast("double")
-              / col("n_orders").cast("double"), 12).as("support"),
-            round(col("n_ab").cast("double")
-              / col("n_a").cast("double"), 12).as("conf_ab"),
-            round(col("n_ab").cast("double")
-              / col("n_bb").cast("double"), 12).as("conf_ba"),
-            round(col("n_orders").cast("double")
-              * col("n_ab").cast("double")
-              / (col("n_a").cast("double") * col("n_bb").cast("double")),
-              12).as("lift"))
-          .orderBy("b1", "b2")
-      },
+      (s, dir) => brandRules(s, dir)
+        .select(col("b1"), col("b2"), col("n_ab"),
+          round(col("n_ab").cast("double")
+            / col("n_orders").cast("double"), 12).as("support"),
+          round(col("n_ab").cast("double")
+            / col("n_a").cast("double"), 12).as("conf_ab"),
+          round(col("n_ab").cast("double")
+            / col("n_bb").cast("double"), 12).as("conf_ba"),
+          round(col("n_orders").cast("double")
+            * col("n_ab").cast("double")
+            / (col("n_a").cast("double") * col("n_bb").cast("double")),
+            12).as("lift"))
+        .orderBy("b1", "b2"),
       Some("""WITH cen AS (
                 SELECT DISTINCT l_orderkey AS ok, p_brand AS b
                 FROM lineitem JOIN part ON l_partkey = p_partkey),
@@ -8389,54 +8350,30 @@ object Relational {
     // conf=1 rules get NULL on both engines), and basket Jaccard.
     // Counts exact; each metric a short pinned double chain.
     Q("q_association_metrics",
-      (s, dir) => {
-        val cen = t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-          .join(broadcast(t(s, dir, "part")
-            .select(col("p_partkey"), col("p_brand"))),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
-          .distinct()
-          .persist()
-        val nOrders = cen.agg(countDistinct(col("ok")).as("n_orders"))
-        val marg = cen.groupBy(col("b"))
-          .agg(count(lit(1)).cast("long").as("n_b"))
-        val pairs = cen.as("x")
-          .join(cen.select(col("ok").as("ok2"), col("b").as("b2")),
-            col("ok") === col("ok2") && col("b") < col("b2"))
-          .groupBy(col("b").as("b1"), col("b2"))
-          .agg(count(lit(1)).cast("long").as("n_ab"))
-          .filter(col("n_ab") >= 50)
-        pairs
-          .join(broadcast(marg.select(col("b").as("b1"),
-            col("n_b").as("n_a"))), "b1")
-          .join(broadcast(marg.select(col("b").as("b2"),
-            col("n_b").as("n_bb"))), "b2")
-          .crossJoin(broadcast(nOrders))
-          .select(col("b1"), col("b2"), col("n_ab"),
-            round(col("n_ab").cast("double")
-                / col("n_orders").cast("double")
-              - col("n_a").cast("double")
-                / col("n_orders").cast("double")
-                * (col("n_bb").cast("double")
-                  / col("n_orders").cast("double")), 12).as("leverage"),
-            when(col("n_a") === col("n_ab"), lit(null).cast("double"))
-              .otherwise(round(
-                (lit(1.0) - col("n_bb").cast("double")
-                  / col("n_orders").cast("double"))
-                / (lit(1.0) - col("n_ab").cast("double")
-                  / col("n_a").cast("double")), 12)).as("conviction_ab"),
-            when(col("n_bb") === col("n_ab"), lit(null).cast("double"))
-              .otherwise(round(
-                (lit(1.0) - col("n_a").cast("double")
-                  / col("n_orders").cast("double"))
-                / (lit(1.0) - col("n_ab").cast("double")
-                  / col("n_bb").cast("double")), 12)).as("conviction_ba"),
-            round(col("n_ab").cast("double")
-              / (col("n_a") + col("n_bb") - col("n_ab")).cast("double"),
-              12).as("jaccard"))
-          .orderBy("b1", "b2")
-      },
+      (s, dir) => brandRules(s, dir)
+        .select(col("b1"), col("b2"), col("n_ab"),
+          round(col("n_ab").cast("double")
+              / col("n_orders").cast("double")
+            - col("n_a").cast("double")
+              / col("n_orders").cast("double")
+              * (col("n_bb").cast("double")
+                / col("n_orders").cast("double")), 12).as("leverage"),
+          when(col("n_a") === col("n_ab"), lit(null).cast("double"))
+            .otherwise(round(
+              (lit(1.0) - col("n_bb").cast("double")
+                / col("n_orders").cast("double"))
+              / (lit(1.0) - col("n_ab").cast("double")
+                / col("n_a").cast("double")), 12)).as("conviction_ab"),
+          when(col("n_bb") === col("n_ab"), lit(null).cast("double"))
+            .otherwise(round(
+              (lit(1.0) - col("n_a").cast("double")
+                / col("n_orders").cast("double"))
+              / (lit(1.0) - col("n_ab").cast("double")
+                / col("n_bb").cast("double")), 12)).as("conviction_ba"),
+          round(col("n_ab").cast("double")
+            / (col("n_a") + col("n_bb") - col("n_ab")).cast("double"),
+            12).as("jaccard"))
+        .orderBy("b1", "b2"),
       Some("""WITH cen AS (
                 SELECT DISTINCT l_orderkey AS ok, p_brand AS b
                 FROM lineitem JOIN part ON l_partkey = p_partkey),

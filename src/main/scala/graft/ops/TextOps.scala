@@ -29,7 +29,7 @@ object TextOps {
     * read by both readouts.
     */
   private val bleuMemo = Artifacts.memo[(DataFrame, DataFrame)] {
-    case (_, (u, b)) => u.unpersist(false); b.unpersist(false); ()
+    case (_, (u, b)) => Artifacts.release(u); Artifacts.release(b)
   }
 
   private def bleuCensuses(s: SparkSession, dir: String): (DataFrame, DataFrame) =

@@ -1717,7 +1717,7 @@ object VectorOps {
     */
   private val ivfMemo =
     Artifacts.memo[(DataFrame, DataFrame)] { case (_, (a, b)) =>
-      a.unpersist(false); b.unpersist(false); ()
+      Artifacts.release(a); Artifacts.release(b)
     }
 
   private def ivfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
@@ -1759,8 +1759,7 @@ object VectorOps {
   private val PqK = 16
 
   private val pqMemo = Artifacts.memo[(DataFrame, Seq[DataFrame])] {
-    case (_, (d, books)) =>
-      d.unpersist(false); books.foreach(_.unpersist(false)); ()
+    case (_, (d, books)) => (d +: books).foreach(Artifacts.release)
   }
 
   private def pqIndex(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) =
@@ -1806,8 +1805,7 @@ object VectorOps {
     * with the proven per-subspace Lloyd chains.
     */
   private val opqMemo = Artifacts.memo[(DataFrame, Seq[DataFrame])] {
-    case (_, (d, books)) =>
-      d.unpersist(false); books.foreach(_.unpersist(false)); ()
+    case (_, (d, books)) => (d +: books).foreach(Artifacts.release)
   }
 
   private def opqIndex(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) =
@@ -1924,9 +1922,7 @@ object VectorOps {
     * cost, after which q_ivf_pq_search scans 4 bytes + 2 ids per
     * corpus vector.
     */
-  private val ivfPqMemo = Artifacts.memo[DataFrame] {
-    case (_, d) => d.unpersist(false); ()
-  }
+  private val ivfPqMemo = Artifacts.frameMemo()
 
   private def ivfPqIndex(s: SparkSession, dir: String): DataFrame =
     ivfPqMemo.computeIfAbsent((s, dir), _ =>

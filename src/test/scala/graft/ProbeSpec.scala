@@ -47,7 +47,8 @@ class ProbeSpec extends SparkSpec {
   test("trace prints two runs, each followed by its job and stage rows") {
     val ls = lines(Probe.trace(spark, _, q, sfDir))
     val Head = """== q_groupby_sum rep(\d) total=\d+\.\d{2}s jobs=(\d+) stages=(\d+) ==""".r
-    val Job = """  job\d+ +-?\d+\.\d{3}s stages=\d+ *.*"""
+    // every job names the span it ran in
+    val Job = """  job\d+ +-?\d+\.\d{3}s stages=\d+ +q_groupby_sum (build|execute)"""
     val Stage = """  stage\d+ +wall= *-?\d+\.\d{3}s tasks=\d+ +taskrun= *\d+\.\d{2}s gc= *\d+\.\d{2}s  .*"""
     var at = 0
     for (rep <- 1 to 2) {

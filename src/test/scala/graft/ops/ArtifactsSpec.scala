@@ -60,6 +60,19 @@ class ArtifactsSpec extends SparkSpec {
       "evicted frame still holds storage blocks after invalidate")
   }
 
+  test("invalidate frees a memoized localCheckpoint frame (no leak)") {
+    // Dataset.unpersist alone leaves a checkpoint's RDD persisted
+    val sc = spark.sparkContext
+    val base = sc.getPersistentRDDs.size
+    val df = spark.range(100).toDF("id").localCheckpoint(true)
+    assert(sc.getPersistentRDDs.size === base + 1, "fixture frame was not pinned")
+    val m = Artifacts.frameMemo()
+    m.put((spark, "/tmp/rel-d"), df)
+    Artifacts.invalidate("/tmp/rel-d")
+    assert(sc.getPersistentRDDs.size === base,
+      "evicted checkpoint still holds its RDD after invalidate")
+  }
+
   test("sessionTag: stable per session, distinct across sessions") {
     assert(Artifacts.sessionTag(spark) === Artifacts.sessionTag(spark))
     val s2 = spark.newSession()

@@ -372,6 +372,28 @@ class PlanGuardSpec extends SparkSpec {
     assert(plan.contains("graft_mg"), "Misra-Gries sketch agg missing")
   }
 
+  test("brand-basket readouts finish on the pinned census and never rebuild it") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.execution.LogicalRDD
+    val qs = Seq("q_brand_affinity", "q_basket_lift", "q_association_metrics")
+    qs.foreach(qe) // the first call in the session builds the census
+    for (q <- qs) {
+      val (plan, jobs) = graft.Harness.counting(spark) { c =>
+        c.reset()
+        val p = qe(q).optimizedPlan
+        c.settle()
+        (p, c.jobs)
+      }
+      assert(jobs === 0, s"$q started $jobs job(s) on a second call")
+      assert(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]),
+        s"$q reads more than the pinned census:\n$plan")
+      assert(plan.collect { case g: Generate => g }.isEmpty, s"$q fans out pairs")
+      assert(plan.flatMap(_.expressions).forall(!_.exists(_.isInstanceOf[CollectSet])),
+        s"$q collects baskets")
+    }
+  }
+
   test("wedge core: ship-year slice pushes to the scan, closure is hashed") {
     // round 11: the pairs→orientation→closure pipeline is the shared
     // wedgeCore artifact; the pushdown is asserted on its BUILD plan
@@ -736,7 +758,7 @@ class PlanGuardSpec extends SparkSpec {
       "q_decile_transition" -> 0, // persisted CASE-split halves, 3 consumers
       "q_type_share_drift" -> 0, // persisted (week, type) census: totals + shares
       "q_doc_prefix_dup" -> 0, // persisted prefix projection: class census + rejoin
-      "q_brand_affinity" -> 0, // persisted (order, brand): pairs + marginals + total
+      "q_brand_affinity" -> 0, // finish over the pinned brand-basket census
       "q_trigram_hapax" -> 1, "q_char_entropy" -> 1, "q_user_lifespan" -> 1,
       "q_discount_quantity_curve" -> 1, "q_margin_waterfall" -> 1,
       "q_runs_test" -> 1, // ONE day census; windows live on the calendar frame
@@ -805,7 +827,7 @@ class PlanGuardSpec extends SparkSpec {
       "q_jarque_bera" -> 1, // single customer chain to the power-sum census
       "q_durbin_watson" -> 0, // persisted daily census: OLS fit + residual pass
       "q_reciprocity" -> 0, // persisted distinct-edge frame: count + semi probe
-      "q_basket_lift" -> 0, // persisted (order, brand) census: pairs + marginals
+      "q_basket_lift" -> 0, // finish over the pinned brand-basket census
       "q_closeness" -> 0, // cached src-partitioned edges; BFS rounds checkpointed
       "q_cronbach_alpha" -> 0, // persisted (user, item) census: moments + totals
       "q_partial_corr" -> 1, // ONE lineitem agg to the 9 moment sums
