@@ -87,13 +87,13 @@ object PlanDump {
     "q_scd2_lookup" -> "PIT lookup: fact⋈fact equi join on orderkey, then equi join on custkey with the [valid_from, valid_to) residual — fan-out bounded by versions/customer, no range-join materialization",
     "q_inventory_running" -> "clamped scan: collect_list+fold runs inside the per-supplier HashAggregate — the non-associative clamp makes row-local per-key folding the only mergeable shape; keys stay hash-partitioned",
     "q_allocation" -> "Hamilton apportionment: two order-keyed window passes (share floor + remainder rank) over the co-partitioned li⋈ord join, then a supplier-keyed partial+final rollup",
-    "q_join_bucketed" -> "bucketed co-located join: both scans show Bucketed: true / SelectedBucketsCount 8 — the SMJ consumes bucket outputs directly, the ONLY hash Exchange is the census-sized post-join agg",
+    "q_join_bucketed" -> "bucketed co-located join: both scans show Bucketed: true / SelectedBucketsCount n out of n, one bucket per session shuffle partition (8 here) — the SMJ consumes bucket outputs directly, the ONLY hash Exchange is the census-sized post-join agg",
     "q_partition_prune" -> "partition-pruned scan: the o_year predicate is a PartitionFilter (directory-level pruning before any footer is read); the monthly census is one ≤12-key partial+final agg",
     "q_weighted_median" -> "weighted median: RangeRank's ONE range exchange + pid-partitioned local windows carry the exact quantity prefix mass; the 3-row totals frame is the only broadcast; the first-qualifying pick is a 3-group min_by agg",
     "q_template_mining" -> "template mining: row-local leading-4-gram slice (no explode) → (source, template) partial+final census → RangeRank 2-pass top-5 — the few-group cut never funnels the census through 5 tasks",
     "q_kcore" -> "k-core peel round: edges persisted hash-partitioned by src — degree census + src-semi ride the cached partitioning exchange-free, the dst-semi carries the round's ONE edge-scale shuffle, and the symmetric endpoint swap restores the invariant for free; 3 unrolled rounds, census output",
     "q_rolling_median" -> "sliding median: orders collapse in the (day) census FIRST; the unpartitioned ORDER BY day window sees only the calendar-bounded frame, and the 7-row median is a row-local array pick",
-    "q_join_bucketed_fact" -> "bucketed FACT-FACT join: lineitem and orders both bucketed 8-ways on the orderkey — the SMJ reads co-located buckets AND the orderkey-led groupBy is satisfied by scan partitioning: ZERO hash exchanges end-to-end (the workload family's dominant shuffle deleted by layout)",
+    "q_join_bucketed_fact" -> "bucketed FACT-FACT join: lineitem and orders both bucketed on the orderkey, one bucket per session shuffle partition — the SMJ reads co-located buckets AND the orderkey-led groupBy is satisfied by scan partitioning: ZERO hash exchanges end-to-end (the workload family's dominant shuffle deleted by layout)",
     "q_multimodal_decode" -> "binary header decode: packing is codegen'd hex/unhex/concat in the scan projection; the parse is an init-once mapPartitions codec — a narrow map over the corpus, no shuffle until the output ORDER BY",
     // round-5 model-eval family
     "q_auc" -> "Mann–Whitney AUC: per-score census (one shuffle), RangeRank over the census for exclusive cumulative counts (2·midrank = 2·cum+cnt+1, integer), DECIMAL(38,0) rank-sum, ONE double division — no data-sized window anywhere",

@@ -60,9 +60,9 @@ object Tables {
     */
   private def ingest(spark: SparkSession, sfDir: String, name: String,
       raw: DataFrame): DataFrame =
-    ingest0(spark, sfDir, name, raw,
+    ingest0(spark, sfDir, name, raw, graft.ops.Artifacts.cleanupOnExit(
       s"/tmp/graft_ingest_${graft.ops.Artifacts.tag(sfDir)}_" +
-        s"${graft.ops.Artifacts.sessionTag(spark)}")
+        s"${graft.ops.Artifacts.sessionTag(spark)}"))
 
   private[graft] def ingest0(spark: SparkSession, sfDir: String,
       name: String, raw: DataFrame, destRoot: String): DataFrame =
@@ -82,7 +82,7 @@ object Tables {
       val n = math.max(1L, math.min(32L, bytes / 393216L)).toInt
       if (n <= nFiles) raw
       else {
-        val dest = graft.ops.Artifacts.cleanupOnExit(s"$destRoot/$name")
+        val dest = s"$destRoot/$name"
         raw.repartition(n).write.mode("overwrite").parquet(dest)
         spark.read.parquet(dest)
       }

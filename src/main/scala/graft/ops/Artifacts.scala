@@ -1,8 +1,10 @@
 package graft.ops
 
 import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 
 /** Lifecycle for the engine's memoized /tmp parquet artifacts (graph
   * edges, basket pair core, bucketed/partitioned layouts, dedup
@@ -29,9 +31,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     rebuilds from the live data. (The driver's test dirs are
   *     immutable, so the gates never need this.)
   *   - '''Cleaned up at JVM exit.''' Every built artifact directory is
-  *     registered via [[cleanupOnExit]]; a shutdown hook deletes them
-  *     so repeated sessions do not accrete dead pid-tagged trees under
-  *     /tmp.
+  *     registered via [[cleanupOnExit]] (or made by [[path]], which
+  *     also registers its family root); a shutdown hook [[reap]]s them
+  *     so repeated sessions do not accrete dead pid-tagged trees or
+  *     empty family roots under /tmp.
   */
 object Artifacts {
 
@@ -134,14 +137,52 @@ object Artifacts {
       }
     }
 
-  private val cleanupDirs = ConcurrentHashMap.newKeySet[String]()
+  /** A parquet table bucketed on `key`, written from `build(s, dir)` once
+    * per (session, dir) and read back as `s.table`. The bucket count is
+    * the session's `numShufflePartitions` at build time, so the scan's
+    * hashpartitioning(key, n) matches every exchange the session plans
+    * and a join against an exchanged side stays co-partitioned. One file
+    * per bucket (the pre-write repartition matches the bucket spec),
+    * sorted within buckets on `key` when `sorted`. The table name and
+    * path carry the dir tag and the session tag, so a second session
+    * over the same dir builds its own table instead of overwriting one
+    * the first may be reading mid-query; [[invalidate]] drops the
+    * catalog table and the exit hook reaps the files.
+    */
+  def bucketed(name: String, key: String, sorted: Boolean = false)(
+      build: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame = {
+    val tables = memo[String] { case ((s, _), tbl) =>
+      if (!s.sparkContext.isStopped) s.sql(s"DROP TABLE IF EXISTS $tbl"): Unit
+    }
+    (s, dir) => s.table(tables.computeIfAbsent((s, dir), _ => {
+      val tbl = s"${name}_${tag(dir)}_${sessionTag(s)}"
+      val n = s.sessionState.conf.numShufflePartitions
+      val w = build(s, dir).repartition(n, col(key))
+        .write.mode("overwrite").format("parquet").bucketBy(n, key)
+      (if (sorted) w.sortBy(key) else w)
+        .option("path", path("bucketed", tbl)).saveAsTable(tbl)
+      tbl
+    }))
+  }
+
+  private val leaves = ConcurrentHashMap.newKeySet[String]()
+  private val roots = ConcurrentHashMap.newKeySet[String]()
 
   /** Register an artifact directory for recursive deletion at JVM exit.
     * Returns the path for call-site chaining.
     */
   def cleanupOnExit(path: String): String = {
-    cleanupDirs.add(path)
+    leaves.add(path)
     path
+  }
+
+  /** `/tmp/graft-<family>/<leaf>`, registered for deletion at JVM exit;
+    * the family root is removed then too, once it is empty.
+    */
+  def path(family: String, leaf: String): String = {
+    val root = s"/tmp/graft-$family"
+    roots.add(root)
+    cleanupOnExit(s"$root/$leaf")
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -150,7 +191,16 @@ object Artifacts {
     f.delete(): Unit
   }
 
-  sys.addShutdownHook {
-    cleanupDirs.forEach(p => deleteRecursively(new java.io.File(p)))
+  /** Delete every directory in `leaves` recursively, then each of `roots`
+    * that is left empty. A root goes only by a plain directory delete,
+    * which the file system refuses while the directory holds an entry,
+    * so a root another JVM still writes under (its own pid-tagged leaf)
+    * stays.
+    */
+  private[graft] def reap(leaves: Iterable[String], roots: Iterable[String]): Unit = {
+    leaves.foreach(p => deleteRecursively(new java.io.File(p)))
+    roots.foreach(r => new java.io.File(r).delete())
   }
+
+  sys.addShutdownHook(reap(leaves.asScala, roots.asScala))
 }

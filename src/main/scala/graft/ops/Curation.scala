@@ -90,8 +90,7 @@ object Curation {
 
   private def basketPaths(s: SparkSession, dir: String): (String, String) =
     basketMemo.computeIfAbsent((s, dir), _ => {
-      val root = Artifacts.cleanupOnExit(
-        s"/tmp/graft-baskets/${Artifacts.tag(dir)}")
+      val root = Artifacts.path("baskets", Artifacts.tag(dir))
       val bp = s"$root/baskets"
       val pp = s"$root/paircore"
       alsoBoughtBasketsRaw(s, dir)

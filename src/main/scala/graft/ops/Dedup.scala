@@ -407,7 +407,7 @@ object Dedup {
 
   def hashIndexPath(s: SparkSession, dir: String): String =
     hashIdxMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-dedup-index/${idxTag(dir)}") + "/hash"
+      val path = Artifacts.path("dedup-index", idxTag(dir)) + "/hash"
       contentHashes(t(s, dir, "documents").filter(col("doc_id") % 10 =!= 7))
         .write.mode("overwrite").parquet(path)
       path
@@ -421,7 +421,7 @@ object Dedup {
 
   def bandIndexPath(s: SparkSession, dir: String): String =
     bandIdxMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-dedup-index/${idxTag(dir)}") + "/bands"
+      val path = Artifacts.path("dedup-index", idxTag(dir)) + "/bands"
       bandRows(s, t(s, dir, "documents").filter(col("doc_id") % 10 =!= 7))
         .write.mode("overwrite").parquet(path)
       path

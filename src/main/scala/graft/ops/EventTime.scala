@@ -1086,33 +1086,28 @@ object EventTime {
 
     // ── audience overlap census (exact pairwise set intersections) ───────
     // The audience-analysis primitive: for every pair of event types, how
-    // many users did BOTH, with exact Jaccard. Shape: ONE distinct +
-    // per-user type-set aggregation (bounded by the type vocabulary),
-    // then a ROW-LOCAL triangular pair fan-out — the basket discipline;
-    // the corpus never self-joins on user_id (the oracle's self-join
-    // formulation is the semantic spec, not the plan). Sizes join on the
-    // tiny per-type census; Jaccard is exact integer arithmetic + one
-    // IEEE division. The HLL twin (q_overlap_sketch) answers the same
-    // question from pre-aggregated sketches without the distinct pass.
+    // many users did BOTH, with exact Jaccard. Shape: one per-user
+    // type-set aggregation (bounded by the type vocabulary) fanned out
+    // row-locally into the pair census ([[Pairs.census]]) — the basket
+    // discipline; the corpus never self-joins on user_id (the oracle's
+    // self-join formulation is the semantic spec, not the plan). The
+    // census's single cells are the per-type user counts, attached to
+    // each pair cell by [[Pairs.withMarginals]], so events are scanned
+    // once; Jaccard is exact integer arithmetic + one IEEE division. The
+    // HLL twin (q_overlap_sketch) answers the same question from
+    // pre-aggregated sketches without the set pass.
     Q("q_set_overlap",
-      (s, dir) => {
-        val ut = t(s, dir, "events")
-          .select(col("user_id"), col("event_type")).distinct()
-        val pairs = Pairs.fanOut(
-            Pairs.sets(ut, "user_id", "event_type").select("items"))
-          .groupBy(col("a").as("ta"), col("b").as("tb"))
-          .agg(count(lit(1)).as("n_both"))
-        val sz = ut.groupBy("event_type").agg(count(lit(1)).as("n"))
-        pairs
-          .join(sz.select(col("event_type").as("ta"), col("n").as("n_a")),
-            Seq("ta"))
-          .join(sz.select(col("event_type").as("tb"), col("n").as("n_b")),
-            Seq("tb"))
-          .select(col("ta"), col("tb"), col("n_a"), col("n_b"), col("n_both"),
-            (col("n_both") / (col("n_a") + col("n_b") - col("n_both")))
-              .as("jaccard"))
-          .orderBy("ta", "tb")
-      },
+      (s, dir) => Pairs.withMarginals(Pairs.census(
+          t(s, dir, "events").select(col("user_id"), col("event_type")),
+          "user_id", "event_type"))
+        .filter(col("b").isNotNull)
+        // pair cells hold no nulls; the fills only type the columns
+        // non-null, as the join-based form wrote them
+        .na.fill("").na.fill(0L)
+        .select(col("a").as("ta"), col("b").as("tb"), col("n_a"), col("n_b"),
+          col("n").as("n_both"),
+          (col("n") / (col("n_a") + col("n_b") - col("n"))).as("jaccard"))
+        .orderBy("ta", "tb"),
       Some("""WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
               pairs AS (
                 SELECT a.event_type AS ta, b.event_type AS tb,

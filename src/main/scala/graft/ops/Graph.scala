@@ -51,42 +51,16 @@ object Graph {
     * materializes exactly this projection once before running a graph
     * family (the Layout.scala / dedup-index artifact discipline).
     *
-    * Round 8: the artifact is a 32-way src-BUCKETED table (the
-    * Layout.scala bucketed-layout lever applied to the graph project):
-    * the scan itself reports hashpartitioning(src, 32), so consumers
-    * persist the scan DIRECTLY — the per-query edge-scale
-    * repartition(src) exchange every graph query used to pay at read
-    * time is gone, and at 100 TB that exchange IS the family's setup
-    * cost. One file per bucket (the pre-write repartition matches the
-    * bucket spec). Path, staleness and cleanup semantics follow the
-    * [[Artifacts]] contract (collision-proof hashed tag,
-    * `Artifacts.invalidate(dir)` after mid-session input mutation,
-    * reaped at JVM exit).
+    * The artifact is a src-BUCKETED table ([[Artifacts.bucketed]]) with
+    * as many buckets as the session has shuffle partitions: the scan
+    * itself reports hashpartitioning(src, n), so consumers persist the
+    * scan DIRECTLY — the per-query edge-scale repartition(src) exchange
+    * every graph query used to pay at read time is gone, and at 100 TB
+    * that exchange IS the family's setup cost — and a round join
+    * against an exchanged side reuses the same n without a re-shuffle.
     */
-  private val edgeMemo = Artifacts.memo[String] { case ((s, _), name) =>
-    // free the catalog entry (and its files — exit-hook also reaps the
-    // dir) when a mid-session invalidate evicts the artifact
-    if (!s.sparkContext.isStopped) s.sql(s"DROP TABLE IF EXISTS $name"): Unit
-  }
-
-  private[graft] def bipartiteEdges(s: SparkSession, dir: String): DataFrame = {
-    val tbl = edgeMemo.computeIfAbsent((s, dir), _ => {
-      // the table name/path carries a session-unique tag on top of the
-      // (dir-hash, pid) tag: a SECOND SparkSession in this JVM over the
-      // same dir builds its OWN table instead of saveAsTable(overwrite)-
-      // dropping the one the first session may be reading mid-query
-      // (the r8 ADVICE race)
-      val tag = Artifacts.tag(dir) + "_" + Artifacts.sessionTag(s)
-      val name = s"graft_graph_edges_$tag"
-      val path = Artifacts.cleanupOnExit("/tmp/graft-graph/" + tag)
-      bipartiteEdgesRaw(s, dir).repartition(32, col("src"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(32, "src")
-        .option("path", s"$path/edges").saveAsTable(name)
-      name
-    })
-    s.table(tbl)
-  }
+  private[graft] val bipartiteEdges =
+    Artifacts.bucketed("graft_graph_edges", "src")(bipartiteEdgesRaw)
 
   /** Shared part co-occurrence pair core for the wedge family
     * (q_triangle_count + q_local_clustering): the 1998-ship-year

@@ -43,34 +43,19 @@ object Layout {
     */
   private def tag(dir: String): String = Artifacts.tag(dir)
 
-  /** Bucketed orders/customer tables, hash-bucketed 8-ways on the join
-    * key and sorted within buckets; one file per bucket (the repartition
-    * matches the bucket spec) so the scan's output ordering survives and
-    * the join needs neither Exchange nor extra Sort. Memoized per
-    * (session, dir): written once, joined many times.
+  /** Bucketed orders/customer tables ([[Artifacts.bucketed]]: as many
+    * buckets as the session has shuffle partitions), bucketed on the
+    * custkey join key and sorted within buckets, so the join reads
+    * co-located buckets and needs no Exchange. Each is written once per
+    * (session, dir) and joined many times.
     */
-  private val bucketMemo =
-    Artifacts.memo[(String, String)]()
+  private val bucketedOrders =
+    Artifacts.bucketed("graft_bkt_orders", "o_custkey", sorted = true)(
+      t(_, _, "orders").select("o_orderkey", "o_custkey", "o_totalprice"))
 
-  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketMemo.computeIfAbsent((s, dir), _ => {
-      val tg = tag(dir)
-      val (to, tc) = (s"graft_bkt_orders_$tg", s"graft_bkt_customer_$tg")
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-bucketed/$tg")
-      t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .repartition(8, col("o_custkey"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", s"$path/orders").saveAsTable(to)
-      t(s, dir, "customer")
-        .select("c_custkey", "c_mktsegment")
-        .repartition(8, col("c_custkey"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", s"$path/customer").saveAsTable(tc)
-      (to, tc)
-    })
+  private val bucketedCustomer =
+    Artifacts.bucketed("graft_bkt_customer", "c_custkey", sorted = true)(
+      t(_, _, "customer").select("c_custkey", "c_mktsegment"))
 
   /** Bucketed lineitem/orders layout on the ORDERKEY — the fact-fact
     * case. The custkey layout above co-locates a fact with a dimension;
@@ -79,31 +64,16 @@ object Layout {
     * Q3/Q18-style drill-down pays the lineitem⋈orders shuffle — at
     * 100 TB it IS the workload's dominant exchange, and the analog of
     * the reference's entire shuffle phase, reference
-    * `JobContext.cpp:80-124`). Both sides hash-bucketed 8-ways on the
-    * orderkey, sorted within buckets, one file per bucket.
+    * `JobContext.cpp:80-124`). Both sides bucketed on the orderkey the
+    * same way as the custkey pair.
     */
-  private val factMemo =
-    Artifacts.memo[(String, String)]()
+  private val bucketedLineitem =
+    Artifacts.bucketed("graft_bkt_lineitem", "l_orderkey", sorted = true)(
+      t(_, _, "lineitem").select("l_orderkey", "l_quantity", "l_extendedprice"))
 
-  private def bucketedFactTables(s: SparkSession, dir: String): (String, String) =
-    factMemo.computeIfAbsent((s, dir), _ => {
-      val tg = tag(dir)
-      val (tl, to) = (s"graft_bkt_lineitem_$tg", s"graft_bkt_ford_$tg")
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-bucketed/$tg")
-      t(s, dir, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice")
-        .repartition(8, col("l_orderkey"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$path/lineitem").saveAsTable(tl)
-      t(s, dir, "orders")
-        .select("o_orderkey", "o_orderdate", "o_totalprice")
-        .repartition(8, col("o_orderkey"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$path/ford").saveAsTable(to)
-      (tl, to)
-    })
+  private val bucketedFactOrders =
+    Artifacts.bucketed("graft_bkt_ford", "o_orderkey", sorted = true)(
+      t(_, _, "orders").select("o_orderkey", "o_orderdate", "o_totalprice"))
 
   /** Partition-pruned orders layout: directory-partitioned by order year.
     * Reading it with a year predicate turns the filter into a
@@ -115,7 +85,7 @@ object Layout {
 
   private def partitionedOrders(s: SparkSession, dir: String): String =
     partMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-partitioned/${tag(dir)}") + "/orders"
+      val path = Artifacts.path("partitioned", tag(dir)) + "/orders"
       t(s, dir, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year").parquet(path)
@@ -126,7 +96,7 @@ object Layout {
 
     // ── bucketed co-located join ─────────────────────────────────────────
     // THE shuffle-elimination lever: orders ⋈ customer on c_custkey with
-    // both sides bucketed 8-ways on the key. Plan contract (PlanGuard):
+    // both sides bucketed on the key. Plan contract (PlanGuard):
     // both scans show `Bucketed: true`, and the ONLY hash Exchange in the
     // plan is the census-sized post-join aggregation — the join itself
     // reads co-located buckets. The `merge` hint pins SortMergeJoin so
@@ -135,16 +105,13 @@ object Layout {
     // SF. At 100 TB this layout turns every custkey-keyed join in the
     // workload from two fact shuffles into zero.
     Q("q_join_bucketed",
-      (s, dir) => {
-        val (to, tc) = bucketedTables(s, dir)
-        s.table(to)
-          .join(s.table(tc).hint("merge"),
-            col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n_orders"),
-            sumDec2(col("o_totalprice")).as("revenue"))
-          .orderBy("c_mktsegment")
-      },
+      (s, dir) => bucketedOrders(s, dir)
+        .join(bucketedCustomer(s, dir).hint("merge"),
+          col("o_custkey") === col("c_custkey"))
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_orders"),
+          sumDec2(col("o_totalprice")).as("revenue"))
+        .orderBy("c_mktsegment"),
       Some("""SELECT c_mktsegment, count(*) AS n_orders,
                 CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                   AS revenue
@@ -163,19 +130,16 @@ object Layout {
     // layout: two corpus-sized exchanges (join re-shuffle of each fact)
     // plus one agg exchange → zero.
     Q("q_join_bucketed_fact",
-      (s, dir) => {
-        val (tl, to) = bucketedFactTables(s, dir)
-        s.table(tl)
-          .join(s.table(to).hint("merge"),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-          .agg(sumDec2(col("l_quantity")).as("sum_qty"),
-            count(lit(1)).as("n_lines"))
-          .filter(col("sum_qty") >= 250.0)
-          .select(col("o_orderkey"), col("o_orderdate"),
-            col("o_totalprice"), col("sum_qty"), col("n_lines"))
-          .orderBy("o_orderkey")
-      },
+      (s, dir) => bucketedLineitem(s, dir)
+        .join(bucketedFactOrders(s, dir).hint("merge"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
+        .agg(sumDec2(col("l_quantity")).as("sum_qty"),
+          count(lit(1)).as("n_lines"))
+        .filter(col("sum_qty") >= 250.0)
+        .select(col("o_orderkey"), col("o_orderdate"),
+          col("o_totalprice"), col("sum_qty"), col("n_lines"))
+        .orderBy("o_orderkey"),
       Some("""SELECT o_orderkey, o_orderdate, o_totalprice,
                 CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
                   AS sum_qty,
@@ -218,14 +182,11 @@ object Layout {
     // exchanges). At 100 TB this turns the most common fact rollup
     // from a full shuffle into a scan.
     Q("q_bucket_agg",
-      (s, dir) => {
-        val (to, _) = bucketedTables(s, dir)
-        s.table(to)
-          .groupBy("o_custkey")
-          .agg(count(lit(1)).as("n_orders"),
-            sumDec2(col("o_totalprice")).as("revenue"))
-          .orderBy("o_custkey")
-      },
+      (s, dir) => bucketedOrders(s, dir)
+        .groupBy("o_custkey")
+        .agg(count(lit(1)).as("n_orders"),
+          sumDec2(col("o_totalprice")).as("revenue"))
+        .orderBy("o_custkey"),
       Some("""SELECT o_custkey, count(*) AS n_orders,
                 CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                   AS revenue
@@ -533,7 +494,7 @@ object Layout {
 
   private def csvEvents(s: SparkSession, dir: String): String =
     csvMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-sources/${tag(dir)}") + "/events_csv"
+      val path = Artifacts.path("sources", tag(dir)) + "/events_csv"
       srcProjection(s, dir).write.mode("overwrite").csv(path)
       path
     })
@@ -543,7 +504,7 @@ object Layout {
 
   private def jsonEvents(s: SparkSession, dir: String): String =
     jsonMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-sources/${tag(dir)}") + "/events_json"
+      val path = Artifacts.path("sources", tag(dir)) + "/events_json"
       srcProjection(s, dir).write.mode("overwrite").json(path)
       path
     })
@@ -558,7 +519,7 @@ object Layout {
     */
   private def textDocs(s: SparkSession, dir: String): String =
     textMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-sources/${tag(dir)}") + "/docs_text"
+      val path = Artifacts.path("sources", tag(dir)) + "/docs_text"
       Tables.load(s, dir, "documents")
         .select(concat_ws("\t", col("doc_id"), col("source"),
           col("text")).as("value"))
@@ -571,7 +532,7 @@ object Layout {
 
   private def orcEvents(s: SparkSession, dir: String): String =
     orcMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-sources/${tag(dir)}") + "/events_orc"
+      val path = Artifacts.path("sources", tag(dir)) + "/events_orc"
       srcProjection(s, dir).write.mode("overwrite").orc(path)
       path
     })
@@ -581,7 +542,7 @@ object Layout {
 
   private def xmlEvents(s: SparkSession, dir: String): String =
     xmlMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-sources/${tag(dir)}") + "/events_xml"
+      val path = Artifacts.path("sources", tag(dir)) + "/events_xml"
       srcProjection(s, dir).write.mode("overwrite")
         .option("rowTag", "event").option("rootTag", "events").xml(path)
       path
@@ -596,7 +557,7 @@ object Layout {
     */
   private def binaryDocs(s: SparkSession, dir: String): String =
     binMemo.computeIfAbsent((s, dir), _ => {
-      val path = Artifacts.cleanupOnExit(s"/tmp/graft-sources/${tag(dir)}") + "/docs_bin"
+      val path = Artifacts.path("sources", tag(dir)) + "/docs_bin"
       t(s, dir, "documents").select(col("source"), col("text"))
         .write.mode("overwrite").partitionBy("source").text(path)
       path

@@ -1,6 +1,8 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 /** The [[Artifacts]] lifecycle contract (round-8 verdict item 8 /
@@ -105,6 +107,82 @@ class ArtifactsSpec extends SparkSpec {
     Artifacts.invalidate(dir)
     val n1 = Graph.bipartiteEdges(spark, dir).count()
     assert(n1 > 0 && n1 < n0)
+  }
+
+  /** A mutable copy of the sf0.001 tables the bucketed artifacts read. */
+  private lazy val layoutDir: String = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-bucketed-spec").toString
+    Artifacts.cleanupOnExit(dir)
+    for (n <- Seq("lineitem", "orders", "customer"))
+      Tables.load(spark, sfDir, n).write.parquet(s"$dir/$n.parquet")
+    dir
+  }
+
+  /** Build all five bucketed artifacts of `dir` in session `s`. */
+  private def buildBucketed(s: SparkSession, dir: String): Unit = {
+    Graph.bipartiteEdges(s, dir)
+    for (q <- Seq("q_join_bucketed", "q_join_bucketed_fact"))
+      SparkEntry.queries(q)(s, dir)
+  }
+
+  /** The catalog's bucketed-artifact tables of `dir`, every session. */
+  private def bucketedTables(dir: String): Seq[String] =
+    spark.catalog.listTables().collect().toSeq.map(_.name).filter(n =>
+      (n.startsWith("graft_graph_edges_") || n.startsWith("graft_bkt_")) &&
+        n.contains(Artifacts.tag(dir)))
+
+  test("bucketed artifacts: session-sized buckets, dropped by invalidate") {
+    val dir = layoutDir
+    buildBucketed(spark, dir)
+    val tables = bucketedTables(dir)
+    assert(tables.size === 5, s"expected the five bucketed tables: $tables")
+    for (n <- tables) {
+      val spec = spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(n)).bucketSpec
+      assert(spec.map(_.numBuckets) ===
+        Some(spark.sessionState.conf.numShufflePartitions),
+        s"$n is not bucketed to the session's shuffle partitions: $spec")
+    }
+    Artifacts.invalidate(dir)
+    assert(bucketedTables(dir).isEmpty,
+      "invalidate left bucketed artifact tables in the catalog")
+  }
+
+  test("bucketed artifacts: two sessions over one dir get their own tables") {
+    val dir = layoutDir
+    val s2 = spark.newSession()
+    Seq(spark, s2).foreach(buildBucketed(_, dir))
+    val tables = bucketedTables(dir)
+    val paths = tables.map(n => spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(n)).location)
+    assert(tables.size === 10 && paths.distinct.size === 10,
+      s"sessions share bucketed tables or paths: $tables")
+    for (s <- Seq(spark, s2))
+      assert(tables.count(_.endsWith("_" + Artifacts.sessionTag(s))) === 5)
+    Artifacts.invalidate(dir)
+    assert(bucketedTables(dir).isEmpty)
+  }
+
+  test("reap deletes the leaves, then only the family roots left empty") {
+    val scratch = java.nio.file.Files.createTempDirectory("graft-reap-spec")
+    def leaf(p: String): String = {
+      val d = scratch.resolve(p)
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.writeString(d.resolve("part-0"), "x")
+      d.toString
+    }
+    val ours = Seq(leaf("graft-a/l1"), leaf("graft-a/l2"), leaf("graft-b/l3"))
+    // another JVM's leaf under the same family root
+    val foreign = leaf("graft-b/other")
+    val roots = Seq("graft-a", "graft-b").map(scratch.resolve(_).toString)
+    Artifacts.reap(ours, roots)
+    assert(ours.forall(p => !new java.io.File(p).exists), "a leaf survived")
+    assert(!new java.io.File(roots(0)).exists, "empty family root left behind")
+    assert(new java.io.File(foreign).isDirectory,
+      "reap removed a root another JVM still writes under")
+    Artifacts.reap(Seq(foreign), roots :+ scratch.toString)
+    assert(!scratch.toFile.exists)
   }
 
   test("ingest fallback answers from the raw frame AND warns (r10 verdict #1)") {

@@ -152,13 +152,65 @@ class PlanGuardSpec extends SparkSpec {
         s"bloom join force-broadcasts the SF-scaling customer side:\n${h.child}")
   }
 
+  /** The physical plan as planned: AQE's current plan, which before any
+    * stage runs is the initial plan with every exchange in place.
+    */
+  private def physical(q: String) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    qe(q).executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+  }
+
+  /** The file scans of `q`'s physical plan, including those under a
+    * cached frame (another spec may have persisted the same read).
+    */
+  private def fileScans(q: String) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case f: FileSourceScanExec => Seq(f)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case st: QueryStageExec => walk(st.plan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+    }.flatten
+    walk(physical(q))
+  }
+
+  /** Every bucketed scan of `q` must select all of the session's
+    * `numShufflePartitions` buckets: the artifact is sized to the
+    * session, so its scan partitioning matches every exchange.
+    */
+  private def assertSessionBuckets(q: String): Unit = {
+    val n = spark.sessionState.conf.numShufflePartitions
+    val counts = formatted(q).linesIterator.map(_.trim)
+      .filter(_.startsWith("SelectedBucketsCount:")).toSeq
+    assert(counts.nonEmpty, s"$q reads no bucketed scan")
+    for (c <- counts)
+      assert(c === s"SelectedBucketsCount: $n out of $n",
+        s"$q's bucketed scan is not sized to the session's $n partitions")
+  }
+
+  /** Shuffle exchanges under `q`'s sort-merge joins. */
+  private def exchangesBelowJoin(q: String): Int = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val joins = physical(q).collect { case j: SortMergeJoinExec => j }
+    assert(joins.nonEmpty, s"$q lost its sort-merge join")
+    joins.map(_.collect { case e: ShuffleExchangeExec => e }.size).sum
+  }
+
   test("graph edge artifact reads as a bucketed scan (no read-time exchange)") {
-    // round 8: the graph project is a 32-way src-bucketed table, so the
-    // per-node degree census rides the scan's hashpartitioning — the
-    // edge-scale repartition every graph query used to pay is gone
+    // the graph project is a src-bucketed table with one bucket per
+    // session shuffle partition, so the per-node degree census rides the
+    // scan's hashpartitioning — the edge-scale repartition every graph
+    // query used to pay is gone
     val ex = formatted("q_degree_stats")
     assert(ex.contains("Bucketed: true"),
       "edge artifact scan is not bucketed — consumers re-shuffle at read")
+    assertSessionBuckets("q_degree_stats")
     val plan = qe("q_degree_stats").executedPlan.toString
     // allowed hash exchanges: the 8-row bit-length census (+nothing
     // else); the src-keyed degree agg must NOT exchange
@@ -394,6 +446,13 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  test("q_set_overlap scans events once: type sizes are the census's single cells") {
+    val scans = fileScans("q_set_overlap")
+      .map(_.relation.location.rootPaths.mkString(","))
+    assert(scans.size === 1 && scans.head.contains("events"),
+      s"q_set_overlap scans ${scans.size} times: $scans")
+  }
+
   test("wedge core: ship-year slice pushes to the scan, closure is hashed") {
     // round 11: the pairs→orientation→closure pipeline is the shared
     // wedgeCore artifact; the pushdown is asserted on its BUILD plan
@@ -598,7 +657,8 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("q_join_bucketed: co-located join — bucket scans, only the agg exchanges") {
-    // both sides bucketed 8-ways on the join key: the SMJ must read
+    // both sides bucketed on the join key, one bucket per session
+    // shuffle partition: the SMJ must read
     // co-located buckets (Bucketed: true on both scans) and the ONLY
     // hash Exchange allowed is the census-sized post-join aggregation —
     // a second one means the layout stopped eliminating the join shuffle
@@ -614,6 +674,9 @@ class PlanGuardSpec extends SparkSpec {
     val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(hashEx <= 1,
       s"bucketed join still shuffles ($hashEx hash exchanges — expected ≤1 for the agg)")
+    assertSessionBuckets("q_join_bucketed")
+    assert(exchangesBelowJoin("q_join_bucketed") === 0,
+      "a bucketed join side is re-shuffled below the join")
     // positive control for the detector: a plain partial+final agg on an
     // un-bucketed scan DOES show a hash exchange (a join would be
     // size-gated to broadcast at test SF)
@@ -636,6 +699,9 @@ class PlanGuardSpec extends SparkSpec {
     val plan = qe("q_join_bucketed_fact").executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"bucketed fact-fact drill-down still hash-shuffles:\n$plan")
+    assertSessionBuckets("q_join_bucketed_fact")
+    assert(exchangesBelowJoin("q_join_bucketed_fact") === 0,
+      "a bucketed fact side is re-shuffled below the join")
   }
 
   test("q_bucket_agg: bucket-key aggregation runs with ZERO hash exchanges") {
@@ -646,6 +712,7 @@ class PlanGuardSpec extends SparkSpec {
     assert(!qe("q_bucket_agg").executedPlan.toString
       .contains("Exchange hashpartitioning"),
       "bucket-key aggregation still shuffles")
+    assertSessionBuckets("q_bucket_agg")
   }
 
   test("q_partition_prune: the year predicate prunes at the directory level") {
