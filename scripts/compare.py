@@ -2,7 +2,8 @@
 """Local mimic of the driver's correctness gate: for each query result
 dumped by graft.Verify, run the declared DuckDB oracle on the same
 parquet tables and compare (columns sorted by name, values compared
-exactly, with a diff preview on mismatch).
+exactly, with a diff preview on mismatch). Exits non-zero when any
+query fails, including an oracled query Verify wrote no result for.
 
 Usage: python3 scripts/compare.py <sfDir> <verifyOutDir>
 """
@@ -53,14 +54,15 @@ def main(sf_dir, out_dir):
         else:
             bad = [(i, a, b) for i, (a, b) in enumerate(zip(g, e)) if a != b][:3]
             results[name] = f"VALUE_MISMATCH rows={len(g)} firstdiffs={bad}"
+    # an oracled query with no result dir threw in Verify: it fails
+    for name in set(oracle) - set(results):
+        results[name] = "MISSING no result (query errored in Verify?)"
     npass = sum(1 for v in results.values() if v.startswith(("MATCH", "ROWS_ONLY")))
     for k, v in sorted(results.items()):
         flag = "PASS" if v.startswith(("MATCH", "ROWS_ONLY")) else "FAIL"
         print(f"{flag} {k}: {v}")
     print(f"== {npass}/{len(results)} pass")
-    missing = set(oracle) - set(results)
-    if missing:
-        print(f"MISSING RESULTS (query errored in Verify?): {sorted(missing)}")
+    return npass == len(results)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(0 if main(sys.argv[1], sys.argv[2]) else 1)

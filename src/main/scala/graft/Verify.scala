@@ -7,6 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query subset for a fast local loop
+    // (oracle_sql.json then lists the subset only)
     val picks: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -22,6 +23,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => picks.isEmpty || picks(name) }
       .foreach { case (name, fn) =>
+      // a query that throws must leave no result, not an earlier run's
+      graft.ops.Artifacts.reap(Seq(s"$outDir/$name"), Nil)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -41,6 +44,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => picks.isEmpty || picks(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -5,10 +5,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
-/** Lifecycle for the engine's memoized /tmp parquet artifacts (graph
-  * edges, basket pair core, bucketed/partitioned layouts, dedup
-  * indexes, file-source fixtures).
+/** Lifecycle for the engine's session-lived state: the memoized /tmp
+  * parquet artifacts (graph edges, basket pair core,
+  * bucketed/partitioned layouts, dedup indexes, file-source fixtures),
+  * the pinned in-memory frames, and the caches a build or a finish
+  * helper persists on the way.
   *
   * The contract every artifact memo follows:
   *
@@ -16,6 +19,15 @@ import org.apache.spark.sql.functions.col
   *     memo maps live in this JVM only; no cross-JVM artifact reuse
   *     ever existed. Artifacts are built once per key and then only
   *     READ — the cheap-plan side of the lakehouse ingest/query split.
+  *   - '''One owner per cache.''' A [[pinned]] frame is built once, in
+  *     a [[scoped]] block, and held by an eager `localCheckpoint`; its
+  *     memo's [[release]] hook frees the checkpoint on [[invalidate]].
+  *     Every frame a build (or any other scoped work) caches on the
+  *     way goes through [[persist]]: the innermost scope owns it and
+  *     `Dataset.unpersist`es it when the block ends, normally or by a
+  *     throw, which drops its blocks and its SQL-cache entry together.
+  *     Nothing else is touched — no context-wide snapshot of the
+  *     persistent RDDs is diffed.
   *   - '''Paths are collision-proof.''' [[tag]] appends the unsigned
   *     hex hash of the FULL dir string to the human-readable sanitized
   *     form: two distinct dirs that sanitize identically (e.g.
@@ -107,9 +119,53 @@ object Artifacts {
     df.unpersist(false): Unit
   }
 
-  /** A [[memo]] of frames whose hook is [[release]]. */
-  def frameMemo(): ConcurrentHashMap[(SparkSession, String), DataFrame] =
-    memo[DataFrame]((_, df) => release(df))
+  /** A frame built by `build(s, dir)` once per (session, dir) and pinned
+    * by an eager `localCheckpoint`. The build and the checkpoint run in
+    * one [[scoped]] block, so every cache the build [[persist]]s on the
+    * way (`RangeRank.ranked`'s range layout, a twice-read input) is
+    * released as soon as the checkpoint holds the result; [[invalidate]]
+    * frees the checkpoint itself through [[release]].
+    */
+  def pinned(build: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = {
+    val frames = memo[DataFrame]((_, df) => release(df))
+    (s, dir) => frames.computeIfAbsent((s, dir), _ =>
+      scoped(build(s, dir).localCheckpoint(true)))
+  }
+
+  // the frames each open scope on this thread owns, innermost scope
+  // first; within a scope newest first, so dependents are released first
+  private val scopes =
+    ThreadLocal.withInitial[List[List[DataFrame]]](() => Nil)
+
+  /** Run `body`, then `Dataset.unpersist` exactly the frames it
+    * [[persist]]ed — not those of a nested scope, which releases its
+    * own — also when `body` throws.
+    */
+  def scoped[T](body: => T): T = {
+    scopes.set(Nil :: scopes.get)
+    try body
+    finally {
+      val owned = scopes.get.head
+      scopes.set(scopes.get.tail)
+      owned.foreach(_.unpersist(false))
+    }
+  }
+
+  /** `df.persist(MEMORY_AND_DISK)`, owned by the innermost open
+    * [[scoped]] block on this thread. A frame whose plan is already
+    * cached stays with whoever cached it first, and outside any scope
+    * this is a plain persist.
+    */
+  def persist(df: DataFrame): DataFrame = {
+    val fresh = df.storageLevel == StorageLevel.NONE
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    scopes.get match {
+      case owned :: outer if fresh => scopes.set((df :: owned) :: outer)
+      case _ => ()
+    }
+    df
+  }
 
   /** Drop every memoized artifact for `dir` (all sessions, all
     * families), calling each memo's release hook on the evicted values

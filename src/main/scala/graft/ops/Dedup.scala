@@ -142,23 +142,17 @@ object Dedup {
     * blocks outside the SQL cache so `clearCache()` between queries
     * can't force a silent recompute.
     */
-  private val pairMemo =
-    Artifacts.frameMemo()
-
-  private def shinglePairCore(s: SparkSession, dir: String): DataFrame =
-    pairMemo.computeIfAbsent((s, dir), _ => {
-      // shingles are referenced twice (pair gen + sizes) with DIFFERENT
-      // downstream partitionings, so exchange reuse alone can't dedupe
-      // the shingle pipeline — persist for the build's duration
-      val sh = cappedShingles(t(s, dir, "documents"), ShingleDfCap).persist()
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      val core = sharedShinglePairs(sh)
-        .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n_sh", "sz_a"), Seq("a"))
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n_sh", "sz_b"), Seq("b"))
-        .localCheckpoint(true)
-      sh.unpersist()
-      core
-    })
+  private val shinglePairCore = Artifacts.pinned { (s, dir) =>
+    // shingles are referenced twice (pair gen + sizes) with DIFFERENT
+    // downstream partitionings, so exchange reuse alone can't dedupe
+    // the shingle pipeline — persist for the build's duration
+    val sh = Artifacts.persist(
+      cappedShingles(t(s, dir, "documents"), ShingleDfCap))
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+    sharedShinglePairs(sh)
+      .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n_sh", "sz_a"), Seq("a"))
+      .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n_sh", "sz_b"), Seq("b"))
+  }
 
   /** Filtered exact-Jaccard near-dup pairs (a < b, J ≥ 0.3) over the
     * shared pair core — consumed by q_dedup_ngram and q_dup_clusters.
@@ -355,13 +349,9 @@ object Dedup {
           .as("jaccard"))
   }
 
-  private val labelMemo =
-    Artifacts.frameMemo()
-
-  private def dupClusters(s: SparkSession, dir: String): DataFrame =
-    labelMemo.computeIfAbsent((s, dir), _ =>
-      ccStar(ngramPairs(s, dir).select(col("a").as("u"), col("b").as("v")))
-        .localCheckpoint(true))
+  private val dupClusters = Artifacts.pinned { (s, dir) =>
+    ccStar(ngramPairs(s, dir).select(col("a").as("u"), col("b").as("v")))
+  }
 
   // ─── standing corpus indexes for incremental dedup ──────────────────
   // The artifact contract the incremental queries describe in prose,

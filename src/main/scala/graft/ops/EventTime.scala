@@ -7207,38 +7207,30 @@ object EventTime {
     * contract) so the point estimate and the rank CI read one
     * materialization instead of each paying the pair join.
     */
-  private val senPairsMemo = graft.ops.Artifacts.frameMemo()
-
-  private def senPairs(s: SparkSession, dir: String): DataFrame =
-    senPairsMemo.computeIfAbsent((s, dir), _ => Censuses.pinned(s) {
-      // round 13: the pinned artifact is the RANKED slope census
-      // (sl, c, off, m) — off = exclusive multiplicity prefix in slope
-      // order, m = total pair count — so every Sen order-statistic
-      // pick (the slope median, both CI bounds) is ONE conditional
-      // agg over the artifact; the calendar²-sized pair fan-out and
-      // its rank pass run once per session, not per query.
-      val cen = senDayCensus(s, dir).persist()
-      val slCen = cen.as("a")
-        .join(cen.select(col("d").as("d2"), col("y").as("y2")),
-          col("d") < col("d2"))
-        .select(
-          round((col("y2") - col("y")).cast("double")
-            / (col("d2") - col("d")).cast("double"), 12).as("sl"))
-        .groupBy("sl").agg(count(lit(1)).cast("long").as("c"))
-        .persist()
-      val tot = slCen.agg(sum(col("c")).cast("long").as("m"))
-      val out = RangeRank.ranked(slCen.withColumn("g", lit(1L)),
-          Seq("g"), Seq(col("sl")),
-          rnName = "__rn", nName = None,
-          prefixSums = Seq(RangeRank.PrefixSum(col("c"), "off")))
-        .crossJoin(broadcast(tot))
-        .select(col("sl"), col("c"), col("off").cast("long").as("off"),
-          col("m"))
-        .localCheckpoint(true)
-      cen.unpersist()
-      slCen.unpersist()
-      out
-    })
+  private[ops] val senPairs = Artifacts.pinned { (s, dir) =>
+    // round 13: the pinned artifact is the RANKED slope census
+    // (sl, c, off, m) — off = exclusive multiplicity prefix in slope
+    // order, m = total pair count — so every Sen order-statistic
+    // pick (the slope median, both CI bounds) is ONE conditional
+    // agg over the artifact; the calendar²-sized pair fan-out and
+    // its rank pass run once per session, not per query.
+    val cen = Artifacts.persist(senDayCensus(s, dir))
+    val slCen = Artifacts.persist(cen.as("a")
+      .join(cen.select(col("d").as("d2"), col("y").as("y2")),
+        col("d") < col("d2"))
+      .select(
+        round((col("y2") - col("y")).cast("double")
+          / (col("d2") - col("d")).cast("double"), 12).as("sl"))
+      .groupBy("sl").agg(count(lit(1)).cast("long").as("c")))
+    val tot = slCen.agg(sum(col("c")).cast("long").as("m"))
+    RangeRank.ranked(slCen.withColumn("g", lit(1L)),
+        Seq("g"), Seq(col("sl")),
+        rnName = "__rn", nName = None,
+        prefixSums = Seq(RangeRank.PrefixSum(col("c"), "off")))
+      .crossJoin(broadcast(tot))
+      .select(col("sl"), col("c"), col("off").cast("long").as("off"),
+        col("m"))
+  }
 
   private def senDayCensus(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "orders")

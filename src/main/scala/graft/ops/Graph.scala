@@ -107,14 +107,14 @@ object Graph {
   }
 
   private[graft] def wedgeCore(s: SparkSession, dir: String): WedgeCore =
-    wedgeMemo.computeIfAbsent((s, dir), _ => {
+    wedgeMemo.computeIfAbsent((s, dir), _ => Artifacts.scoped {
       val pk = 4294967296L
       val pairs = wedgePairsRaw(s, dir).localCheckpoint(true)
       val deg = pairs.select(col("u").as("node"))
         .unionByName(pairs.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("dg"))
         .localCheckpoint(true)
-      val ori = pairs
+      val ori = Artifacts.persist(pairs
         .join(deg.select(col("node").as("un"), col("dg").as("ud")),
           col("u") === col("un"))
         .join(deg.select(col("node").as("vn"), col("dg").as("vd")),
@@ -123,8 +123,7 @@ object Graph {
           when(struct(col("ud"), col("u")) < struct(col("vd"), col("v")),
             col("u")).otherwise(col("v")).as("src"),
           when(struct(col("ud"), col("u")) < struct(col("vd"), col("v")),
-            col("v")).otherwise(col("u")).as("dst"))
-        .persist()
+            col("v")).otherwise(col("u")).as("dst")))
       val nWedges = {
         // sum() over an empty frame is NULL (e.g. a ship-year slice
         // with zero qualifying pairs) — read 0 wedges, not an NPE.
@@ -146,7 +145,6 @@ object Graph {
           (col("w") % pk).as("wv"))
         .localCheckpoint(true)
       val nEdges = pairs.count()
-      ori.unpersist()
       WedgeCore(pairs, deg, closed, nEdges, nWedges)
     })
 

@@ -667,40 +667,20 @@ object ModelEval {
   /** Persist the hot frame a finish helper reads more than once, build
     * the finishing result, materialize it (every finish below reduces
     * to an O(1)-row scalar frame — the collect is constant-size by
-    * construction), and RELEASE the cache before returning. A battery
-    * or long verify session must not accrete per-query cached blocks
-    * (r11 ADVICE: 7 batch queries + 7 streaming readouts each leaked a
-    * census cache until clearCache). The returned frame is a local
-    * relation — re-reading it never recomputes the census.
+    * construction), and RELEASE the caches before returning. `hot` is
+    * evaluated inside the [[Artifacts.scoped]] block, so the block owns
+    * the hot frame and every cache built under it (RangeRank.ranked's
+    * range-partitioned frame is the big one): a battery or long verify
+    * session does not accrete per-query cached blocks (r11 ADVICE: 7
+    * batch queries + 7 streaming readouts each leaked a census cache
+    * until clearCache). The returned frame is a local relation —
+    * re-reading it never recomputes the census.
     */
-  private def finishWith(hot: DataFrame)(f: DataFrame => DataFrame)
-      : DataFrame = {
-    val sc = hot.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val c = hot.persist()
-    try {
-      val out = f(c)
-      val rows = out.collect()
-      out.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      c.unpersist()
-      // Release every PLAIN cache this finish materialized below the
-      // census — RangeRank.ranked's range-partitioned frame is the
-      // big one — the scalar result is collected, nothing re-reads
-      // them. localCheckpoint'd RDDs are skipped: destroying one
-      // breaks later readers (a lazily-built shared artifact), and
-      // the small per-call checkpoints are ContextCleaner-reaped.
-      // Best-effort by construction: if another query is
-      // materializing concurrently its delta entries lose their
-      // cached blocks and recompute — slower, never wrong.
-      val after = sc.getPersistentRDDs
-      after.keysIterator.filterNot(before).foreach { id =>
-        after.get(id).filterNot(_.isCheckpointed)
-          .foreach(_.unpersist(false))
-      }
-      ()
-    }
+  private def finishWith(hot: => DataFrame)(f: DataFrame => DataFrame)
+      : DataFrame = Artifacts.scoped {
+    val out = f(Artifacts.persist(hot))
+    out.sparkSession.createDataFrame(
+      java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 
   /** The (c1, c2, off1, off2) cumulative view every two-sample finish
@@ -852,7 +832,9 @@ object ModelEval {
   def energyDistanceFinish(census0: DataFrame,
       preRanked: Boolean = false): DataFrame = {
     val dec38 = DecimalType(38, 0)
-    val cum =
+    // a def: finishWith evaluates it inside its scope, which then owns
+    // the rank pass's range cache
+    def cum =
       if (preRanked) {
         require(Seq("off1", "off2", "vs1", "vs2")
           .forall(census0.columns.contains),

@@ -43,8 +43,11 @@ import org.apache.spark.sql.functions._
   * only when column pruning leaves both with identical schemas — true for
   * payload-free inputs, false in general — so the cache is the correctness
   * mechanism, not an optimization. The cached slice is the projected
-  * (group ++ sort ++ payload) columns only, and the ContextCleaner drops
-  * it once the query's references are gone.
+  * (group ++ sort ++ payload) columns only. It is an
+  * [[Artifacts.persist]]: inside an [[Artifacts.scoped]] block (an
+  * artifact build, a finish helper) the block unpersists it when it
+  * ends; outside one, the SQL cache holds it until `unpersist` or
+  * `clearCache`.
   */
 object RangeRank {
 
@@ -481,10 +484,9 @@ object RangeRank {
     // Pass 0: one range shuffle; pid tags each row with its range slot.
     // persist = both consumers see ONE set of sampled range bounds (see
     // class doc — this is load-bearing for correctness).
-    val parted = df
+    val parted = Artifacts.persist(df
       .repartitionByRange(p, rangeKey: _*)
-      .withColumn(Pid, spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn(Pid, spark_partition_id()))
 
     // Pass 1: per-(pid, group) census — partial+final agg, ≤ p·|groups| rows.
     val sumAggs = prefixSums.zipWithIndex.map { case (ps, i) =>

@@ -24,34 +24,30 @@ object TextOps {
 
   /** Shared per-doc n-gram censuses for the BLEU family (round 11):
     * q_bleu_pairs and q_bleu_corpus build the IDENTICAL per-doc
-    * unigram and bigram count censuses — built once per (session,
-    * dir), localCheckpoint-pinned (the Artifacts train-once contract),
-    * read by both readouts.
+    * unigram and bigram count censuses — each an [[Artifacts.pinned]]
+    * frame, built once per (session, dir) and read by both readouts.
     */
-  private val bleuMemo = Artifacts.memo[(DataFrame, DataFrame)] {
-    case (_, (u, b)) => Artifacts.release(u); Artifacts.release(b)
+  private def bleuTokens(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+
+  private val bleuUnigrams = Artifacts.pinned { (s, dir) =>
+    bleuTokens(s, dir).select(col("doc_id"), explode(col("toks")).as("g"))
+      .filter(col("g") =!= "")
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
   }
 
-  private def bleuCensuses(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bleuMemo.computeIfAbsent((s, dir), _ => {
-      val tl = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      val u = tl.select(col("doc_id"), explode(col("toks")).as("g"))
-        .filter(col("g") =!= "")
-        .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
-      val b = tl.select(col("doc_id"), explode(expr(
-          """CASE WHEN size(toks) >= 2
-             THEN transform(sequence(0, size(toks) - 2),
-                    i -> struct(toks[i] AS x, toks[i+1] AS y))
-             ELSE array() END""")).as("bg"))
-        .filter(col("bg.x") =!= "" && col("bg.y") =!= "")
-        .select(col("doc_id"),
-          concat(col("bg.x"), lit(" "), col("bg.y")).as("g"))
-        .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
-      (u, b)
-    })
+  private val bleuBigrams = Artifacts.pinned { (s, dir) =>
+    bleuTokens(s, dir).select(col("doc_id"), explode(expr(
+        """CASE WHEN size(toks) >= 2
+           THEN transform(sequence(0, size(toks) - 2),
+                  i -> struct(toks[i] AS x, toks[i+1] AS y))
+           ELSE array() END""")).as("bg"))
+      .filter(col("bg.x") =!= "" && col("bg.y") =!= "")
+      .select(col("doc_id"),
+        concat(col("bg.x"), lit(" "), col("bg.y")).as("g"))
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
+  }
 
   val queries: Seq[Q] = Seq(
 
@@ -1835,8 +1831,9 @@ object TextOps {
     // exp is not cross-engine reproducible, sqrt is IEEE-exact).
     Q("q_bleu_pairs",
       (s, dir) => {
-        // per-doc n-gram censuses = the SHARED [[bleuCensuses]] artifact
-        val (u, b) = bleuCensuses(s, dir)
+        // per-doc n-gram censuses = the SHARED pinned BLEU artifacts
+        val u = bleuUnigrams(s, dir)
+        val b = bleuBigrams(s, dir)
         def prec(cen: DataFrame, lenName: String, clipName: String) = {
           val cand = cen.select(col("doc_id").as("pair"), col("g"), col("c"))
           val ref = cen.select((col("doc_id") - 20).as("pair"),
@@ -2174,8 +2171,9 @@ object TextOps {
     // brevity penalty for the same cross-engine-exactness reason.
     Q("q_bleu_corpus",
       (s, dir) => {
-        // per-doc n-gram censuses = the SHARED [[bleuCensuses]] artifact
-        val (u, b) = bleuCensuses(s, dir)
+        // per-doc n-gram censuses = the SHARED pinned BLEU artifacts
+        val u = bleuUnigrams(s, dir)
+        val b = bleuBigrams(s, dir)
         def tot(cen: DataFrame, lenName: String, clipName: String) = {
           val cand = cen.select(col("doc_id").as("pair"), col("g"), col("c"))
           val ref = cen.select((col("doc_id") - 20).as("pair"),

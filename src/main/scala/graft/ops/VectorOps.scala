@@ -1721,14 +1721,13 @@ object VectorOps {
     }
 
   private def ivfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ivfMemo.computeIfAbsent((s, dir), _ => {
+    ivfMemo.computeIfAbsent((s, dir), _ => Artifacts.scoped {
       GraftExtensions.ensureRegistered(s)
       // k-means is inherently multi-pass (one corpus scan per Lloyd
       // round + assignment): pin the projected (vec_id, embedding, n2)
       // columns in memory for the build's duration
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
-        .persist()
+      val emb = Artifacts.persist(t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2")))
       // the codebook feeds TWO consumers (corpus assignment + probe-cell
       // selection); materialize it once or the whole lazy k-means
       // lineage trains twice (√n×dim rows — trivially small at any
@@ -1737,7 +1736,6 @@ object VectorOps {
       val centroids = trainCentroids(s, emb, k = kCells(emb.count()), iters = 2)
         .localCheckpoint(true)
       val assigned = assignCells(emb, centroids).localCheckpoint(true)
-      emb.unpersist()
       (centroids, assigned)
     })
 
@@ -1763,16 +1761,15 @@ object VectorOps {
   }
 
   private def pqIndex(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) =
-    pqMemo.computeIfAbsent((s, dir), _ => {
+    pqMemo.computeIfAbsent((s, dir), _ => Artifacts.scoped {
       GraftExtensions.ensureRegistered(s)
       val subes = (0 until PqSubs).map { sub =>
-        t(s, dir, "embeddings")
+        Artifacts.persist(t(s, dir, "embeddings")
           .select(col("vec_id"),
             slice(col("embedding"), sub * PqDims + 1, PqDims)
               .as("embedding"))
           .select(col("vec_id"), col("embedding"),
-            norm2(col("embedding")).as("n2"))
-          .persist()
+            norm2(col("embedding")).as("n2")))
       }
       val books = subes.map(sube =>
         trainCentroids(s, sube, k = PqK, iters = 2).localCheckpoint(true))
@@ -1782,9 +1779,7 @@ object VectorOps {
             .select(col("vec_id"), col("cent_id").as(s"c$sub"),
               col("sim").as(s"s$sub"))
       }.reduce(_.join(_, "vec_id"))
-      val out = joined.localCheckpoint(true)
-      subes.foreach(_.unpersist())
-      (out, books)
+      (joined.localCheckpoint(true), books)
     })
 
   /** OPQ-style space decomposition (the §20/§21 carried seed) — the
@@ -1809,11 +1804,11 @@ object VectorOps {
   }
 
   private def opqIndex(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) =
-    opqMemo.computeIfAbsent((s, dir), _ => {
+    opqMemo.computeIfAbsent((s, dir), _ => Artifacts.scoped {
       GraftExtensions.ensureRegistered(s)
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding")).persist()
+      val emb = Artifacts.persist(t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding")))
       // 64-row allocation census; the unpartitioned window rides it
       val q = round(col("v").cast("double") * lit(1e12)).cast(dec38)
       val alloc = emb
@@ -1832,13 +1827,12 @@ object VectorOps {
           .agg(expr(
             "transform(array_sort(collect_list(struct(rk, pos)))," +
               " x -> x.pos)").as("dims"))
-        emb.crossJoin(broadcast(dims))
+        Artifacts.persist(emb.crossJoin(broadcast(dims))
           .select(col("vec_id"),
             expr("transform(dims, d -> element_at(embedding, d))")
               .as("embedding"))
           .select(col("vec_id"), col("embedding"),
-            norm2(col("embedding")).as("n2"))
-          .persist()
+            norm2(col("embedding")).as("n2")))
       }
       val books = subes.map(sube =>
         trainCentroids(s, sube, k = PqK, iters = 2).localCheckpoint(true))
@@ -1848,10 +1842,7 @@ object VectorOps {
             .select(col("vec_id"), col("cent_id").as(s"c$sub"),
               col("sim").as(s"s$sub"))
       }.reduce(_.join(_, "vec_id"))
-      val out = joined.localCheckpoint(true)
-      subes.foreach(_.unpersist())
-      emb.unpersist()
-      (out, books)
+      (joined.localCheckpoint(true), books)
     })
 
   /** The OPQ training replay as a WITH body: the allocation census
@@ -1922,16 +1913,13 @@ object VectorOps {
     * cost, after which q_ivf_pq_search scans 4 bytes + 2 ids per
     * corpus vector.
     */
-  private val ivfPqMemo = Artifacts.frameMemo()
-
-  private def ivfPqIndex(s: SparkSession, dir: String): DataFrame =
-    ivfPqMemo.computeIfAbsent((s, dir), _ =>
-      ivfIndex(s, dir)._2.select(col("vec_id"), col("cent_id"))
-        .join(pqIndex(s, dir)._1
-          .select(col("vec_id"), col("c0"), col("c1"), col("c2"),
-            col("c3")),
-          Seq("vec_id"))
-        .localCheckpoint(true))
+  private val ivfPqIndex = Artifacts.pinned { (s, dir) =>
+    ivfIndex(s, dir)._2.select(col("vec_id"), col("cent_id"))
+      .join(pqIndex(s, dir)._1
+        .select(col("vec_id"), col("c0"), col("c1"), col("c2"),
+          col("c3")),
+        Seq("vec_id"))
+  }
 
   /** IVF search kernel shared by q_ann_ivf (constant probe batch) and
     * q_knn_graph (probes = the corpus): for each probe row (probe_id,

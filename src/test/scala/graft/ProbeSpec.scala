@@ -86,7 +86,7 @@ class ProbeSpec extends SparkSpec {
   test("explain prints a formatted plan, or writes one file per query") {
     val printed = lines(Probe.explain(spark, _, Seq(q), sfDir, None))
     assert(printed.take(2) === Seq(s"== $q ==", "== Physical Plan =="))
-    val dir = Files.createTempDirectory("probe-explain")
+    val dir = java.nio.file.Paths.get(tempDir("probe-explain"))
     val file = dir.resolve(s"${q}_t.txt")
     assert(lines(Probe.explain(spark, _, Seq(q), sfDir, Some((dir.toString, "t")))) ===
       Seq(s"wrote $file"))
@@ -103,7 +103,7 @@ class ProbeSpec extends SparkSpec {
   }
 
   test("sizeDerivedPartitions warns once on stderr and returns 1 for a missing dir") {
-    val missing = Files.createTempDirectory("probe-size").resolve("absent").toString
+    val missing = s"${tempDir("probe-size")}/absent"
     val buf = new ByteArrayOutputStream
     val err = System.err
     System.setErr(new PrintStream(buf, true, UTF_8))

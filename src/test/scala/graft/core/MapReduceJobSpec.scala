@@ -94,7 +94,7 @@ class MapReduceJobSpec extends SparkSpec {
     val docs = graft.Tables.load(spark, sfPath("0.001"), "documents")
       .select("text").collect().map(r => (null: Null, r.getString(0))).toIndexedSeq
     val input = sc.parallelize(docs, 4)
-    val out = java.nio.file.Files.createTempDirectory("mr-sink").toString
+    val out = tempDir("mr-sink")
     MapReduceJob.plan(input, new Clients.CharCount, 4)
       .map { case (c, n) => (c.toString, n) } // Char has no Spark encoder
       .toDF("ch", "cnt")

@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.{SparkEntry, SparkSpec, Tables}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The [[Artifacts]] lifecycle contract (round-8 verdict item 8 /
   * ADVICE r7 medium): collision-proof paths, per-dir invalidation, and
@@ -66,13 +67,69 @@ class ArtifactsSpec extends SparkSpec {
     // Dataset.unpersist alone leaves a checkpoint's RDD persisted
     val sc = spark.sparkContext
     val base = sc.getPersistentRDDs.size
-    val df = spark.range(100).toDF("id").localCheckpoint(true)
+    val pin = Artifacts.pinned((s, _) => s.range(100).toDF("id"))
+    pin(spark, "/tmp/rel-d")
     assert(sc.getPersistentRDDs.size === base + 1, "fixture frame was not pinned")
-    val m = Artifacts.frameMemo()
-    m.put((spark, "/tmp/rel-d"), df)
     Artifacts.invalidate("/tmp/rel-d")
     assert(sc.getPersistentRDDs.size === base,
       "evicted checkpoint still holds its RDD after invalidate")
+  }
+
+  private def cached(df: DataFrame): Boolean =
+    df.storageLevel != StorageLevel.NONE
+
+  test("scoped: nested scopes release only their own frames") {
+    val outer = spark.range(101).toDF("id")
+    val inner = spark.range(102).toDF("id")
+    Artifacts.scoped {
+      Artifacts.persist(outer).count()
+      Artifacts.scoped(Artifacts.persist(inner).count())
+      assert(!cached(inner), "the inner scope kept its frame")
+      assert(cached(outer), "the inner scope released the outer scope's frame")
+    }
+    assert(!cached(outer), "the outer scope kept its frame")
+  }
+
+  test("scoped: a throwing body still releases its frames") {
+    val df = spark.range(103).toDF("id")
+    intercept[IllegalStateException](Artifacts.scoped {
+      Artifacts.persist(df).count()
+      throw new IllegalStateException("boom")
+    })
+    assert(!cached(df), "the scope kept its frame after a throw")
+  }
+
+  test("scoped: a frame persisted outside any scope is untouched") {
+    val plain = spark.range(104).toDF("id").persist()
+    val unscoped = Artifacts.persist(spark.range(105).toDF("id"))
+    val own = spark.range(106).toDF("id")
+    Artifacts.scoped {
+      // the same plan as `plain`: already cached, so not the scope's
+      Artifacts.persist(spark.range(104).toDF("id"))
+      Artifacts.persist(own)
+    }
+    assert(cached(plain) && cached(unscoped),
+      "the scope released a frame cached outside it")
+    assert(!cached(own))
+    plain.unpersist(); unscoped.unpersist()
+  }
+
+  test("pinned censuses leave no SQL-cache entry and no plain cache behind") {
+    // a fresh session: every artifact below builds here, not in a memo
+    val s = spark.newSession()
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    def plain(): Set[Int] = sc.getPersistentRDDs
+      .collect { case (id, r) if !r.isCheckpointed => id }.toSet
+    val before = plain()
+    Seq(Censuses.rankedAnsari, Censuses.rankedOrderCents,
+      Censuses.rankedPriorityCents, Censuses.rankedFlagPrice,
+      Censuses.rankedConoverDev, Censuses.brandBaskets, EventTime.senPairs)
+      .foreach(_(s, sfDir).count())
+    assert(spark.sharedState.cacheManager.isEmpty, "artifact builds left " +
+      s"${org.apache.spark.sql.CacheEntries(spark)} SQL-cache entries")
+    assert((plain() -- before).isEmpty,
+      s"artifact builds left plain caches: ${plain() -- before}")
   }
 
   test("sessionTag: stable per session, distinct across sessions") {
@@ -83,9 +140,7 @@ class ArtifactsSpec extends SparkSpec {
 
   test("mutable-dir semantics: stale until invalidate, fresh after") {
     // a mutable copy of the sf0.001 graph inputs under /tmp
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-artifacts-spec").toString
-    Artifacts.cleanupOnExit(dir)
+    val dir = tempDir("graft-artifacts-spec")
     val li = Tables.load(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_suppkey", "l_linenumber")
     val ord = Tables.load(spark, sfDir, "orders")
@@ -111,9 +166,7 @@ class ArtifactsSpec extends SparkSpec {
 
   /** A mutable copy of the sf0.001 tables the bucketed artifacts read. */
   private lazy val layoutDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bucketed-spec").toString
-    Artifacts.cleanupOnExit(dir)
+    val dir = tempDir("graft-bucketed-spec")
     for (n <- Seq("lineitem", "orders", "customer"))
       Tables.load(spark, sfDir, n).write.parquet(s"$dir/$n.parquet")
     dir
@@ -165,7 +218,7 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("reap deletes the leaves, then only the family roots left empty") {
-    val scratch = java.nio.file.Files.createTempDirectory("graft-reap-spec")
+    val scratch = java.nio.file.Paths.get(tempDir("graft-reap-spec"))
     def leaf(p: String): String = {
       val d = scratch.resolve(p)
       java.nio.file.Files.createDirectories(d)
@@ -189,7 +242,8 @@ class ArtifactsSpec extends SparkSpec {
     // destRoot is a path UNDER a regular file — any write there throws,
     // driving the NonFatal fallback; the result must still be the full
     // raw table and a loud stderr line must name the table and cause.
-    val blocker = java.nio.file.Files.createTempFile("graft-block", "")
+    val blocker = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(tempDir("graft-block"), "blocker"))
     val dir = sfPath("0.01") // big enough that re-layout isn't skipped
     val raw = spark.read.parquet(s"$dir/lineitem.parquet")
     val err = new java.io.ByteArrayOutputStream()
@@ -202,6 +256,5 @@ class ArtifactsSpec extends SparkSpec {
     val msg = err.toString
     assert(msg.contains("ingest re-layout of 'lineitem' failed"),
       s"expected a loud fallback warning, got: $msg")
-    java.nio.file.Files.deleteIfExists(blocker)
   }
 }

@@ -17,7 +17,7 @@ class DedupIndexSpec extends SparkSpec {
     val standing = docs.filter(col("doc_id") % 10 =!= 7)
     val base = standing.filter(col("doc_id") % 10 < 5)
     val delta = standing.filter(col("doc_id") % 10 >= 5)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val tmp = tempDir("graft-idx")
 
     Dedup.contentHashes(base).write.mode("overwrite").parquet(s"$tmp/hash")
     Dedup.appendIndex(Dedup.contentHashes(delta), s"$tmp/hash")
@@ -37,7 +37,7 @@ class DedupIndexSpec extends SparkSpec {
     val standing = docs.filter(col("doc_id") % 10 =!= 7)
     val base = standing.filter(col("doc_id") % 10 < 5)
     val delta = standing.filter(col("doc_id") % 10 >= 5)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val tmp = tempDir("graft-idx")
 
     Dedup.bandRows(spark, base).write.mode("overwrite").parquet(s"$tmp/bands")
     Dedup.appendIndex(Dedup.bandRows(spark, delta), s"$tmp/bands")
@@ -58,7 +58,7 @@ class DedupIndexSpec extends SparkSpec {
     val standing = docs.filter(col("doc_id") % 10 =!= 7)
     val base = standing.filter(col("doc_id") % 10 < 5)
     val delta = standing.filter(col("doc_id") % 10 >= 5)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val tmp = tempDir("graft-idx")
     Dedup.bandRows(spark, base).write.mode("overwrite").parquet(s"$tmp/b")
     Dedup.appendIndex(Dedup.bandRows(spark, delta), s"$tmp/b")
 

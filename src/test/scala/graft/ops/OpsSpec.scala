@@ -782,11 +782,15 @@ class OpsSpec extends SparkSpec {
       "q_auc", "q_ks_model", "q_auc_delong", "q_energy_distance")
     def plainCached(): Int = spark.sparkContext.getPersistentRDDs
       .values.count(!_.isCheckpointed)
+    def entries(): Int = org.apache.spark.sql.CacheEntries(spark)
     family.foreach(q(_).collect()) // warm: artifacts build here
     val base = plainCached()
+    val baseEntries = entries()
     family.foreach(q(_).collect()) // repeat: must not grow the cache
     assert(plainCached() <= base,
       s"repeat run grew plain caches: $base -> ${plainCached()}")
+    assert(entries() <= baseEntries,
+      s"repeat run grew SQL-cache entries: $baseEntries -> ${entries()}")
   }
 
   // ── Hoeffding's D law: the oracle pins the corpus's null case only

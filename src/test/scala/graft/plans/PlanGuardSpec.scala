@@ -236,21 +236,35 @@ class PlanGuardSpec extends SparkSpec {
       s"pagerank lost a round's anti-broadcast shuffle-hash pin: $hints")
   }
 
-  /** Hash-exchange count by PHYSICAL TREE WALK — cache build plans are
-    * not children of the consumer plan (InMemoryTableScan is a leaf),
-    * so unlike the toString grep this can never over-count exchanges
-    * the cache already paid at materialization.
+  /** Hash-exchange count by PHYSICAL TREE WALK over the plan AQE runs:
+    * its current plan (after `EnsureRequirements` placed the join and
+    * aggregate exchanges) and, through each query stage, the stage's
+    * own plan. Cache build plans are not children of the consumer plan
+    * (InMemoryTableScan is a leaf), so unlike the toString grep this
+    * can never over-count exchanges the cache already paid at
+    * materialization.
     */
   private def hashExchanges(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val root = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case st: QueryStageExec => st +: nodes(st.plan)
+      case o => o +: o.children.flatMap(nodes)
     }
-    root.collect { case e: ShuffleExchangeExec
-      if e.outputPartitioning.isInstanceOf[HashPartitioning] => e }.size
+    nodes(df.queryExecution.executedPlan).count {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[HashPartitioning]
+      case _ => false
+    }
+  }
+
+  test("hashExchanges counts the exchanges AQE plans, not its input plan") {
+    // an aggregate's hash exchange is placed by EnsureRequirements, which
+    // runs inside AQE: a walk of the pre-AQE input plan reads 0 here
+    assert(hashExchanges(SparkEntry.queries("q_groupby_sum")(spark, sfDir)) >= 1)
   }
 
   test("q_pagerank round: ONE hash exchange — joins ride the cached partitioning") {

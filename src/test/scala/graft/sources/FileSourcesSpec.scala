@@ -3,7 +3,6 @@ package graft.sources
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 class FileSourcesSpec extends SparkSpec {
 
@@ -16,7 +15,7 @@ class FileSourcesSpec extends SparkSpec {
   test("orders round-trips through every format with schema preserved") {
     val orders = Tables.load(spark, sfDir, "orders")
     val base = canon(orders)
-    val dir = Files.createTempDirectory("graft-formats").toString
+    val dir = tempDir("graft-formats")
     FileSources.formats.foreach { fmt =>
       FileSources.write(orders, s"$dir/$fmt", fmt)
       val back = FileSources.read(spark, s"$dir/$fmt", fmt, orders.schema)
@@ -27,7 +26,7 @@ class FileSourcesSpec extends SparkSpec {
 
   test("events (timestamps + json strings) round-trip through orc and json") {
     val events = Tables.load(spark, sfDir, "events")
-    val dir = Files.createTempDirectory("graft-formats-ev").toString
+    val dir = tempDir("graft-formats-ev")
     Seq("orc", "json").foreach { fmt =>
       FileSources.write(events, s"$dir/$fmt", fmt)
       val back = FileSources.read(spark, s"$dir/$fmt", fmt, events.schema)
@@ -59,7 +58,7 @@ class FileSourcesSpec extends SparkSpec {
   }
 
   test("partition pruning: planning-time (static) and runtime (dynamic)") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part")
     val orders = Tables.load(spark, sfDir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     FileSources.writePartitioned(orders, s"$dir/orders_p", Seq("o_year"))
@@ -90,7 +89,7 @@ class FileSourcesSpec extends SparkSpec {
   }
 
   test("zstd-compressed parquet round-trips and shrinks the files") {
-    val dir = Files.createTempDirectory("graft-codec").toString
+    val dir = tempDir("graft-codec")
     val li = Tables.load(spark, sfDir, "lineitem")
     FileSources.write(li, s"$dir/plain", "parquet", codec = "uncompressed")
     FileSources.write(li, s"$dir/zstd", "parquet", codec = "zstd")

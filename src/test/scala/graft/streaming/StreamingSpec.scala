@@ -15,7 +15,7 @@ class StreamingSpec extends SparkSpec {
 
   /** sf0.001 events split into per-day parquet batch files. */
   private lazy val batchDir: String = {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream")
     val ev = Tables.load(spark, sfDir, "events")
     ev.withColumn("day", dayofmonth(col("ts")))
       .repartition(col("day"))
@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermark drops late rows in append mode") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-late").toString
+    val dir = tempDir("graft-late")
     val in = s"$dir/in"; new java.io.File(in).mkdirs()
     def write(name: String, rows: Seq[(Long, String, Long, String, Double, String)]): Unit =
       rows.toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
@@ -178,7 +178,7 @@ class StreamingSpec extends SparkSpec {
 
   test("in-stream exact dedup by event_id") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dedup").toString
+    val dir = tempDir("graft-dedup")
     val in = s"$dir/in"; new java.io.File(in).mkdirs()
     val rows = Seq(
       (1L, "2024-01-10 10:00:00", 1L, "click", 1.0, "{}"),
@@ -211,7 +211,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed query restart processes only new files") {
-    val dir = Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt")
     val in = s"$dir/in"; new java.io.File(in).mkdirs()
     val ckpt = s"$dir/ckpt"
     val ev = Tables.load(spark, sfDir, "events")
@@ -245,7 +245,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch parquet sink captures the whole replay, idempotently") {
-    val dir = Files.createTempDirectory("graft-fb").toString
+    val dir = tempDir("graft-fb")
     val stream = StreamingOps.dedupStream(StreamingOps.readEventStream(spark, batchDir))
     StreamingOps.runToParquet(stream, s"$dir/out", s"$dir/ckpt")
     val written = spark.read.parquet(s"$dir/out")
@@ -509,7 +509,7 @@ class StreamingSpec extends SparkSpec {
     // round 12 (fourth twin family): the per-score census is the
     // ranking-quality battery's sufficient statistic — one live
     // Complete-mode state, four readouts of the model monitor
-    val dir = Files.createTempDirectory("graft-events-score").toString
+    val dir = tempDir("graft-events-score")
     Tables.load(spark, sfDir, "events")
       .repartition(4) // several files = several source-arrival batches
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -539,7 +539,7 @@ class StreamingSpec extends SparkSpec {
     // round 11: the urgent-vs-rest value census is the two-sample
     // battery's sufficient statistic — one live Complete-mode state,
     // here read out to the pocket test and the integrated-ECDF test
-    val dir = Files.createTempDirectory("graft-orders-2s").toString
+    val dir = tempDir("graft-orders-2s")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -587,7 +587,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained drift-count state finishes to batch q_ks_drift exactly") {
-    val dir = Files.createTempDirectory("graft-docs").toString
+    val dir = tempDir("graft-docs")
     Tables.load(spark, sfDir, "documents")
       .repartition(4) // several files = several source-arrival batches
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -621,7 +621,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained PSI census finishes to batch q_psi exactly") {
-    val dir = Files.createTempDirectory("graft-psi").toString
+    val dir = tempDir("graft-psi")
     Tables.load(spark, sfDir, "events")
       .repartition(4) // several files = several source-arrival batches
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -643,7 +643,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained log-loss census finishes to batch q_log_loss exactly") {
-    val dir = Files.createTempDirectory("graft-logloss").toString
+    val dir = tempDir("graft-logloss")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -661,7 +661,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained confusion census finishes to batch q_confusion_multi exactly") {
-    val dir = Files.createTempDirectory("graft-confusion").toString
+    val dir = tempDir("graft-confusion")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -679,7 +679,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained McNemar census finishes to batch q_mcnemar exactly") {
-    val dir = Files.createTempDirectory("graft-mcnemar").toString
+    val dir = tempDir("graft-mcnemar")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -697,7 +697,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained decay census finishes to batch q_decayed_popularity exactly") {
-    val dir = Files.createTempDirectory("graft-decay").toString
+    val dir = tempDir("graft-decay")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -715,7 +715,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained ANOVA census finishes to batch q_anova exactly") {
-    val dir = Files.createTempDirectory("graft-anova").toString
+    val dir = tempDir("graft-anova")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -735,7 +735,7 @@ class StreamingSpec extends SparkSpec {
   test("drained ANOVA census finishes to batch q_tukey_hsd exactly") {
     // the SAME streaming state serves the omnibus F and the post-hoc
     // pair table — one live census, two readouts
-    val dir = Files.createTempDirectory("graft-tukey").toString
+    val dir = tempDir("graft-tukey")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -753,7 +753,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained effect-size census finishes to batch q_effect_sizes exactly") {
-    val dir = Files.createTempDirectory("graft-effect").toString
+    val dir = tempDir("graft-effect")
     Tables.load(spark, sfDir, "customer")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -772,7 +772,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained calibration census finishes to batch q_calibration exactly") {
-    val dir = Files.createTempDirectory("graft-calib").toString
+    val dir = tempDir("graft-calib")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -794,7 +794,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained lang-drift state finishes to batch q_tvd_drift exactly") {
-    val dir = Files.createTempDirectory("graft-docs-tvd").toString
+    val dir = tempDir("graft-docs-tvd")
     Tables.load(spark, sfDir, "documents")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -814,7 +814,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained day census finishes to batch q_changepoint exactly") {
-    val dir = Files.createTempDirectory("graft-orders-cusum").toString
+    val dir = tempDir("graft-orders-cusum")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -840,7 +840,7 @@ class StreamingSpec extends SparkSpec {
     // same Complete-mode discipline as the CUSUM twin: the per-day
     // revenue census is the mergeable state, the trailing-7 median is
     // pure finishing arithmetic — all-integer, so drain ≡ batch
-    val dir = Files.createTempDirectory("graft-orders-med").toString
+    val dir = tempDir("graft-orders-med")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -866,7 +866,7 @@ class StreamingSpec extends SparkSpec {
     // prefix walk and the Bartels RVN integers are all deterministic
     // finishing arithmetic over the drained census, so drain ≡ batch
     // bit-for-bit at any trigger.
-    val dir = Files.createTempDirectory("graft-orders-rank").toString
+    val dir = tempDir("graft-orders-rank")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -902,7 +902,7 @@ class StreamingSpec extends SparkSpec {
     // state, two readouts — the ANOVA/Tukey discipline): quantile
     // selection + dec38 loss masses are pure finishing arithmetic over
     // the drained state, integer-exact until the display division
-    val dir = Files.createTempDirectory("graft-orders-pinball").toString
+    val dir = tempDir("graft-orders-pinball")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -922,7 +922,7 @@ class StreamingSpec extends SparkSpec {
   test("drained error census finishes to batch q_error_burn exactly") {
     // per-day (total, errors) Complete-mode state; exact counts, so the
     // trailing-7 burn-rate finish is bit-equal to batch at any trigger
-    val dir = Files.createTempDirectory("graft-events-err").toString
+    val dir = tempDir("graft-events-err")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -945,7 +945,7 @@ class StreamingSpec extends SparkSpec {
   test("drained feed census finishes to batch q_calendar_gaps AND q_freshness") {
     // ONE Complete-mode (priority, day) state, TWO readouts — the
     // chi2/tvd shared-census discipline applied to ingest monitoring
-    val dir = Files.createTempDirectory("graft-orders-feed").toString
+    val dir = tempDir("graft-orders-feed")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -974,7 +974,7 @@ class StreamingSpec extends SparkSpec {
   test("drained lang census finishes to batch q_chi2 exactly") {
     // the SAME Complete-mode (source, lang) census state as the TVD
     // twin, finished through the chi2 lens — one state, two readouts
-    val dir = Files.createTempDirectory("graft-docs-chi2").toString
+    val dir = tempDir("graft-docs-chi2")
     Tables.load(spark, sfDir, "documents")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -997,7 +997,7 @@ class StreamingSpec extends SparkSpec {
     // the THIRD readout of the same Complete-mode (source, lang)
     // census state (tvd → chi2 → G log-likelihood ratio) — one live
     // state, three batch-exact lenses
-    val dir = Files.createTempDirectory("graft-docs-gtest").toString
+    val dir = tempDir("graft-docs-gtest")
     Tables.load(spark, sfDir, "documents")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1160,7 +1160,7 @@ class StreamingSpec extends SparkSpec {
     // exactly-once-by-idempotence contract of runToParquet) — so the
     // final sink holds every input event exactly once.
     import org.apache.spark.sql.streaming.Trigger
-    val dir = Files.createTempDirectory("graft-kill").toString
+    val dir = tempDir("graft-kill")
     val in = s"$dir/in"
     val ev = Tables.load(spark, sfDir, "events")
     val total = ev.count()
@@ -1202,7 +1202,7 @@ class StreamingSpec extends SparkSpec {
     // the live privacy monitor: the equivalence-class census is
     // Complete-mode state bounded by the quasi-id combo space; exact
     // counts, so the k<5 violator readout is bit-equal to batch
-    val dir = Files.createTempDirectory("graft-cust-kanon").toString
+    val dir = tempDir("graft-cust-kanon")
     Tables.load(spark, sfDir, "customer")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1223,7 +1223,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained power-sum census finishes to batch q_jarque_bera exactly") {
-    val dir = Files.createTempDirectory("graft-cust-jb").toString
+    val dir = tempDir("graft-cust-jb")
     Tables.load(spark, sfDir, "customer")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1242,7 +1242,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("drained arrival census finishes to batch q_poisson_dispersion exactly") {
-    val dir = Files.createTempDirectory("graft-pois").toString
+    val dir = tempDir("graft-pois")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1264,7 +1264,7 @@ class StreamingSpec extends SparkSpec {
     // third readout of the medianCounts Complete-mode state (after
     // rolling-median): the d-7 backtest re-scores each trigger without
     // an order-history rescan; integer sums, so drain ≡ batch
-    val dir = Files.createTempDirectory("graft-orders-fcast").toString
+    val dir = tempDir("graft-orders-fcast")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1289,7 +1289,7 @@ class StreamingSpec extends SparkSpec {
     // rolling-median, forecast backtest): the live forecast-accuracy
     // monitor re-scores each trigger without an order-history rescan;
     // exact dec38 sums, so drain ≡ batch
-    val dir = Files.createTempDirectory("graft-orders-mase").toString
+    val dir = tempDir("graft-orders-mase")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1310,7 +1310,7 @@ class StreamingSpec extends SparkSpec {
     // FIFTH readout of the medianCounts Complete-mode state: the live
     // forecast-bias monitor re-scores each trigger without an
     // order-history rescan; exact dec38 sums, so drain ≡ batch
-    val dir = Files.createTempDirectory("graft-orders-ts").toString
+    val dir = tempDir("graft-orders-ts")
     Tables.load(spark, sfDir, "orders")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1331,7 +1331,7 @@ class StreamingSpec extends SparkSpec {
     // the live export manifest: counts/sums/XORs are order-free
     // mergeable state, so the drained 16-row census equals the batch
     // manifest bit-for-bit at any trigger
-    val dir = Files.createTempDirectory("graft-docs-shard").toString
+    val dir = tempDir("graft-docs-shard")
     Tables.load(spark, sfDir, "documents")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -1354,7 +1354,7 @@ class StreamingSpec extends SparkSpec {
     // the live parity monitor: the 5-row cohort confusion census is
     // all counts, so the drained state's rates and DP gaps equal the
     // batch audit bit-for-bit
-    val dir = Files.createTempDirectory("graft-events-fair").toString
+    val dir = tempDir("graft-events-fair")
     Tables.load(spark, sfDir, "events")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/in")
