@@ -25,9 +25,9 @@ object Bench {
       // the machine cost (r9: 35 driver-battery queries spiked >0.4 s
       // and all but four reverted in the same-binary close run). The
       // third rep bounds added wall time to the spiked minority. Each
-      // run is isolated from leftovers (Harness.measure drops what's
-      // droppable and GCs outside the timing). A query that throws in
-      // any run is reported as failed, never timed.
+      // run is isolated from leftovers (Harness.measure GCs outside the
+      // timing and releases the run's caches when its write ends). A
+      // query that throws in any run is reported as failed, never timed.
       def one() = Harness.measure(spark, name)(fn(spark, sfDir)).map(_.total)
       val times = for {
         t1 <- one()
@@ -51,7 +51,6 @@ object Bench {
     val writeDir = sys.env.getOrElse("SPARK_GRAFT_WRITE_DIR",
       "/tmp/graft_bench_write")
     val writeSec = (1 to 2).map { _ =>
-      spark.catalog.clearCache()
       System.gc()
       val t0 = System.nanoTime()
       try graft.ops.Relational.zorderRows(spark, sfDir)

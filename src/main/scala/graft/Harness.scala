@@ -14,10 +14,12 @@ import scala.jdk.CollectionConverters._
   * [[ScaleCheck]]): the bench session, its warm-up, the timed run, and a
   * listener that counts the work a run does.
   *
-  * A timed run drops cached data and collects garbage OUTSIDE the timing,
-  * then writes the query to the `noop` sink: every column of every row
-  * computes (a bare `count()` lets Catalyst prune most of the plan) while
-  * sink I/O stays out of the number.
+  * A timed run collects garbage OUTSIDE the timing, then builds the query
+  * and writes it to the `noop` sink in one [[ops.Artifacts.scoped]] block:
+  * every column of every row computes (a bare `count()` lets Catalyst
+  * prune most of the plan) while sink I/O stays out of the number, and
+  * every cache the query persists is released when the write ends, so no
+  * run inherits another's.
   */
 object Harness {
 
@@ -58,13 +60,13 @@ object Harness {
 
   /** One timed run of `build`: a failure, not a time, when it throws. Its
     * jobs are described `<label> build`, or `<label> execute` for the write,
-    * whose planning runs inside it.
+    * whose planning runs inside it. The build and the write share one
+    * [[ops.Artifacts.scoped]] block, which owns the query's caches.
     */
   def measure(spark: SparkSession, label: String)(
       build: => DataFrame): Either[Throwable, Run] = {
     val sc = spark.sparkContext
     val outer = sc.getLocalProperty("spark.job.description")
-    spark.catalog.clearCache()
     System.gc()
     val writes = new ConcurrentLinkedQueue[QueryExecution]()
     // the noop write plans in a nested command execution of its own,
@@ -77,12 +79,14 @@ object Harness {
     spark.listenerManager.register(planned)
     val t0 = System.nanoTime()
     try {
-      sc.setJobDescription(s"$label build")
-      val df = build
-      val t1 = System.nanoTime()
-      sc.setJobDescription(s"$label execute")
-      df.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
+      val (t1, t2) = ops.Artifacts.scoped {
+        sc.setJobDescription(s"$label build")
+        val df = build
+        val t1 = System.nanoTime()
+        sc.setJobDescription(s"$label execute")
+        df.write.format("noop").mode("overwrite").save()
+        (t1, System.nanoTime())
+      }
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
       val planMs = writes.asScala.toSeq.flatMap { qe =>
         Seq("optimization", "planning").flatMap(qe.tracker.phases.get)
@@ -167,12 +171,15 @@ object Harness {
     finally sc.removeSparkListener(c)
   }
 
-  /** The formatted physical plan, capped at `maxLines`: iterative queries
-    * print every cache's nested build plan, and the evidence is in the
-    * top operators and scans, which formatted mode prints first.
+  /** The formatted physical plan of `df`, capped at `maxLines`: iterative
+    * queries print every cache's nested build plan, and the evidence is in
+    * the top operators and scans, which formatted mode prints first. `df`
+    * is built and planned in one [[ops.Artifacts.scoped]] block, which
+    * releases the caches the query persists.
     */
-  def planText(df: DataFrame, maxLines: Int): String = {
-    val full = df.queryExecution.explainString(FormattedMode).trim
+  def planText(df: => DataFrame, maxLines: Int): String = {
+    val full = ops.Artifacts.scoped(
+      df.queryExecution.explainString(FormattedMode)).trim
     val lines = full.linesIterator.toSeq
     if (lines.size <= maxLines) full
     else lines.take(maxLines).mkString("\n") +

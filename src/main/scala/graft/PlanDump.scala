@@ -182,9 +182,8 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     picks.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-        .append(Harness.planText(df, 300))
+        .append(Harness.planText(SparkEntry.queries(name)(spark, sfDir), 300))
         .append("\n```\n")
     }
     sb.append("\n").append(live.substring(tailStart + 1))

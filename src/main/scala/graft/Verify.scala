@@ -25,8 +25,9 @@ object Verify {
       .foreach { case (name, fn) =>
       // a query that throws must leave no result, not an earlier run's
       graft.ops.Artifacts.reap(Seq(s"$outDir/$name"), Nil)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // one scope per query: the caches it persists go when its write ends
+      try graft.ops.Artifacts.scoped(fn(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -100,8 +100,8 @@ object Approx {
     // estimate fails the hash gate, not just the spec.
     Q("q_overlap_sketch",
       (s, dir) => {
-        val ut = t(s, dir, "events")
-          .select("user_id", "event_type").distinct().persist()
+        val ut = Artifacts.persist(t(s, dir, "events")
+          .select("user_id", "event_type").distinct())
         // sketches read the SAME persisted pair census (HLL insertion
         // is duplicate-insensitive, so the estimates are byte-identical
         // to raw-stream sketches) — readout pays zero parquet scans
@@ -173,7 +173,6 @@ object Approx {
             s"""aggregate(filter(split(token, ''), ch -> ch <> ''),
                 0L, (acc, ch) -> (acc * 31 + ascii(ch)) % ${P}L"""
               + ")"))
-          .persist()
         val params = array(
           struct(lit(0).as("r"), lit(31L).as("a"), lit(7L).as("b")),
           struct(lit(1).as("r"), lit(131L).as("a"), lit(911L).as("b")),
@@ -248,15 +247,14 @@ object Approx {
       (s, dir) => {
         val P = 1000000007L
         val k = 256
-        val hashes = t(s, dir, "documents")
+        val hashes = Artifacts.persist(t(s, dir, "documents")
           .select(explode(expr("filter(split(text, ' '), x -> x <> '')"))
             .as("token"))
           .distinct()
           .withColumn("h", expr(
             s"""aggregate(filter(split(token, ''), ch -> ch <> ''),
                 0L, (acc, ch) -> (acc * 31 + ascii(ch)) % ${P}L"""
-              + ")"))
-          .persist()
+              + ")")))
         val nExact = hashes.agg(count(lit(1)).cast("long").as("n_exact"),
           countDistinct(col("h")).cast("long").as("n_h"))
         val kth = hashes.select("h").distinct()
@@ -341,9 +339,8 @@ object Approx {
     // gate, not just the spec.
     Q("q_sketch_rollup",
       (s, dir) => {
-        val base = t(s, dir, "orders")
-          .select("o_orderpriority", "o_orderstatus", "o_custkey")
-          .persist()
+        val base = Artifacts.persist(t(s, dir, "orders")
+          .select("o_orderpriority", "o_orderstatus", "o_custkey"))
         val est = sketchRollupEstFrom(base)
         val exact = base
           .rollup("o_orderpriority", "o_orderstatus")

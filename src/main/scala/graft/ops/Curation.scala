@@ -147,8 +147,8 @@ object Curation {
     // catalog-bounded (sources × langs), so caching it is free; the n
     // action below is what materializes it, so the corpus is scanned
     // exactly once per drift query.
-    val counts = counts0.select(col("source"), col("lang"),
-      col("a").cast("long").as("a")).persist()
+    val counts = Artifacts.persist(counts0.select(col("source"), col("lang"),
+      col("a").cast("long").as("a")))
     val n = counts.agg(sum(col("a"))).head.getLong(0)
     val perSrc = counts.groupBy("source").agg(sum(col("a")).as("n_src"))
     val perLang = counts.groupBy("lang").agg(sum(col("a")).as("n_lang"))
@@ -219,8 +219,8 @@ object Curation {
     * exactly once per drift query — the [[tvdFinish]] discipline).
     */
   private def ecdfGaps(counts0: DataFrame): (DataFrame, Long) = {
-    val counts = counts0.select(col("source"), col("v"),
-      col("c").cast("long").as("c")).persist()
+    val counts = Artifacts.persist(counts0.select(col("source"), col("v"),
+      col("c").cast("long").as("c")))
     val n = counts.agg(sum(col("c")).cast("long")).head.getLong(0)
     val grid = counts.select("source").distinct()
       .crossJoin(counts.select("v").distinct())
@@ -253,8 +253,8 @@ object Curation {
   def chi2Finish(counts0: DataFrame): DataFrame = {
     // persist: the census feeds n, per-source, per-lang, dims, AND the
     // cell join — five consumers; materialized once by the n action.
-    val counts = counts0.select(col("source"), col("lang"),
-      col("a").cast("long").as("o")).persist()
+    val counts = Artifacts.persist(counts0.select(col("source"), col("lang"),
+      col("a").cast("long").as("o")))
     val n = counts.agg(sum(col("o"))).head.getLong(0)
     val perSrc = counts.groupBy("source").agg(sum(col("o")).as("r"))
     val perLang = counts.groupBy("lang").agg(sum(col("o")).as("c"))
@@ -301,8 +301,8 @@ object Curation {
   def gTestFinish(counts0: DataFrame): DataFrame = {
     // persist: the census feeds n, per-source, per-lang and the cell
     // join — four consumers; materialized once by the n action
-    val counts = counts0.select(col("source"), col("lang"),
-      col("a").cast("long").as("o")).persist()
+    val counts = Artifacts.persist(counts0.select(col("source"), col("lang"),
+      col("a").cast("long").as("o")))
     val n = counts.agg(sum(col("o"))).head.getLong(0)
     val perSrc = counts.groupBy("source").agg(sum(col("o")).as("r"))
     val perLang = counts.groupBy("lang").agg(sum(col("o")).as("c"))
@@ -429,16 +429,12 @@ object Curation {
     // bigrams and are excluded (same rows both engines).
     Q("q_novelty",
       (s, dir) => {
-        // persist: the (doc, bigram) stream feeds the df census AND the
-        // rejoin — un-persisted, the corpus explode ran twice (the
-        // q_tfidf materialize-the-matrix discipline)
         val bg = t(s, dir, "documents")
           .select(col("doc_id"), split(col("text"), " ").as("toks"))
           .filter(size(col("toks")) >= 2)
           .select(col("doc_id"), explode(array_distinct(expr(
             """transform(sequence(0, size(toks) - 2),
                  i -> concat_ws(' ', toks[i], toks[i+1]))"""))).as("bigram"))
-          .persist()
         val df = bg.groupBy("bigram").agg(count(lit(1)).as("df"))
         bg.join(df, "bigram")
           .groupBy("doc_id")
@@ -782,8 +778,8 @@ object Curation {
     // clamp join is a size-gated broadcast.
     Q("q_winsorize",
       (s, dir) => {
-        val base = t(s, dir, "orders")
-          .select("o_orderpriority", "o_totalprice").persist()
+        val base = Artifacts.persist(t(s, dir, "orders")
+          .select("o_orderpriority", "o_totalprice"))
         val th = RangeRank.groupValuesAtRanks(base,
           Seq("o_orderpriority"), "o_totalprice",
           Seq(RangeRank.RankPick("p05", n => ceil(n * 0.05)),
@@ -881,11 +877,8 @@ object Curation {
     // integers.
     Q("q_class_weights",
       (s, dir) => {
-        // persist: the ≤k-row class census feeds its own totals AND the
-        // weight projection — cached, the embeddings scan runs once
         val lab = t(s, dir, "embeddings")
           .groupBy("label").agg(count(lit(1)).as("n_class"))
-          .persist()
         val tot = lab.agg(sum(col("n_class")).cast("long").as("n_total"),
           count(lit(1)).as("k"))
         lab.crossJoin(broadcast(tot))
@@ -921,7 +914,7 @@ object Curation {
         // scalar; the 12.5 M-pair fan-out + shuffle now lives in the
         // SHARED pair-core artifact (one build serves also_bought,
         // adamic_adar and preferential_attachment)
-        val b = alsoBoughtBaskets(s, dir).persist()
+        val b = Artifacts.persist(alsoBoughtBaskets(s, dir))
         val pc = basketPairCore(s, dir)
           .select(expr("pk div 4294967296L").as("s1"),
             (col("pk") % 4294967296L).as("s2"),
@@ -1124,9 +1117,8 @@ object Curation {
     Q("q_hellinger_drift",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val counts = tvdCounts(t(s, dir, "documents"))
-          .select(col("source"), col("lang"), col("a").cast("long").as("a"))
-          .persist()
+        val counts = Artifacts.persist(tvdCounts(t(s, dir, "documents"))
+          .select(col("source"), col("lang"), col("a").cast("long").as("a")))
         val n = counts.agg(sum(col("a"))).head.getLong(0)
         val perSrc = counts.groupBy("source").agg(sum(col("a")).as("n_src"))
         val perLang = counts.groupBy("lang").agg(sum(col("a")).as("n_lang"))
@@ -1570,10 +1562,9 @@ object Curation {
     // un-hinted on the shingle key, and collapses to ONE row per n.
     Q("q_contamination_sweep",
       (s, dir) => {
-        val toks = t(s, dir, "documents")
+        val toks = Artifacts.persist(t(s, dir, "documents")
           .select(col("doc_id"),
-            expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
-          .persist()
+            expr("filter(split(text, ' '), x -> x <> '')").as("toks")))
         val total = toks.filter(col("doc_id") % 50 =!= 3)
           .agg(count(lit(1)).cast("long").as("n_corpus"))
           .localCheckpoint(false)
@@ -1952,9 +1943,8 @@ object Curation {
     // and 1e-12 is far below the statistic's meaningful precision.
     Q("q_js_drift",
       (s, dir) => {
-        val census = t(s, dir, "documents")
-          .groupBy("source", "lang").agg(count(lit(1)).as("c"))
-          .persist()
+        val census = Artifacts.persist(t(s, dir, "documents")
+          .groupBy("source", "lang").agg(count(lit(1)).as("c")))
         val n = census.agg(sum(col("c"))).head.getLong(0)
         val perSrc = census.groupBy("source").agg(sum(col("c")).as("ns"))
         val perLang = census.groupBy("lang").agg(sum(col("c")).as("nl"))
@@ -2052,11 +2042,10 @@ object Curation {
     Q("q_lexicon_hits",
       (s, dir) => {
         val lex = Seq("slow", "leak", "drop", "crash")
-        val hits = t(s, dir, "documents")
+        val hits = Artifacts.persist(t(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             explode(split(col("text"), " ")).as("tok"))
-          .filter(col("tok").isin(lex: _*))
-          .persist()
+          .filter(col("tok").isin(lex: _*)))
         hits.groupBy("source", "tok")
           .agg(count(lit(1)).as("n_occur"),
             countDistinct(col("doc_id")).as("n_docs"))
@@ -2087,10 +2076,9 @@ object Curation {
     // per-row division at the tail.
     Q("q_corpus_report",
       (s, dir) => {
-        val base = t(s, dir, "documents")
+        val base = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"), col("lang"), col("n_chars"),
-            md5(col("text")).as("h"))
-          .persist()
+            md5(col("text")).as("h")))
         val vol = base.groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
         val langs = base.groupBy("source", "lang")
@@ -2262,11 +2250,10 @@ object Curation {
     // persisted projection co-partitioned on the prefix key.
     Q("q_doc_prefix_dup",
       (s, dir) => {
-        val pre = t(s, dir, "documents")
+        val pre = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"),
             array_join(slice(split(col("text"), " "), 1, 8), " ")
-              .as("prefix"))
-          .persist()
+              .as("prefix")))
         val cls = pre.groupBy("prefix").agg(count(lit(1)).as("class_n"))
         pre.join(cls, "prefix")
           .groupBy("source")
@@ -2307,11 +2294,10 @@ object Curation {
       (s, dir) => {
         val bucket = expr(
           "pmod((doc_id % 2147483648) * 2654435761, 4294967296) % 100")
-        val cells = t(s, dir, "documents")
+        val cells = Artifacts.persist(t(s, dir, "documents")
           .select(when(bucket < 80, "train").when(bucket < 90, "val")
             .otherwise("test").as("split"), col("lang"))
-          .groupBy("split", "lang").agg(count(lit(1)).as("n"))
-          .persist()
+          .groupBy("split", "lang").agg(count(lit(1)).as("n")))
         val spl = cells.groupBy("split").agg(sum(col("n")).as("n_split"))
         val lng = cells.groupBy("lang").agg(sum(col("n")).as("n_lang"))
         val tot = cells.agg(sum(col("n")).as("n_all"))
@@ -2362,13 +2348,12 @@ object Curation {
     // 3-literal joins — exact integers to the one share division.
     Q("q_filter_impact_curve",
       (s, dir) => {
-        val cen = t(s, dir, "documents")
+        val cen = Artifacts.persist(t(s, dir, "documents")
           .select(size(filter(split(col("text"), " "), x => x =!= ""))
             .cast("long").as("len"))
           .groupBy("len").agg(count(lit(1)).as("n_docs"))
           .select(col("len"), col("n_docs"),
-            (col("len") * col("n_docs")).as("toks"))
-          .persist()
+            (col("len") * col("n_docs")).as("toks")))
         val tot = cen.agg(sum(col("n_docs")).as("all_docs"),
           sum(col("toks")).as("all_toks"))
         val cuts = cen.sparkSession.range(1)
@@ -2417,10 +2402,9 @@ object Curation {
     // IEEE subtractions — bit-stable in both engines.
     Q("q_interaction_effects",
       (s, dir) => {
-        val cells = t(s, dir, "documents")
+        val cells = Artifacts.persist(t(s, dir, "documents")
           .groupBy("lang", "source")
-          .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s"))
-          .persist()
+          .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s")))
         val perLang = cells.groupBy("lang")
           .agg((sum(col("s")).cast("double") / sum(col("n")).cast("double"))
             .as("m_lang"))
@@ -2542,13 +2526,12 @@ object Curation {
     Q("q_doc_anomaly_chi2",
       (s, dir) => {
         val wd = Window.partitionBy("doc_id")
-        val cen = t(s, dir, "documents")
+        val cen = Artifacts.persist(t(s, dir, "documents")
           .select(col("doc_id"),
             explode(split(lower(col("text")), "")).as("ch"))
           .filter(col("ch").rlike("^[a-z]$"))
           .groupBy("doc_id", "ch")
-          .agg(count(lit(1)).cast("long").as("c"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("c")))
         val prof = cen.groupBy("ch")
           .agg(sum(col("c")).cast("long").as("cc"))
           .crossJoin(broadcast(
@@ -2623,10 +2606,9 @@ object Curation {
     // stays an exact long, the share is one IEEE division.
     Q("q_contribution_clipping",
       (s, dir) => {
-        val cen = t(s, dir, "events")
+        val cen = Artifacts.persist(t(s, dir, "events")
           .groupBy("user_id")
-          .agg(count(lit(1)).cast("long").as("n_u"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("n_u")))
         val ks = cen.sparkSession.range(0, 6)
           .select(expr("shiftleft(CAST(1 AS BIGINT), CAST(id AS INT))")
             .cast("long").as("k"))
@@ -2672,12 +2654,11 @@ object Curation {
     // effective upsampling = p_s/share_s is row-local IEEE.
     Q("q_temperature_mix",
       (s, dir) => {
-        val cen = t(s, dir, "documents")
+        val cen = Artifacts.persist(t(s, dir, "documents")
           .groupBy("source")
           .agg(count(lit(1)).cast("long").as("n_docs"),
             sum(col("n_chars")).cast("long").as("chars"))
-          .withColumn("sq", round(sqrt(col("chars").cast("double")), 12))
-          .persist()
+          .withColumn("sq", round(sqrt(col("chars").cast("double")), 12)))
         val z = cen.agg(
           expr("""aggregate(array_sort(collect_list(struct(source, sq))),
                   CAST(0 AS DOUBLE), (a, x) -> a + x.sq)""").as("z"),

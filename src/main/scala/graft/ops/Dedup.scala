@@ -1107,7 +1107,7 @@ object Dedup {
           }
           round((lit(1.0) - tb) * 1e12, 0).cast("decimal(38,0)")
         }
-        val wide = base.select(col("hi"),
+        val wide = Artifacts.persist(base.select(col("hi"),
           pcand(col("j2"), 32).as("p2"),
           pcand(col("j4"), 16).as("p4"),
           pcand(col("j8"), 8).as("p8"))
@@ -1115,8 +1115,7 @@ object Dedup {
             sum(col("hi")).cast("long").as("n_hi"),
             sum(col("p2")).as("e2"), sum(col("p2") * col("hi")).as("h2"),
             sum(col("p4")).as("e4"), sum(col("p4") * col("hi")).as("h4"),
-            sum(col("p8")).as("e8"), sum(col("p8") * col("hi")).as("h8"))
-          .persist()
+            sum(col("p8")).as("e8"), sum(col("p8") * col("hi")).as("h8")))
         def row(r: Int, b: Int, e: String, h: String) = wide.select(
           lit(r.toLong).as("r"), lit(b.toLong).as("b"),
           col("n_pairs"), col("n_hi"),

@@ -519,15 +519,14 @@ object EventTime {
           .select(col("nxt").as("ta"), col("cur").as("tb"),
             col("c").as("n_ba"))
         // persist: the grid feeds the fold AND the output projection
-        val grid = ab.join(ba, Seq("ta", "tb"), "full")
+        val grid = Artifacts.persist(ab.join(ba, Seq("ta", "tb"), "full")
           .select(col("ta"), col("tb"),
             coalesce(col("n_ab"), lit(0L)).as("n_ab"),
             coalesce(col("n_ba"), lit(0L)).as("n_ba"))
           .withColumn("term",
             ((col("n_ab") - col("n_ba")) * (col("n_ab") - col("n_ba")))
               .cast("double")
-              / (col("n_ab") + col("n_ba")).cast("double"))
-          .persist()
+              / (col("n_ab") + col("n_ba")).cast("double")))
         val tot = grid.agg(
           expr("""aggregate(array_sort(collect_list(struct(ta, tb, term))),
                     CAST(0 AS DOUBLE), (a, x) -> a + x.term)""")
@@ -1155,11 +1154,10 @@ object EventTime {
         // read the spine — un-cached, each re-pays the orders scan
         // (guard-caught; zero-filled days contribute 0 to S and Q2, so
         // the spine's moments equal the census's)
-        val dense = s.range(minD, maxD + 1)
+        val dense = Artifacts.persist(s.range(minD, maxD + 1)
           .select(col("id").as("d"))
           .join(counts, Seq("d"), "left")
-          .select(col("d"), coalesce(col("x"), lit(0L)).as("x"))
-          .persist()
+          .select(col("d"), coalesce(col("x"), lit(0L)).as("x")))
         val moments = dense.agg(
           sum(col("x")).cast(dec38).as("s1"),
           sum(col("x").cast(dec38) * col("x")).as("q2"))
@@ -1224,7 +1222,7 @@ object EventTime {
     // sums exact BIGINTs over the calendar-bounded dense day spine.
     // The 10-term Σ r²/(n−k) is a pinned sorted fold (every input
     // bit-identical across engines, so the fold is too). Scale shape:
-    // one orders scan collapses to the persisted ≤|days| census; spine,
+    // one orders scan collapses to the ≤|days| census; spine,
     // lag joins, and the fold are calendar-bounded.
     Q("q_ljung_box",
       (s, dir) => {
@@ -1232,7 +1230,6 @@ object EventTime {
           .select(datediff(col("o_orderdate").cast("date"),
             lit("1970-01-01").cast("date")).cast("long").as("d"))
           .groupBy("d").agg(count(lit(1)).cast("long").as("x"))
-          .persist()
         val stats = counts.agg(min(col("d")), max(col("d")),
           sum(col("x"))).head
         val (minD, maxD) = (stats.getLong(0), stats.getLong(1))
@@ -1655,7 +1652,7 @@ object EventTime {
     // exact-integer SUMS (Σ|a−f| / Σ(a+f)) — one IEEE division per
     // month, unlike per-day MAPE whose FP fold order would drift.
     Q("q_forecast_eval",
-      (s, dir) => forecastFinish(medianDaily(t(s, dir, "orders")).persist()),
+      (s, dir) => forecastFinish(Artifacts.persist(medianDaily(t(s, dir, "orders")))),
       Some("""WITH days AS (
                 SELECT date_trunc('day', o_orderdate) AS day,
                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100
@@ -2034,13 +2031,12 @@ object EventTime {
     // construction (the three cases partition the census row).
     Q("q_growth_accounting",
       (s, dir) => {
-        val uw = t(s, dir, "events")
+        val uw = Artifacts.persist(t(s, dir, "events")
           .select(col("user_id").as("u"), date_trunc("week", col("ts")).as("w"))
-          .distinct()
+          .distinct())
           // the census feeds the first-week frame, the shifted self-join
           // (both sides) and the churn anti-join — persist or pay four
           // event scans
-          .persist()
         val first = uw.groupBy("u").agg(min(col("w")).as("w0"))
         val prev = uw.select(col("u"), expr("w + interval 7 days").as("w"),
           lit(1).as("was_prev"))
@@ -2116,10 +2112,9 @@ object EventTime {
     Q("q_stickiness",
       (s, dir) => {
         // the (user, day) census feeds the DAU census and both fan-outs
-        val ud = t(s, dir, "events")
+        val ud = Artifacts.persist(t(s, dir, "events")
           .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
-          .distinct()
-          .persist()
+          .distinct())
         val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
         def trailing(days: Int, name: String) = ud
           .select(explode(expr(
@@ -3513,10 +3508,9 @@ object EventTime {
     // calendar × key-vocabulary frame.
     Q("q_payload_key_drift",
       (s, dir) => {
-        val base = t(s, dir, "events")
+        val base = Artifacts.persist(t(s, dir, "events")
           .select(date_trunc("week", col("ts")).cast("date").as("week"),
-            expr("json_object_keys(props)").as("ks"))
-          .persist()
+            expr("json_object_keys(props)").as("ks")))
         val wk = base.groupBy("week").agg(count(lit(1)).as("n_week"))
         val cells = base
           .select(col("week"), explode(col("ks")).as("key"))
@@ -3628,15 +3622,14 @@ object EventTime {
     // and total occurrences.
     Q("q_sequence_motifs",
       (s, dir) => {
-        val seqs = t(s, dir, "events")
+        val seqs = Artifacts.persist(t(s, dir, "events")
           .select(col("user_id"),
             struct(unix_micros(col("ts")).as("us"),
               col("event_id"), substring(col("event_type"), 1, 1).as("i"))
               .as("e"))
           .groupBy("user_id")
           .agg(array_join(transform(sort_array(collect_list(col("e"))),
-            x => x.getField("i")), "").as("seq"))
-          .persist()
+            x => x.getField("i")), "").as("seq")))
         seqs
           .select(col("user_id"),
             explode(array(lit("vp"), lit("ee"), lit("vvv"), lit("svp")))
@@ -3976,7 +3969,7 @@ object EventTime {
     // only FP is the final ÷2^62 (exact) and ÷100 readouts — no
     // transcendental exp(), no fold-order drift.
     Q("q_decayed_popularity",
-      (s, dir) => decayFinish(decayCensus(t(s, dir, "events")).persist()),
+      (s, dir) => decayFinish(Artifacts.persist(decayCensus(t(s, dir, "events")))),
       Some("""WITH cen AS (
                 SELECT event_type, CAST(ts AS DATE) AS d,
                   CAST(count(*) AS BIGINT) AS n,
@@ -4116,14 +4109,13 @@ object EventTime {
         val wd = Window.orderBy("d")
         val w7 = wd.rowsBetween(-6, 0)
         val wmax = wd.rowsBetween(Window.unboundedPreceding, 0)
-        val dd = t(s, dir, "orders")
+        val dd = Artifacts.persist(t(s, dir, "orders")
           .select(datediff(col("o_orderdate").cast("date"),
             lit("1970-01-01").cast("date")).cast("long").as("d"))
           .groupBy("d").agg(count(lit(1)).cast("long").as("n"))
           .withColumn("s7", sum(col("n")).over(w7).cast("long"))
           .withColumn("peak", max(col("s7")).over(wmax).cast("long"))
-          .withColumn("dd", col("peak") - col("s7"))
-          .persist()
+          .withColumn("dd", col("peak") - col("s7")))
         dd.agg(max(col("dd")).cast("long").as("max_dd"))
           .crossJoin(dd.select(col("d"), col("dd"), col("s7"),
             col("peak")))
@@ -4173,13 +4165,12 @@ object EventTime {
     // doubles, and the word is a day-pinned ≤7-char assembly.
     Q("q_sax_weekly",
       (s, dir) => {
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(datediff(col("o_orderdate").cast("date"),
             lit("1970-01-01").cast("date")).cast("long").as("d"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
           .groupBy("d")
-          .agg(sum(col("cents").cast(DecimalType(38, 0))).as("y"))
-          .persist()
+          .agg(sum(col("cents").cast(DecimalType(38, 0))).as("y")))
         val mom = cen.agg(count(lit(1)).cast("long").as("n"),
           sum(col("y")).as("s1"), sum(col("y") * col("y")).as("s2"))
           .select(col("n"),
@@ -4320,12 +4311,11 @@ object EventTime {
     // one IEEE division.
     Q("q_user_turnover",
       (s, dir) => {
-        val du = t(s, dir, "events")
+        val du = Artifacts.persist(t(s, dir, "events")
           .select(datediff(col("ts").cast("date"),
             lit("1970-01-01").cast("date")).cast("long").as("d"),
             col("user_id"))
-          .distinct()
-          .persist()
+          .distinct())
         val act = du.groupBy("d")
           .agg(count(lit(1)).cast("long").as("n_active"))
         val ret = du.as("a")
@@ -4384,7 +4374,7 @@ object EventTime {
     // the readout one exact÷6 division. No sampling, no FP folds.
     Q("q_shapley_attribution",
       (s, dir) => {
-        val census = t(s, dir, "events")
+        val census = Artifacts.persist(t(s, dir, "events")
           .groupBy("user_id")
           .agg(
             max((col("event_type") === "view").cast("long")).as("fv"),
@@ -4395,15 +4385,13 @@ object EventTime {
           .filter(col("conv") === 1)
           .select((col("fv") + col("fc") * 2 + col("fs") * 4).as("mask"))
           .groupBy("mask")
-          .agg(count(lit(1)).cast("long").as("cnt"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("cnt")))
         val subsets = census.sparkSession.range(0, 8)
           .select(col("id").cast("long").as("ss"))
-        val v = subsets
+        val v = Artifacts.persist(subsets
           .join(census, expr("(mask & ss) = mask"), "left")
           .groupBy("ss")
-          .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long").as("v"))
-          .persist()
+          .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long").as("v")))
         val channels = census.sparkSession.range(0, 3)
           .select(expr("shiftleft(CAST(1 AS BIGINT), CAST(id AS INT))")
             .as("ch"),
@@ -4477,13 +4465,12 @@ object EventTime {
     // with exact integer abscissae log2(b) ∈ {3,4,5,6}.
     Q("q_hurst_exponent",
       (s, dir) => {
-        val days = t(s, dir, "orders")
+        val days = Artifacts.persist(t(s, dir, "orders")
           .select(datediff(col("o_orderdate").cast("date"),
             lit("1970-01-01").cast("date")).cast("long").as("d"))
           .groupBy("d").agg(count(lit(1)).cast("long").as("x"))
           .withColumn("r",
-            (row_number().over(Window.orderBy("d")) - 1).cast("long"))
-          .persist()
+            (row_number().over(Window.orderBy("d")) - 1).cast("long")))
         val bs = days.sparkSession.range(0, 4)
           .select(expr("shiftleft(CAST(8 AS BIGINT), CAST(id AS INT))")
             .as("b"))
@@ -4615,13 +4602,12 @@ object EventTime {
     // partial+final agg off the persisted ranked census.
     Q("q_haar_energy",
       (s, dir) => {
-        val days = t(s, dir, "orders")
+        val days = Artifacts.persist(t(s, dir, "orders")
           .select(datediff(col("o_orderdate").cast("date"),
             lit("1970-01-01").cast("date")).cast("long").as("d"))
           .groupBy("d").agg(count(lit(1)).cast("long").as("x"))
           .withColumn("r",
-            (row_number().over(Window.orderBy("d")) - 1).cast("long"))
-          .persist()
+            (row_number().over(Window.orderBy("d")) - 1).cast("long")))
         val n8 = days.agg(
           (expr("count(1) div 8") * 8).cast("long").as("n8"))
         val base = days.crossJoin(broadcast(n8))
@@ -4631,16 +4617,16 @@ object EventTime {
           .agg(sum(col("x")).cast("long").as("x"),
             sum(when(pmod(col("r"), lit(2)) === 0, col("x"))
               .otherwise(-col("x"))).cast("long").as("det"))
-        val l1 = level(base.select(col("r"), col("x"))).persist()
-        val l2 = level(l1.select(col("r"), col("x"))).persist()
+        val l1 = Artifacts.persist(level(base.select(col("r"), col("x"))))
+        val l2 = Artifacts.persist(level(l1.select(col("r"), col("x"))))
         val l3 = level(l2.select(col("r"), col("x")))
         def energy(df: DataFrame, lv: Int): DataFrame = df
           .agg(lit(lv).cast("long").as("level"),
             count(lit(1)).cast("long").as("n_coeffs"),
             sum(col("det").cast("decimal(38,0)") * col("det"))
               .as("energy"))
-        val e = energy(l1, 1).unionByName(energy(l2, 2))
-          .unionByName(energy(l3, 3)).persist()
+        val e = Artifacts.persist(energy(l1, 1).unionByName(energy(l2, 2))
+          .unionByName(energy(l3, 3)))
         val tot = e.agg(sum(col("energy")).as("etot"))
         e.crossJoin(broadcast(tot))
           .select(col("level"), col("n_coeffs"),
@@ -4708,7 +4694,7 @@ object EventTime {
       (s, dir) => {
         val wd = Window.orderBy("d")
           .rowsBetween(Window.unboundedPreceding, 0)
-        val walk = t(s, dir, "events")
+        val walk = Artifacts.persist(t(s, dir, "events")
           .select(col("ts").cast("date").as("d"),
             (col("event_type") === "purchase").cast("long").as("p"))
           .groupBy("d")
@@ -4720,8 +4706,7 @@ object EventTime {
             round(col("cs").cast("double")
               * log(lit(0.22) / lit(0.18))
               + (col("cn") - col("cs")).cast("double")
-                * log(lit(0.78) / lit(0.82)), 12).as("llr"))
-          .persist()
+                * log(lit(0.78) / lit(0.82)), 12).as("llr")))
         val fin = walk.orderBy(col("d").desc).limit(1)
           .select(col("d").as("last_day"), col("cn").as("n_events"),
             round(col("llr"), 6).as("final_llr"),
@@ -4795,7 +4780,7 @@ object EventTime {
     Q("q_cox_stuart",
       (s, dir) => {
         val wd = Window.orderBy("d")
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(
             expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
               .as("d"),
@@ -4805,8 +4790,7 @@ object EventTime {
             .cast("long").as("y"))
           .withColumn("rn", row_number().over(wd).cast("long"))
           .withColumn("n",
-            count(lit(1)).over(Window.partitionBy()).cast("long"))
-          .persist()
+            count(lit(1)).over(Window.partitionBy()).cast("long")))
         val m = expr("n div 2")
         val gap = expr("(n + 1) div 2")
         val pairs = cen.filter(col("rn") <= m)
@@ -4867,14 +4851,13 @@ object EventTime {
 
     Q("q_mann_kendall",
       (s, dir) => {
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(
             expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
               .as("d"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
           .groupBy("d")
-          .agg(sum(col("cents").cast(DecimalType(38, 0))).as("y"))
-          .persist()
+          .agg(sum(col("cents").cast(DecimalType(38, 0))).as("y")))
         val sStat = cen.as("a")
           .join(cen.select(col("d").as("d2"), col("y").as("y2")),
             col("d") < col("d2"))
@@ -4947,15 +4930,14 @@ object EventTime {
     Q("q_seasonal_mann_kendall",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(
             expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
               .as("d"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
           .groupBy("d")
           .agg(sum(col("cents").cast(DecimalType(38, 0))).as("y"))
-          .select(col("d"), (col("d") % 7).as("w"), col("y"))
-          .persist()
+          .select(col("d"), (col("d") % 7).as("w"), col("y")))
         val sStat = cen.as("a")
           .join(cen.select(col("d").as("d2"), col("w").as("w2"),
               col("y").as("y2")),
@@ -5033,7 +5015,7 @@ object EventTime {
     // 12-dec rounded IEEE ratios of exact integers.
     Q("q_theil_sen",
       (s, dir) => {
-        val cen = senDayCensus(s, dir).persist()
+        val cen = Artifacts.persist(senDayCensus(s, dir))
         // Median picks are conditional aggs over the pinned RANKED
         // slope census (round 13; the round-11 shared pair artifact
         // now carries its exclusive prefix): the median VALUES are
@@ -5052,11 +5034,10 @@ object EventTime {
             max(col("m")).as("n_pairs"))
           .select(((col("v1") + col("v2")) / 2.0).as("slope"),
             col("n_pairs"))
-        val residBase = cen.crossJoin(broadcast(slope))
+        val residBase = Artifacts.persist(cen.crossJoin(broadcast(slope))
           .select(col("n_pairs"), col("slope"),
             round(col("y").cast("double")
-              - col("slope") * col("d").cast("double"), 6).as("res"))
-          .persist()
+              - col("slope") * col("d").cast("double"), 6).as("res")))
         RangeRank.medianValues(residBase, "res", nName = "nd")
           .crossJoin(broadcast(residBase
             .groupBy("n_pairs", "slope").agg(count(lit(1)).as("__x"))
@@ -5194,7 +5175,7 @@ object EventTime {
       (s, dir) => {
         val wcum = Window.orderBy("d")
           .rowsBetween(Window.unboundedPreceding, 0)
-        val walk = t(s, dir, "events")
+        val walk = Artifacts.persist(t(s, dir, "events")
           .select(col("ts").cast("date").as("d"),
             (dec2(col("value")) * 100).cast("long").as("cents"))
           .groupBy("d")
@@ -5208,8 +5189,7 @@ object EventTime {
               .as("dev"))
           .withColumn("cum", sum(col("dev")).over(wcum))
           .withColumn("ph",
-            round(col("cum") - min(col("cum")).over(wcum), 6))
-          .persist()
+            round(col("cum") - min(col("cum")).over(wcum), 6)))
         val mx = walk.agg(max(col("ph")).as("max_ph"))
         val arg = walk.crossJoin(broadcast(mx))
           .filter(col("ph") === col("max_ph"))
@@ -5282,15 +5262,14 @@ object EventTime {
       (s, dir) => {
         val byUser = Window.partitionBy("user_id")
           .orderBy("ts", "event_id")
-        val trans = t(s, dir, "events")
+        val trans = Artifacts.persist(t(s, dir, "events")
           .select(col("user_id"), col("event_type").as("cur"),
             lead(col("event_type"), 1).over(byUser).as("nxt"))
           .filter(col("nxt").isNotNull)
           .groupBy("cur", "nxt")
           .agg(count(lit(1)).cast("long").as("cnt"))
           .withColumn("r",
-            sum(col("cnt")).over(Window.partitionBy("cur")).cast("long"))
-          .persist()
+            sum(col("cnt")).over(Window.partitionBy("cur")).cast("long")))
         val states = trans.select(col("cur").as("state")).distinct()
         val ns = states.agg(count(lit(1)).cast("long").as("k"))
         var pi = states.crossJoin(broadcast(ns))
@@ -5306,7 +5285,7 @@ object EventTime {
             .agg(sum(col("contrib")).cast("long").as("pi"))
             .select(col("st").as("state"), col("pi"))
         }
-        val piF = pi.persist()
+        val piF = Artifacts.persist(pi)
         val h = trans.join(piF, trans("cur") === piF("state"))
           .select(col("cur"), col("nxt"),
             round((col("pi").cast("double") / lit(1e12))
@@ -5318,7 +5297,7 @@ object EventTime {
                  struct(cur, nxt, term))),
                CAST(0 AS DOUBLE), (a, x) -> a + x.term)"""), 12)
             .as("entropy_rate"))
-        piF.crossJoin(broadcast(h))
+        pi.crossJoin(broadcast(h))
           .select(col("state"),
             round(col("pi").cast("double") / lit(1e12), 12)
               .as("stationary_p"),
@@ -5539,12 +5518,11 @@ object EventTime {
     Q("q_control_chart",
       (s, dir) => {
         val wd = Window.orderBy("d")
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(
             expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
               .as("d"))
-          .groupBy("d").agg(count(lit(1)).cast("long").as("x"))
-          .persist()
+          .groupBy("d").agg(count(lit(1)).cast("long").as("x")))
         val mom = cen.agg(count(lit(1)).cast("long").as("n"),
           sum(col("x")).cast("long").as("s1"),
           sum(col("x") * col("x")).cast("long").as("s2"))
@@ -5555,7 +5533,7 @@ object EventTime {
               - (col("s1").cast("double") / col("n").cast("double"))
                 * (col("s1").cast("double") / col("n").cast("double")))
               .as("sd"))
-        val flags = cen.crossJoin(broadcast(mom))
+        val flags = Artifacts.persist(cen.crossJoin(broadcast(mom))
           .select(col("d"), col("n"),
             (col("x").cast("double") > col("mu")
               + lit(3.0) * col("sd")
@@ -5572,8 +5550,7 @@ object EventTime {
             (col("side2") =!= 0
               && (col("side2") === coalesce(col("p1"), lit(0L))
                 || col("side2") === coalesce(col("p2"), lit(0L))))
-              .cast("long").as("r2"))
-          .persist()
+              .cast("long").as("r2")))
         flags.agg(max(col("n")).as("n_days"),
             sum(col("r1")).cast("long").as("n_rule1"),
             sum(col("r2")).cast("long").as("n_rule2"),
@@ -5643,15 +5620,14 @@ object EventTime {
     // grand-rate broadcast → row-local limits.
     Q("q_p_chart",
       (s, dir) => {
-        val cen = t(s, dir, "lineitem")
+        val cen = Artifacts.persist(t(s, dir, "lineitem")
           .select(
             expr("datediff(CAST(l_shipdate AS DATE), DATE'1970-01-01')")
               .as("d"),
             when(col("l_returnflag") === "R", 1L).otherwise(0L).as("r"))
           .groupBy("d")
           .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("r")).cast("long").as("ret"))
-          .persist()
+            sum(col("r")).cast("long").as("ret")))
         val tot = cen.agg(
           (sum(col("ret")).cast("double") / sum(col("n")).cast("double"))
             .as("pbar")).localCheckpoint(false)
@@ -5703,7 +5679,6 @@ object EventTime {
           .select(expr("datediff(CAST(ts AS DATE), DATE'1970-01-01')")
             .as("d"))
           .groupBy("d").agg(count(lit(1)).cast("long").as("c"))
-          .persist()
         val tot = cen.agg((sum(col("c")).cast("double")
           / count(lit(1)).cast("double")).as("cbar")).localCheckpoint(false)
         cen.crossJoin(broadcast(tot))
@@ -5740,15 +5715,14 @@ object EventTime {
     // both the error count and the exact distinct-user exposure.
     Q("q_u_chart",
       (s, dir) => {
-        val cen = t(s, dir, "events")
+        val cen = Artifacts.persist(t(s, dir, "events")
           .select(expr("datediff(CAST(ts AS DATE), DATE'1970-01-01')")
             .as("d"),
             col("user_id"),
             when(col("event_type") === "error", 1L).otherwise(0L).as("e"))
           .groupBy("d")
           .agg(countDistinct(col("user_id")).cast("long").as("n_units"),
-            sum(col("e")).cast("long").as("c"))
-          .persist()
+            sum(col("e")).cast("long").as("c")))
         val tot = cen.agg((sum(col("c")).cast("double")
           / sum(col("n_units")).cast("double")).as("ubar"))
           .localCheckpoint(false)
@@ -5874,7 +5848,7 @@ object EventTime {
         // persist: the detrended day frame feeds the weekday census AND
         // the remainder/variance pass — un-persisted, each consumer
         // re-scans orders
-        val det = t(s, dir, "orders")
+        val det = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderdate").cast("date").as("d"),
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("c"))
@@ -5884,8 +5858,7 @@ object EventTime {
           .withColumn("n7", count(lit(1)).over(w7))
           .filter(col("n7") === 7)
           .select(col("d"), dayofweek(col("d")).cast("long").as("dow"),
-            (lit(7L) * col("x") - col("t7")).as("det7"))
-          .persist()
+            (lit(7L) * col("x") - col("t7")).as("det7")))
         val season = det.groupBy("dow")
           .agg(count(lit(1)).cast("long").as("n_days"),
             sum(col("det7").cast(DecimalType(38, 0))).as("sdet"))
@@ -6044,7 +6017,7 @@ object EventTime {
     Q("q_permutation_entropy",
       (s, dir) => {
         val wd = Window.orderBy("d")
-        val pats = t(s, dir, "orders")
+        val pats = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderdate").cast("date").as("d"),
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("c"))
@@ -6055,10 +6028,9 @@ object EventTime {
           .select((when(col("x") < col("y"), 4L).otherwise(0L)
             + when(col("y") < col("z"), 2L).otherwise(0L)
             + when(col("x") < col("z"), 1L).otherwise(0L)).as("pat"))
-          .groupBy("pat").agg(count(lit(1)).cast("long").as("cnt"))
+          .groupBy("pat").agg(count(lit(1)).cast("long").as("cnt")))
           // persist: the ≤8-row pattern census feeds the total AND the
           // term projection — un-persisted, each consumer re-scans orders
-          .persist()
         val tot = pats.agg(sum(col("cnt")).cast("long").as("n"))
         pats.crossJoin(broadcast(tot))
           .select(col("pat"), col("n"),
@@ -6179,7 +6151,7 @@ object EventTime {
     // recursive-CTE oracle.
     Q("q_ewma_chart",
       (s, dir) => {
-        val daily = t(s, dir, "events")
+        val daily = Artifacts.persist(t(s, dir, "events")
           .select(col("ts").cast("date").as("d"),
             (dec2(col("value")) * 100).cast("long").as("cents"))
           .groupBy("d")
@@ -6187,8 +6159,7 @@ object EventTime {
             sum(col("cents").cast(DecimalType(38, 0))).as("sc"))
           .select(col("d"),
             (col("sc").cast("double") / col("n").cast("double") / 100.0)
-              .as("v"))
-          .persist()
+              .as("v")))
         val mom = daily.agg(count(lit(1)).cast("long").as("nd"),
             sum(floor(col("v") * 1e6 + 0.5).cast("long")
               .cast(DecimalType(38, 0))).as("s1"),
@@ -6405,11 +6376,10 @@ object EventTime {
         val nC = lit(n).cast(dec38)
         // moments read the PERSISTED spine (zero-filled days add 0 to S
         // and Q2) so the readout plan pays zero parquet scans
-        val dense = s.range(minD, maxD + 1)
+        val dense = Artifacts.persist(s.range(minD, maxD + 1)
           .select(col("id").as("d"))
           .join(counts, Seq("d"), "left")
-          .select(col("d"), coalesce(col("x"), lit(0L)).as("x"))
-          .persist()
+          .select(col("d"), coalesce(col("x"), lit(0L)).as("x")))
         val moments = dense.agg(
           sum(col("x")).cast(dec38).as("s1"),
           sum(col("x").cast(dec38) * col("x")).as("q2"))
@@ -6571,7 +6541,7 @@ object EventTime {
       // (q_forecast_eval's discipline); trackingFinish is the FIFTH
       // readout of the medianDaily Complete-mode streaming state
       // (StreamingSpec proves drained ≡ batch)
-      (s, dir) => trackingFinish(medianDaily(t(s, dir, "orders")).persist()),
+      (s, dir) => trackingFinish(Artifacts.persist(medianDaily(t(s, dir, "orders")))),
       Some("""WITH days AS (
                 SELECT date_trunc('day', o_orderdate) AS day,
                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100
@@ -6677,8 +6647,8 @@ object EventTime {
     // critical value so the boolean cannot straddle an ULP.
     Q("q_kupiec_pof",
       (s, dir) => {
-        val days = medianDaily(t(s, dir, "orders"))
-          .withColumn("g", lit(1L)).persist()
+        val days = Artifacts.persist(medianDaily(t(s, dir, "orders"))
+          .withColumn("g", lit(1L)))
         val thr = RangeRank.groupValuesAtRanks(days, Seq("g"), "cents",
           Seq(RangeRank.RankPick("var90", n => ceil(n * 0.9))))
           .select(col("var90")).localCheckpoint(false)
@@ -6748,7 +6718,7 @@ object EventTime {
     Q("q_cusum_chart",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val days = medianDaily(t(s, dir, "orders")).persist()
+        val days = Artifacts.persist(medianDaily(t(s, dir, "orders")))
         val tot = days.agg(count(lit(1)).cast("long").as("n"),
           sum(col("cents")).cast(dec38).as("s"))
         val wCum = Window.orderBy("day")
@@ -6835,9 +6805,8 @@ object EventTime {
             lead(col("event_type"), 1).over(byUser).as("nxt"))
           .filter(col("nxt").isNotNull)
         // persisted: consumed by the out-degree census AND the term join
-        val census = pairs.groupBy("cur", "nxt")
-          .agg(count(lit(1)).cast("long").as("cnt"))
-          .persist()
+        val census = Artifacts.persist(pairs.groupBy("cur", "nxt")
+          .agg(count(lit(1)).cast("long").as("cnt")))
         val outDeg = census.groupBy(col("cur").as("c2"))
           .agg(sum(col("cnt")).cast("long").as("n_out"))
         census.join(broadcast(outDeg), col("cur") === col("c2"))
@@ -6892,11 +6861,10 @@ object EventTime {
             col("cents"))
         val bounds = counts.agg(min(col("d")), max(col("d"))).head
         val (minD, maxD) = (bounds.getLong(0), bounds.getLong(1))
-        val dense = s.range(minD, maxD + 1)
+        val dense = Artifacts.persist(s.range(minD, maxD + 1)
           .select(col("id").as("d"))
           .join(counts, Seq("d"), "left")
-          .select(col("d"), coalesce(col("cents"), lit(0L)).as("x"))
-          .persist()
+          .select(col("d"), coalesce(col("cents"), lit(0L)).as("x")))
         val w = Window.orderBy("d")
         val diffs = dense
           .select(col("d"), col("x"),
@@ -6981,7 +6949,7 @@ object EventTime {
     * the per-week pinned fold — drained ≡ batch exactly.
     */
   def psiTimelineFinish(cells0: DataFrame): DataFrame = {
-    val cells = cells0.persist()
+    val cells = Artifacts.persist(cells0)
     val weeks = cells.select("week").distinct()
     val bins = cells.select("bin").distinct()
     val nBins = broadcast(bins.agg(count(lit(1)).as("n_bins")))
@@ -7031,7 +6999,7 @@ object EventTime {
     * arithmetic with two IEEE divisions — drained ≡ batch exactly.
     */
   def seasonIdxFinish(cells0: DataFrame): DataFrame = {
-    val cells = cells0.persist()
+    val cells = Artifacts.persist(cells0)
     val perType = cells.groupBy("event_type").agg(sum(col("n")).as("n_type"))
     val perDow = cells.groupBy("dow").agg(sum(col("n")).as("n_dow"))
     val tot = cells.agg(sum(col("n")).as("n_all"))
@@ -7058,7 +7026,7 @@ object EventTime {
     * IEEE divisions of exact counts so drained ≡ batch exactly.
     */
   def typeShareFinish(cells0: DataFrame): DataFrame = {
-    val cells = cells0.persist()
+    val cells = Artifacts.persist(cells0)
     val tot = cells.groupBy("week").agg(sum(col("n")).as("n_week"))
     val wLag = Window.partitionBy("event_type").orderBy("week")
     val pick = Window.partitionBy("event_type")
@@ -7155,11 +7123,7 @@ object EventTime {
     * mark as a 1-row broadcast, per-feed last-delivery lag and
     * last-7 vs previous-7 volumes; one guarded division.
     */
-  def freshnessFinish(days0: DataFrame): DataFrame = {
-    // persist: the census feeds the global high-water agg AND the main
-    // rollup — un-persisted, the corpus-sized feedDaily subtree ran
-    // twice (the drift-family fix applied to ingest monitoring)
-    val days = days0.persist()
+  def freshnessFinish(days: DataFrame): DataFrame = {
     val gmax = days.agg(max(col("day")).as("gday"))
     days.crossJoin(broadcast(gmax))
       .groupBy("o_orderpriority")
@@ -7482,7 +7446,7 @@ object EventTime {
     */
   def pinballFinish(dayCensus: DataFrame): DataFrame = {
     val dec38 = DecimalType(38, 0)
-    val days = dayCensus.withColumn("g", lit(1L)).persist()
+    val days = Artifacts.persist(dayCensus.withColumn("g", lit(1L)))
     val qs = RangeRank.groupValuesAtRanks(days, Seq("g"), "cents",
       Seq(RangeRank.RankPick("q10", n => ceil(n * 0.1)),
         RangeRank.RankPick("q50", n => ceil(n * 0.5)),

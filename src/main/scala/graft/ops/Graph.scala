@@ -161,7 +161,7 @@ object Graph {
     // downstream rounds plan their census/src-semi exchange-free.
     // Three fixed rounds stay far below the lineage depth that forces
     // checkpointing in ccStar/pagerank.
-    val e = bipartiteEdges(s, dir).persist() // bucketed scan: already src-partitioned
+    val e = Artifacts.persist(bipartiteEdges(s, dir)) // bucketed scan: already src-partitioned
     e.count()
     e
   }
@@ -218,12 +218,12 @@ object Graph {
     * degree-k chain; 100 guards a pathological path graph).
     */
   def kcoreFixpoint(edgesIn: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
-    var edges = edgesIn.persist()
+    var edges = Artifacts.persist(edgesIn)
     var prev = edges.count()
     var done = prev == 0
     var iter = 0
     while (!done && iter < maxRounds) {
-      val next = kcoreRound(edges, k).persist()
+      val next = Artifacts.persist(kcoreRound(edges, k))
       val cnt = next.count()
       edges.unpersist()
       done = cnt == prev || cnt == 0
@@ -354,9 +354,9 @@ object Graph {
         //   stage reuse does not dedupe them (q_hits measured 31 → 107
         //   jobs, 417 → 1608 tasks) — those keep their per-round lazy
         //   checkpoints.
-        val edges = bipartiteEdges(s, dir).persist() // bucketed scan: already src-partitioned
-        val deg = edges.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg")).persist()
+        val edges = Artifacts.persist(bipartiteEdges(s, dir)) // bucketed scan: already src-partitioned
+        val deg = Artifacts.persist(edges.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("deg")))
         val n = deg.count()
         val r0 = Scale / n
         val base = (15L * r0) / 100L
@@ -525,7 +525,7 @@ object Graph {
         // partitioning, so all 4 frontier joins would re-exchange the
         // edge list; cached, the edges side of every round is free).
         // The seed action below doubles as the materialization barrier.
-        val edges = bipartiteEdges(s, dir).persist() // bucketed scan: already src-partitioned
+        val edges = Artifacts.persist(bipartiteEdges(s, dir)) // bucketed scan: already src-partitioned
         // deterministic seed: the smallest node id (an even ⇒ customer).
         // A driver-side scalar like PageRank's N — iteration constant,
         // not a data collect.
@@ -594,13 +594,11 @@ object Graph {
     // population); census output keeps the result frame bounded.
     Q("q_sssp",
       (s, dir) => {
-        // persist src-partitioned (kcore/pagerank discipline): all 4
-        // relax joins ride the cached partitioning on the edges side;
-        // the seed action doubles as the materialization barrier
+        // the projection keeps the bucketed scan's src partitioning, so
+        // all 4 relax joins plan exchange-free on the edges side
         val edges = bipartiteEdges(s, dir)
           .select(col("src"), col("dst"),
             (lit(1L) + (col("src") + col("dst")) % 5).as("w"))
-          .persist() // bucketed scan: projection keeps src partitioning
         val seed = edges.agg(min(col("src")).cast("long")).head.getLong(0)
         // eager checkpoints (r15, back from r14's lazy): each dist
         // generation is read twice per round (the relax join AND the
@@ -685,13 +683,12 @@ object Graph {
         val rows = (1 to 3).map { r =>
           val keep = deg.filter(col("deg") >= k)
             .select(col("src").as("node")).localCheckpoint(false)
-          edges = edges
+          edges = Artifacts.persist(edges
             .join(keep.withColumnRenamed("node", "src"), Seq("src"),
               "left_semi")
             .join(keep.withColumnRenamed("node", "dst"), Seq("dst"),
               "left_semi")
-            .select(col("dst").as("src"), col("src").as("dst"))
-            .persist()
+            .select(col("dst").as("src"), col("src").as("dst")))
           deg = edges.groupBy("src")
             .agg(count(lit(1)).as("deg")).localCheckpoint(false)
           val c = deg.agg(
@@ -983,8 +980,8 @@ object Graph {
     // drift with reduction order): scores normalize per half-round by
     // the round MAX with truncating division — the max is a 1-row agg
     // broadcast (iteration constant), DECIMAL keeps Σ hub·indeg exact
-    // at any degree. Per half-round shape: edges⋈scores on the cached
-    // src partitioning, partial-agg by the other endpoint — ONE
+    // at any degree. Per half-round shape: edges⋈scores on the edge
+    // frame's src partitioning, partial-agg by the other endpoint — ONE
     // edge-scale exchange, scores never broadcast.
     Q("q_hits",
       (s, dir) => {
@@ -995,8 +992,7 @@ object Graph {
         val cs = bipartiteEdges(s, dir)
           .filter(col("src") % 2 === 0)
           .select(expr("src div 2").as("c"), expr("(dst - 1) div 2").as("s"))
-          .repartition(col("c")).persist()
-        cs.count()
+          .repartition(col("c"))
         // eager checkpoints (r15, back from r14's lazy): every score
         // generation is read 2+ times (the next half-round's join, the
         // max broadcast build, the final union) — lazy cache leaves let
@@ -1132,11 +1128,10 @@ object Graph {
         val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
         // persisted: BOTH endpoint joins (d1, d2) read the degree
         // census — un-cached, each re-scans the edge artifact
-        val deg = bipartiteEdges(s, dir)
+        val deg = Artifacts.persist(bipartiteEdges(s, dir)
           .filter(col("src") % 2 === 1)
           .groupBy(expr("(src - 1) div 2").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .persist()
+          .agg(count(lit(1)).as("deg")))
         val pairs = Curation.basketPairCore(s, dir)
           .select(expr("pk div 4294967296L").as("s1"),
             (col("pk") % 4294967296L).as("s2"), col("common"))
@@ -1198,11 +1193,10 @@ object Graph {
     Q("q_link_jaccard",
       (s, dir) => {
         // persisted: BOTH endpoint joins read the degree census
-        val deg = bipartiteEdges(s, dir)
+        val deg = Artifacts.persist(bipartiteEdges(s, dir)
           .filter(col("src") % 2 === 1)
           .groupBy(expr("(src - 1) div 2").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .persist()
+          .agg(count(lit(1)).as("deg")))
         val pairs = Curation.basketPairCore(s, dir)
           .select(expr("pk div 4294967296L").as("s1"),
             (col("pk") % 4294967296L).as("s2"), col("common"))
@@ -1264,7 +1258,7 @@ object Graph {
     Q("q_katz_centrality",
       (s, dir) => {
         val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val edges = bipartiteEdges(s, dir).persist() // bucketed scan: already src-partitioned
+        val edges = Artifacts.persist(bipartiteEdges(s, dir)) // bucketed scan: already src-partitioned
         // lazy checkpoints (r14): p1/p2 each feed two consumers — the
         // leaf cut keeps them planned once, the cache materializes on
         // first read inside the single final job
@@ -1336,15 +1330,14 @@ object Graph {
       (s, dir) => {
         val li = t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-        val e = li.as("a")
+        val e = Artifacts.persist(li.as("a")
           .join(li.as("b"),
             col("a.l_orderkey") === col("b.l_orderkey")
               && col("b.l_linenumber") === col("a.l_linenumber") + 1)
           .select(col("a.l_partkey").as("src"),
             col("b.l_partkey").as("dst"))
           .filter(col("src") =!= col("dst"))
-          .distinct()
-          .persist()
+          .distinct())
         val mutual = e.as("e")
           .join(e.select(col("src").as("rsrc"), col("dst").as("rdst")),
             col("e.src") === col("rdst") && col("e.dst") === col("rsrc"),
@@ -1386,7 +1379,7 @@ object Graph {
     // distances — exact-int ratio, NULL-guarded for an isolated seed.
     Q("q_closeness",
       (s, dir) => {
-        val edges = bipartiteEdges(s, dir).persist() // bucketed scan: already src-partitioned
+        val edges = Artifacts.persist(bipartiteEdges(s, dir)) // bucketed scan: already src-partitioned
         val seeds = edges.select(col("src").cast("long").as("seed"))
           .distinct().orderBy("seed").limit(8)
           .collect().map(_.getLong(0)).toSeq
@@ -1464,7 +1457,7 @@ object Graph {
         // distinct (c, su, cn, sn) ≡ the shared edge artifact's distinct
         // (c, su) + broadcast dimension joins (nation is a FUNCTION of
         // each key), so the fact join collapses to the artifact scan
-        val e = bipartiteEdges(s, dir)
+        val e = Artifacts.persist(bipartiteEdges(s, dir)
           .filter(col("src") % 2 === 0)
           .select(expr("src div 2").as("c"),
             expr("(dst - 1) div 2").as("su"))
@@ -1476,8 +1469,7 @@ object Graph {
             col("su") === col("s_suppkey"))
           .select(col("c"), col("su"),
             col("cn").cast("long").as("cn"), col("sn").cast("long")
-              .as("sn"))
-          .persist()
+              .as("sn")))
         val m = e.agg(count(lit(1)).cast("long").as("m"))
         val within = e.filter(col("cn") === col("sn"))
           .groupBy(col("cn").as("g"))
@@ -1550,10 +1542,9 @@ object Graph {
     Q("q_rich_club",
       (s, dir) => {
         val ks = Seq(1L, 2L, 4L, 8L, 16L, 32L)
-        val deg = bipartiteEdges(s, dir)
+        val deg = Artifacts.persist(bipartiteEdges(s, dir)
           .groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .persist()
+          .agg(count(lit(1)).as("deg")))
         val nCols = ks.map(k => sum(when(col("deg") > k, 1L).otherwise(0L))
           .cast("long").as(s"n_$k"))
         val nodeCounts = deg.agg(nCols.head, nCols.tail: _*)

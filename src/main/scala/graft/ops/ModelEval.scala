@@ -247,7 +247,7 @@ object ModelEval {
     */
   def psiFinish(census: DataFrame): DataFrame = {
     val wAll = Window.partitionBy()
-    val prop = census
+    val prop = Artifacts.persist(census
       .select(col("bin"), col("ref_n").cast("long").as("ref_n"),
         col("cur_n").cast("long").as("cur_n"),
         sum(col("ref_n")).over(wAll).cast("long").as("rt"),
@@ -265,12 +265,11 @@ object ModelEval {
       // no summation-order pinning fixes a transcendental's last bit
       .select(col("bin"), col("ref_n"), col("cur_n"),
         round((col("p_cur") - col("p_ref"))
-          * log(col("p_cur") / col("p_ref")), 12).as("psi_bin"))
+          * log(col("p_cur") / col("p_ref")), 12).as("psi_bin")))
       // persist: the ≤11-row bin frame feeds BOTH the pinned-fold
       // total and the output join — without it each consumer re-runs
       // the corpus-sized census scan (the r4 drift-family regression
       // class)
-      .persist()
     val tot = prop
       .agg(round(expr(
         """aggregate(array_sort(collect_list(struct(bin, psi_bin))),
@@ -380,7 +379,7 @@ object ModelEval {
     * totals AND the diagonal.
     */
   def confusionFinish(cells0: DataFrame): DataFrame = {
-    val cells = cells0.persist()
+    val cells = Artifacts.persist(cells0)
     val actual = cells.groupBy(col("t").as("cls"))
       .agg(sum(col("n")).as("n_actual"))
     val predicted = cells.groupBy(col("p").as("cls"))
@@ -431,7 +430,7 @@ object ModelEval {
     // term projection — un-persisted, each consumer re-runs the
     // event-scale moment scan (the drift-family class; caught by the
     // scan-budget guard)
-    val census = census0.persist()
+    val census = Artifacts.persist(census0)
     val tot = census.agg(sum(col("n")).as("n_tot"),
       sum(col("s")).as("s_tot"))
     census.crossJoin(broadcast(tot))
@@ -470,7 +469,7 @@ object ModelEval {
     */
   def tukeyFinish(census0: DataFrame): DataFrame = {
     // persist: the ≤5-row census feeds the MSW fold AND both pair sides
-    val census = census0.persist()
+    val census = Artifacts.persist(census0)
     val msw = census.agg(
         sum(col("n")).as("n_tot"),
         count(lit(1)).as("k"),
@@ -524,7 +523,7 @@ object ModelEval {
     val wv = Window.orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, -1)
     // persist: the value census feeds the U walk AND the moment agg
-    val census = census0.persist()
+    val census = Artifacts.persist(census0)
     val u = census
       .withColumn("cum_b",
         coalesce(sum(col("n_b")).over(wv), lit(0L)))
@@ -1517,7 +1516,7 @@ object ModelEval {
           .agg(sum(col("g")).as("n_good"),
             sum(lit(1L) - col("g")).as("n_bad"))
         val wAll = Window.partitionBy()
-        val woe = census
+        val woe = Artifacts.persist(census
           .select(col("o_orderpriority"),
             col("n_good").cast("long").as("n_good"),
             col("n_bad").cast("long").as("n_bad"),
@@ -1532,9 +1531,8 @@ object ModelEval {
           .select(col("o_orderpriority"), col("n_good"), col("n_bad"),
             round(log(col("pg") / col("pb")), 12).as("woe"),
             round((col("pg") - col("pb")) * log(col("pg") / col("pb")), 12)
-              .as("iv_contrib"))
+              .as("iv_contrib")))
           // persist: feeds the IV fold AND the output join (see q_psi)
-          .persist()
         val tot = woe
           .agg(round(expr(
             """aggregate(array_sort(collect_list(struct(o_orderpriority, iv_contrib))),
@@ -2028,7 +2026,7 @@ object ModelEval {
         val wAll = Window.partitionBy()
         val wPrev = Window.orderBy(col("dur"))
           .rowsBetween(Window.unboundedPreceding, -1)
-        val risk = census
+        val risk = Artifacts.persist(census
           .select(col("dur"), col("d").cast("long").as("d"),
             col("c").cast("long").as("c"),
             (sum(col("d") + col("c")).over(wAll)
@@ -2036,10 +2034,9 @@ object ModelEval {
               .cast("long").as("n_risk"))
           .select(col("dur"), col("d"), col("c"), col("n_risk"),
             (lit(1.0) - col("d").cast("double")
-              / col("n_risk").cast("double")).as("term"))
+              / col("n_risk").cast("double")).as("term")))
           // persist: the day census feeds the term-array collect AND the
           // output join — one lineitem+orders pass, not two (see q_psi)
-          .persist()
         // prefix products in ONE pass over the sorted term array (pp[i] =
         // t₁·…·tᵢ, pp[0] = 1) instead of a per-row filter+fold — that
         // shape re-walks the array per census row (O(|days|²) lambda
@@ -2121,7 +2118,7 @@ object ModelEval {
         val wAll = Window.partitionBy()
         val wPrev = Window.orderBy(col("dur"))
           .rowsBetween(Window.unboundedPreceding, -1)
-        val risk = census
+        val risk = Artifacts.persist(census
           .select(col("dur"), col("d").cast("long").as("d"),
             col("c").cast("long").as("c"),
             (sum(col("d") + col("c")).over(wAll)
@@ -2129,9 +2126,8 @@ object ModelEval {
               .cast("long").as("n_risk"))
           .select(col("dur"), col("d"), col("c"), col("n_risk"),
             (col("d").cast("double") / col("n_risk").cast("double"))
-              .as("term"))
+              .as("term")))
           // persist: feeds the prefix collect AND the output join
-          .persist()
         val curve = risk
           .agg(expr("""array_sort(collect_list(struct(dur, term)))""")
             .as("ts"))
@@ -2197,7 +2193,7 @@ object ModelEval {
       // persist: the 5-row census feeds BOTH the population totals and
       // the output projection — un-persisted, each consumer re-runs
       // the event-scale scan (the r4 drift-family class)
-      (s, dir) => fairnessFinish(fairnessCensus(t(s, dir, "events")).persist()),
+      (s, dir) => fairnessFinish(Artifacts.persist(fairnessCensus(t(s, dir, "events")))),
       Some("""WITH c AS (
                 SELECT user_id % 5 AS grp, count(*) AS n,
                   CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -2283,18 +2279,17 @@ object ModelEval {
     // fold), so the readout is self-contained.
     Q("q_diff_in_diff",
       (s, dir) => {
-        val cells = t(s, dir, "events")
+        val cells = Artifacts.persist(t(s, dir, "events")
           .select((col("user_id") % 2).as("variant"),
             when(col("ts") < lit("2024-01-16").cast("timestamp"), "pre")
               .otherwise("post").as("period"),
             expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
               .as("cents"))
           .groupBy("variant", "period")
-          .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc")))
           // 4-row census feeds the pivot AND the output — persist is
           // overkill at 4 rows but the scan behind it is not: fold the
           // pivot from the census itself
-          .persist()
         val did = cells
           .agg(
             (max(when(col("variant") === 1 && col("period") === "post",
@@ -2353,7 +2348,7 @@ object ModelEval {
     // identical doubles.
     Q("q_cuped",
       (s, dir) => {
-        val users = t(s, dir, "events")
+        val users = Artifacts.persist(t(s, dir, "events")
           .select((col("user_id") % 2).as("variant"), col("user_id"),
             when(col("ts") < lit("2024-01-16").cast("timestamp"),
               expr("cast(cast(value as decimal(18,2)) * 100 as bigint)"))
@@ -2362,8 +2357,7 @@ object ModelEval {
               expr("cast(cast(value as decimal(18,2)) * 100 as bigint)"))
               .otherwise(0L).as("post_c"))
           .groupBy("variant", "user_id")
-          .agg(sum(col("pre_c")).as("x"), sum(col("post_c")).as("y"))
-          .persist()
+          .agg(sum(col("pre_c")).as("x"), sum(col("post_c")).as("y")))
         val pooled = users.agg(count(lit(1)).as("n"),
           sum(col("x").cast(dec38)).as("sx"),
           sum(col("y").cast(dec38)).as("sy"),
@@ -2572,7 +2566,7 @@ object ModelEval {
     Q("q_rk_correlation",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val cells = confusionCells(t(s, dir, "events")).persist()
+        val cells = confusionCells(t(s, dir, "events"))
         val rows = cells.groupBy(col("t").as("cls"))
           .agg(sum(col("n")).cast("long").as("tk"))
         val cols = cells.groupBy(col("p").as("cls"))
@@ -2864,19 +2858,17 @@ object ModelEval {
       (s, dir) => {
         val wv = Window.orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, -1)
-        val cg = t(s, dir, "customer")
+        val cg = Artifacts.persist(t(s, dir, "customer")
           .select((dec2(col("c_acctbal")) * 100).cast("long").as("cents"),
             col("c_mktsegment").as("grp"))
           .groupBy("cents", "grp")
-          .agg(count(lit(1)).cast("long").as("n_g"))
-          .persist()
-        val cm = cg.groupBy("cents")
+          .agg(count(lit(1)).cast("long").as("n_g")))
+        val cm = Artifacts.persist(cg.groupBy("cents")
           .agg(sum(col("n_g")).cast("long").as("n_c"))
           .withColumn("cum_before",
             coalesce(sum(col("n_c")).over(wv), lit(0L)))
           .withColumn("midrank_x2",
-            lit(2L) * col("cum_before") + col("n_c") + 1L)
-          .persist()
+            lit(2L) * col("cum_before") + col("n_c") + 1L))
         val perG = cg.join(cm.select("cents", "midrank_x2"), "cents")
           .groupBy("grp")
           .agg(sum(col("n_g")).cast("long").as("ng"),
@@ -2980,14 +2972,12 @@ object ModelEval {
             col("c_mktsegment").as("grp"))
           .groupBy("cents", "grp")
           .agg(count(lit(1)).cast("long").as("n_g"))
-          .persist()
         val cm = cg.groupBy("cents")
           .agg(sum(col("n_g")).cast("long").as("n_c"))
           .withColumn("cum_before",
             coalesce(sum(col("n_c")).over(wv), lit(0L)))
           .withColumn("midrank_x2",
             lit(2L) * col("cum_before") + col("n_c") + 1L)
-          .persist()
         val perG = cg.join(cm.select("cents", "midrank_x2"), "cents")
           .groupBy("grp")
           .agg(sum(col("n_g")).cast("long").as("ng"),
@@ -3125,14 +3115,13 @@ object ModelEval {
     // for a degenerate (constant-day or zero-residual) series.
     Q("q_durbin_watson",
       (s, dir) => {
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(
             expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
               .as("d"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
           .groupBy("d")
-          .agg(sum(col("cents").cast(dec38)).as("y"))
-          .persist()
+          .agg(sum(col("cents").cast(dec38)).as("y")))
         val fit = cen.agg(
           count(lit(1)).cast("long").as("n"),
           sum(col("d").cast(dec38)).as("st"),
@@ -3233,17 +3222,16 @@ object ModelEval {
     // finishers; NULL-guarded degenerate segments.
     Q("q_chow_test",
       (s, dir) => {
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(
             expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
               .as("d"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
           .groupBy("d")
-          .agg(sum(col("cents").cast(dec38)).as("y"))
-          .persist()
+          .agg(sum(col("cents").cast(dec38)).as("y")))
         val split = cen.agg(
           expr("(min(d) + max(d)) div 2").cast("long").as("sp"))
-        val seg = cen.crossJoin(broadcast(split))
+        val seg = Artifacts.persist(cen.crossJoin(broadcast(split))
           .select(when(col("d") <= col("sp"), 1L).otherwise(2L).as("h"),
             col("d"), col("y"))
           .groupBy("h")
@@ -3252,8 +3240,7 @@ object ModelEval {
             sum(col("y")).as("sy"),
             sum(col("d").cast(dec38) * col("d")).as("sxx"),
             sum(col("d").cast(dec38) * col("y")).as("sxy"),
-            sum(col("y") * col("y")).as("syy"))
-          .persist()
+            sum(col("y") * col("y")).as("syy")))
         def ssr(n: Column, sx: Column, sy: Column, sxx: Column,
             sxy: Column, syy: Column): Column = {
           val nn = n.cast("double")
@@ -3454,15 +3441,14 @@ object ModelEval {
       (s, dir) => {
         val wv = Window.orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, 0)
-        val cen = t(s, dir, "events")
+        val cen = Artifacts.persist(t(s, dir, "events")
           .select((dec2(col("value")) * 100).cast("long").as("cents"),
             (col("event_type") === "purchase").cast("long").as("pos"))
           .groupBy("cents")
           .agg(count(lit(1)).cast("long").as("n"),
             sum(col("pos")).cast("long").as("p"))
           .withColumn("nl", sum(col("n")).over(wv).cast("long"))
-          .withColumn("pl", sum(col("p")).over(wv).cast("long"))
-          .persist()
+          .withColumn("pl", sum(col("p")).over(wv).cast("long")))
         val tot = cen.agg(max(col("nl")).cast("long").as("nt"),
           max(col("pl")).cast("long").as("pt"))
         val scored = cen.crossJoin(broadcast(tot))
@@ -3565,14 +3551,13 @@ object ModelEval {
     // BY (rounded D DESC, day) LIMIT over identical doubles.
     Q("q_influence_diagnostics",
       (s, dir) => {
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .select(
             expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
               .as("d"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
           .groupBy("d")
-          .agg(sum(col("cents").cast(dec38)).as("y"))
-          .persist()
+          .agg(sum(col("cents").cast(dec38)).as("y")))
         val fit = cen.agg(
           count(lit(1)).cast("long").as("n"),
           sum(col("d").cast(dec38)).as("st"),
@@ -3591,7 +3576,7 @@ object ModelEval {
             ((col("sy").cast("double")
               - col("slope") * col("st").cast("double"))
               / col("n").cast("double")).as("icept"))
-        val res = cen.crossJoin(broadcast(fit))
+        val res = Artifacts.persist(cen.crossJoin(broadcast(fit))
           .select(col("d"),
             round(col("y").cast("double") - col("icept")
               - col("slope") * col("d").cast("double"), 6).as("e"),
@@ -3602,8 +3587,7 @@ object ModelEval {
                   - col("st").cast("double") / col("n").cast("double"))
                 / (col("stt").cast("double")
                   - col("st").cast("double") * col("st").cast("double")
-                    / col("n").cast("double")), 12).as("h"))
-          .persist()
+                    / col("n").cast("double")), 12).as("h")))
         val sse = res.agg(
           round(expr("""aggregate(array_sort(collect_list(
                           struct(d, e * e))),
@@ -3685,12 +3669,11 @@ object ModelEval {
     // expression at the end.
     Q("q_cronbach_alpha",
       (s, dir) => {
-        val cell = t(s, dir, "events")
+        val cell = Artifacts.persist(t(s, dir, "events")
           .select(col("user_id"), col("event_type").as("item"),
             (dec2(col("value")) * 100).cast("long").as("cents"))
           .groupBy("user_id", "item")
-          .agg(sum(col("cents").cast(dec38)).as("x"))
-          .persist()
+          .agg(sum(col("cents").cast(dec38)).as("x")))
         val nUsers = cell.select(col("user_id")).distinct()
           .agg(count(lit(1)).cast("long").as("n_users"))
         val itemStats = cell.groupBy("item")
@@ -4422,12 +4405,11 @@ object ModelEval {
     Q("q_yuen_t",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val base = t(s, dir, "orders")
+        val base = Artifacts.persist(t(s, dir, "orders")
           .select(
             when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
               .otherwise(0L).as("grp"),
-            (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
-          .persist()
+            (dec2(col("o_totalprice")) * 100).cast("long").as("cents")))
         val picks = RangeRank.groupValuesAtRanks(base, Seq("grp"),
           "cents",
           Seq(RangeRank.RankPick("vlo", n => expr("(n div 10) + 1")),
@@ -5267,7 +5249,7 @@ object ModelEval {
     Q("q_welch_anova",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val g = t(s, dir, "orders")
+        val g = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderpriority").as("p"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("c"))
           .groupBy("p")
@@ -5282,8 +5264,7 @@ object ModelEval {
               / (col("n").cast(dec38) * (col("n") - 1)).cast("double"))
               .as("v"))
           .select(col("p"), col("n"), col("m"), col("v"),
-            (col("n").cast("double") / col("v")).as("w"))
-          .persist()
+            (col("n").cast("double") / col("v")).as("w")))
         val k2 = g.select(col("p"), col("w"), (col("w") * col("m"))
           .as("wm")).agg(
           count(lit(1)).cast("long").as("k"),
@@ -5382,7 +5363,7 @@ object ModelEval {
     Q("q_bartlett",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val g = t(s, dir, "orders")
+        val g = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderpriority").as("p"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("c"))
           .groupBy("p")
@@ -5393,8 +5374,7 @@ object ModelEval {
             ((col("n").cast(dec38) * col("s2") - col("s1") * col("s1"))
               .cast("double")
               / (col("n").cast(dec38) * (col("n") - 1)).cast("double"))
-              .as("v"))
-          .persist()
+              .as("v")))
         val t1 = g.select(col("p"), col("n"), col("v"),
           ((col("n") - 1).cast("double") * col("v")).as("nv"),
           (lit(1.0) / (col("n") - 1).cast("double")).as("invdf"))
@@ -5488,7 +5468,6 @@ object ModelEval {
               .cast("double")
               / (col("n").cast(dec38) * (col("n") - 1)).cast("double"))
               .as("v"))
-          .persist()
         val agg = terms.agg(count(lit(1)).cast("long").as("k"),
           max(col("v")).as("v_max"), min(col("v")).as("v_min"),
           expr("""aggregate(array_sort(collect_list(struct(event_type, v))),
@@ -5825,8 +5804,8 @@ object ModelEval {
     // Variance homogeneity — the assumption q_anova quietly makes,
     // tested with the robust median-centered variant. The corpus
     // collapses to the (segment, cents) value-domain census ONCE
-    // (persisted: the median extraction and the deviation re-join both
-    // read it); group medians come from a cumulative-count selection
+    // (the median extraction and the deviation re-join both read it);
+    // group medians come from a cumulative-count selection
     // (FP-free, exact half-cents carried ×2), absolute deviations stay
     // integers, and the F statistic is [[anovaFinish]] verbatim over
     // the exact (group, n, Σz, Σz²) moments.
@@ -5838,7 +5817,6 @@ object ModelEval {
             (dec2(col("c_acctbal")) * 100).cast("long").as("cents"))
           .groupBy("seg", "cents")
           .agg(count(lit(1)).cast("long").as("cnt"))
-          .persist()
         val tot = census.groupBy("seg")
           .agg(sum(col("cnt")).cast("long").as("n_g"))
         val med = census.join(broadcast(tot), "seg")
@@ -6872,15 +6850,14 @@ object ModelEval {
     // answer, hash-matched.
     Q("q_isotonic_calibration",
       (s, dir) => {
-        val census = labeled(t(s, dir, "events"))
+        val census = Artifacts.persist(labeled(t(s, dir, "events"))
           .select((dec2(col("value")) * 100).cast("long").as("cents"),
             col("pos"))
           .select(expr("CAST(least(cents, 49999) div 500 AS BIGINT)")
             .as("b"), col("pos"))
           .groupBy("b")
           .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("pos")).cast("long").as("k"))
-          .persist()
+            sum(col("pos")).cast("long").as("k")))
         val w = Window.orderBy("lo")
         // r14 job-count fold: checkpoints are LAZY and the per-round
         // convergence probe is the block COUNT of the next generation
@@ -7040,14 +7017,13 @@ object ModelEval {
     // the one division by 2. Corpus work = ONE lineitem census scan.
     Q("q_hodges_lehmann",
       (s, dir) => {
-        val census = t(s, dir, "lineitem")
+        val census = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_quantity").cast("long").as("q"),
             when(col("l_returnflag") === "R", 1L).otherwise(0L)
               .as("is_r"))
           .groupBy("q")
           .agg(sum(col("is_r")).cast("long").as("n_a"),
-            sum(lit(1L) - col("is_r")).cast("long").as("n_b"))
-          .persist()
+            sum(lit(1L) - col("is_r")).cast("long").as("n_b")))
         val diffs = census.as("a").crossJoin(census.as("b"))
           .filter(col("a.n_a") > 0 && col("b.n_b") > 0)
           .groupBy((col("a.q") - col("b.q")).as("d"))
@@ -7342,12 +7318,11 @@ object ModelEval {
     // DECIMAL(38,0) integer arithmetic with ONE division.
     Q("q_cochran_q",
       (s, dir) => {
-        val flags = t(s, dir, "orders")
+        val flags = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_custkey"),
             year(col("o_orderdate")).cast("long").as("y"))
           .filter(col("y").isin(1995L, 1996L, 1997L))
-          .distinct()
-          .persist()
+          .distinct())
         val rows = flags.groupBy("o_custkey")
           .agg(count(lit(1)).as("l"))
           .agg(count(lit(1)).cast("long").as("n_subjects"),
@@ -7416,15 +7391,14 @@ object ModelEval {
     // brier_binned = REL − RES + UNC (exact for bin-mean forecasts).
     Q("q_brier_decomposition",
       (s, dir) => {
-        val census = labeled(t(s, dir, "events"))
+        val census = Artifacts.persist(labeled(t(s, dir, "events"))
           .select(floor(col("value") / 50).cast("long").as("bin"),
             (dec2(col("value")) * 100).cast("long").as("cents"),
             col("pos"))
           .groupBy("bin")
           .agg(count(lit(1)).as("n_k"),
             sum(col("pos")).as("pos_k"),
-            sum(col("cents").cast(dec38)).as("sc_k"))
-          .persist()
+            sum(col("cents").cast(dec38)).as("sc_k")))
         val tot = census.agg(sum(col("n_k")).cast("long").as("n"),
           sum(col("pos_k")).cast("long").as("pos"))
         census.crossJoin(broadcast(tot))
@@ -7637,11 +7611,10 @@ object ModelEval {
       (s, dir) => {
         val wv = Window.orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, -1)
-        val census = t(s, dir, "customer")
+        val census = Artifacts.persist(t(s, dir, "customer")
           .select((dec2(col("c_acctbal")) * 100).cast("long").as("cents"),
             col("c_mktsegment").as("seg"))
-          .groupBy("cents", "seg").agg(count(lit(1)).as("c"))
-          .persist()
+          .groupBy("cents", "seg").agg(count(lit(1)).as("c")))
         val byVal = census.groupBy("cents")
           .agg(sum(col("c")).as("cv"))
           .withColumn("cum_before", coalesce(sum(col("cv")).over(
@@ -7784,11 +7757,10 @@ object ModelEval {
       (s, dir) => {
         def rater(shift: Int) = expr(
           s"pmod(((doc_id % 2147483648) * 2654435761) div ${1L << shift}, 2)")
-        val cells = t(s, dir, "documents")
+        val cells = Artifacts.persist(t(s, dir, "documents")
           .select((rater(16) + rater(19)).as("v1"),
             (rater(19) + rater(22)).as("v2"))
-          .groupBy("v1", "v2").agg(count(lit(1)).as("c"))
-          .persist()
+          .groupBy("v1", "v2").agg(count(lit(1)).as("c")))
         val obs = cells.agg(
           sum(col("c")).cast("long").as("n"),
           sum(col("c").cast(dec38) * (col("v1") - col("v2"))
@@ -7943,12 +7915,11 @@ object ModelEval {
     Q("q_permutation_test",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val base = t(s, dir, "orders")
+        val base = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderkey"),
             when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
               .otherwise(0L).as("tr"),
-            (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
-          .persist()
+            (dec2(col("o_totalprice")) * 100).cast("long").as("cents")))
         val obs = base.agg(
           count(lit(1)).cast("long").as("n"),
           sum(col("tr")).cast("long").as("n_t"),

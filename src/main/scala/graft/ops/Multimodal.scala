@@ -228,11 +228,10 @@ object Multimodal {
     // recomputes md5 over the same utf-8 bytes from the text column.
     Q("q_payload_dedup",
       (s, dir) => {
-        val keyed = t(s, dir, "documents")
+        val keyed = Artifacts.persist(t(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             col("n_chars").cast("long").as("n_bytes"),
-            md5(encode(col("text"), "UTF-8")).as("h"))
-          .persist()
+            md5(encode(col("text"), "UTF-8")).as("h")))
         val keepers = keyed.groupBy("h")
           .agg(min(col("doc_id")).as("keeper"))
         keyed.join(keepers, "h")

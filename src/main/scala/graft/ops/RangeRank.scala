@@ -44,9 +44,12 @@ import org.apache.spark.sql.functions._
   * payload-free inputs, false in general — so the cache is the correctness
   * mechanism, not an optimization. The cached slice is the projected
   * (group ++ sort ++ payload) columns only. It is an
-  * [[Artifacts.persist]]: inside an [[Artifacts.scoped]] block (an
-  * artifact build, a finish helper) the block unpersists it when it
-  * ends; outside one, the SQL cache holds it until `unpersist` or
+  * [[Artifacts.persist]], owned by the innermost [[Artifacts.scoped]]
+  * block: an artifact build, a finish helper, or the per-query scope
+  * every in-repo run opens (`Harness`, `Verify`, `Probe explain`,
+  * `PlanDump`), which unpersists it when the query's action ends. A
+  * caller of the lazy `SparkEntry.queries` contract that opens no scope
+  * gets a plain persist: the SQL cache holds it until `unpersist` or
   * `clearCache`.
   */
 object RangeRank {

@@ -1666,7 +1666,7 @@ object Relational {
             .as("rev_dec"))
         // persist: rev feeds the global max AND the filter — cached, the
         // filtered lineitem slice is scanned once, not twice
-        val revP = rev.persist()
+        val revP = Artifacts.persist(rev)
         val mx = revP.agg(max(col("rev_dec")).as("mx"))
         revP.crossJoin(broadcast(mx))
           .filter(col("rev_dec") === col("mx"))
@@ -2091,12 +2091,11 @@ object Relational {
       (s, dir) => {
         val firstShip = t(s, dir, "lineitem")
           .groupBy("l_orderkey").agg(min(col("l_shipdate")).as("first_ship"))
-        val lat = t(s, dir, "orders")
+        val lat = Artifacts.persist(t(s, dir, "orders")
           .join(firstShip, col("o_orderkey") === col("l_orderkey"))
           .select(col("o_orderpriority"),
             datediff(col("first_ship").cast("date"),
-              col("o_orderdate").cast("date")).cast("long").as("days"))
-          .persist()
+              col("o_orderdate").cast("date")).cast("long").as("days")))
         val qs = RangeRank.groupValuesAtRanks(lat, Seq("o_orderpriority"),
           "days",
           Seq(RangeRank.RankPick("p50_days", n => ceil(n * 0.5)),
@@ -2570,10 +2569,10 @@ object Relational {
     Q("q_peak_over_threshold",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val base = t(s, dir, "orders")
+        val base = Artifacts.persist(t(s, dir, "orders")
           .select((dec2(col("o_totalprice")) * 100).cast("long")
             .as("cents"))
-          .withColumn("g", lit(1L)).persist()
+          .withColumn("g", lit(1L)))
         val tot = base.agg(sum(col("cents").cast(dec38)).as("s_all"))
         val gv = RangeRank.groupValuesAtRanks(base, Seq("g"), "cents",
           Seq(
@@ -2719,10 +2718,9 @@ object Relational {
     // division per side.
     Q("q_dixon_q",
       (s, dir) => {
-        val base = t(s, dir, "orders")
+        val base = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderpriority"),
-            (dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
-          .persist()
+            (dec2(col("o_totalprice")) * 100).cast("long").as("cents")))
         RangeRank.groupValuesAtRanks(base, Seq("o_orderpriority"),
           "cents",
           Seq(RangeRank.RankPick("x1", _ => lit(1L)),
@@ -2781,12 +2779,11 @@ object Relational {
     Q("q_jackknife_variance",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val months = t(s, dir, "orders")
+        val months = Artifacts.persist(t(s, dir, "orders")
           .groupBy(date_trunc("month", col("o_orderdate")).as("m"))
           .agg(count(lit(1)).cast("long").as("n_m"),
             sum((dec2(col("o_totalprice")) * 100).cast("long")
-              .cast(dec38)).as("s_m"))
-          .persist()
+              .cast(dec38)).as("s_m")))
         val tot = months.agg(sum(col("n_m")).cast("long").as("n"),
           sum(col("s_m")).as("s"),
           count(lit(1)).cast("long").as("g"))
@@ -2874,10 +2871,10 @@ object Relational {
     Q("q_kde_profile",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val base = t(s, dir, "orders")
+        val base = Artifacts.persist(t(s, dir, "orders")
           .select((dec2(col("o_totalprice")) * 100).cast("long")
             .as("cents"))
-          .withColumn("g", lit(1L)).persist()
+          .withColumn("g", lit(1L)))
         val qs = RangeRank.groupValuesAtRanks(base, Seq("g"), "cents",
           Seq(RangeRank.RankPick("p05", n => ceil(n * 0.05)),
             RangeRank.RankPick("p25", n => ceil(n * 0.25)),
@@ -3052,7 +3049,7 @@ object Relational {
     // order. One orders⋈customer⋈nation pass → 25-row census.
     Q("q_theil_decomposition",
       (s, dir) => {
-        val census = t(s, dir, "orders")
+        val census = Artifacts.persist(t(s, dir, "orders")
           .join(t(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
           .join(broadcast(t(s, dir, "nation")),
@@ -3060,8 +3057,7 @@ object Relational {
           .groupBy(col("n_regionkey").as("region"),
             col("n_name").as("nation"))
           .agg((sum(dec2(col("o_totalprice"))) * 100).cast("long")
-            .as("cents"))
-          .persist()
+            .as("cents")))
         // grand/region totals stay DECIMAL(38,0) through the ratio/log
         // arithmetic (at 100 TB the grand total in cents is ~2.25e18 —
         // under 4x headroom from int64 wrap, with divergent failure
@@ -3175,13 +3171,12 @@ object Relational {
     // row-local; normalized distances are one division each.
     Q("q_rank_distance",
       (s, dir) => {
-        val census = t(s, dir, "part")
+        val census = Artifacts.persist(t(s, dir, "part")
           .join(t(s, dir, "lineitem"),
             col("p_partkey") === col("l_partkey"))
           .groupBy(col("p_brand").as("brand"))
           .agg((sum(dec2(col("l_extendedprice"))) * 100).cast("long")
-            .as("rev"), count(lit(1)).cast("long").as("vol"))
-          .persist()
+            .as("rev"), count(lit(1)).cast("long").as("vol")))
         val wr = Window.orderBy(col("rev").desc, col("brand"))
         val wv = Window.orderBy(col("vol").desc, col("brand"))
         val ranked = census
@@ -3244,10 +3239,10 @@ object Relational {
     Q("q_middle_mass_share",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val base = t(s, dir, "orders")
+        val base = Artifacts.persist(t(s, dir, "orders")
           .select((dec2(col("o_totalprice")) * 100).cast("long")
             .as("cents"))
-          .withColumn("g", lit(1L)).persist()
+          .withColumn("g", lit(1L)))
         val tot = base.agg(sum(col("cents").cast(dec38)).as("s_all"))
         RangeRank.groupValuesAtRanks(base, Seq("g"), "cents",
           Seq(RangeRank.RankPick("p25", n => ceil(n * 0.25),
@@ -3427,7 +3422,7 @@ object Relational {
             .as("val_dec"))
         // persist: the part-value census feeds the corpus total AND the
         // share projection — cached, lineitem folds once
-        val vP = v.persist()
+        val vP = Artifacts.persist(v)
         val tot = vP.agg(sum(col("val_dec")).cast("double").as("total"))
         vP.crossJoin(broadcast(tot))
           .select(col("l_partkey").as("p_partkey"),
@@ -3494,10 +3489,10 @@ object Relational {
           .agg(sum(dec2(col("l_quantity"))).as("sq"))
         // persist: ps feeds the per-part totals AND the rejoin — cached,
         // the filtered lineitem aggregation runs once
-        val psP = ps.persist()
+        val psP = Artifacts.persist(ps)
         val tot = psP.groupBy(col("l_partkey").as("tp"))
           .agg(sum(col("sq")).as("tq"), count(lit(1)).as("nsupp"))
-        psP.join(tot, col("l_partkey") === col("tp")
+        ps.join(tot, col("l_partkey") === col("tp")
             && col("nsupp") >= 3 && col("sq") * 2 > col("tq"))
           .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
           .select(col("l_partkey").as("p_partkey"),
@@ -4341,9 +4336,8 @@ object Relational {
         // persist: rk is nation×year-bounded but sits on the corpus-sized
         // 3-join rev subtree, and the rk self-join plus the adj self-join
         // below reference it 4× — cached, the fact tables are scanned once.
-        val rk = rev.select(col("n_name"), col("yr"),
-          row_number().over(wr).cast("long").as("rk"))
-          .persist()
+        val rk = Artifacts.persist(rev.select(col("n_name"), col("yr"),
+          row_number().over(wr).cast("long").as("rk")))
         val adj = rk.as("a").join(rk.as("b"),
             col("a.n_name") === col("b.n_name")
               && col("b.yr") === col("a.yr") + 1)
@@ -4701,13 +4695,12 @@ object Relational {
           .rowsBetween(Window.unboundedPreceding, 0)
         val wG = Window.orderBy("p")
           .rowsBetween(Window.unboundedPreceding, 0)
-        val cnt = t(s, dir, "orders")
+        val cnt = Artifacts.persist(t(s, dir, "orders")
           .join(t(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_nationkey"), col("c_mktsegment"),
             substring(col("o_orderpriority"), 1, 1).cast("long").as("p"))
-          .agg(count(lit(1)).as("c"))
-          .persist()
+          .agg(count(lit(1)).as("c")))
         // dense class × priority grid: a class with NO orders at some
         // priority still carries its running cumulative at that prefix
         // point — a sparse join would silently skip the term
@@ -4803,14 +4796,13 @@ object Relational {
     Q("q_ordinal_association",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val cells = t(s, dir, "lineitem")
+        val cells = Artifacts.persist(t(s, dir, "lineitem")
           .join(t(s, dir, "orders"),
             col("l_orderkey") === col("o_orderkey"))
           .groupBy(
             substring(col("o_orderpriority"), 1, 1).cast("long").as("p"),
             expr("(CAST(l_quantity AS BIGINT) - 1) div 10").as("qb"))
-          .agg(count(lit(1)).cast("long").as("c"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("c")))
         val cd = cells.as("a")
           .crossJoin(cells.select(col("p").as("p2"), col("qb").as("qb2"),
             col("c").as("c2")))
@@ -4990,13 +4982,12 @@ object Relational {
     // division; max ties resolve identically (max over counts).
     Q("q_gk_lambda",
       (s, dir) => {
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .join(t(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_mktsegment").as("seg"),
             substring(col("o_orderpriority"), 1, 1).cast("long").as("p"))
-          .agg(count(lit(1)).cast("long").as("c"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("c")))
         val rowMax = cells.groupBy("seg")
           .agg(max(col("c")).as("mx"))
           .agg(sum(col("mx")).cast("long").as("sum_rowmax"))
@@ -5048,13 +5039,12 @@ object Relational {
     Q("q_gk_tau",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .join(t(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_mktsegment").as("seg"),
             substring(col("o_orderpriority"), 1, 1).cast("long").as("p"))
-          .agg(count(lit(1)).cast("long").as("c"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("c")))
         val byX = cells.groupBy("seg")
           .agg(sum(col("c")).cast("long").as("nx"),
             sum(col("c").cast(dec38) * col("c")).as("sq"))
@@ -5220,15 +5210,14 @@ object Relational {
     Q("q_duncan_segregation",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val census = t(s, dir, "orders")
+        val census = Artifacts.persist(t(s, dir, "orders")
           .join(t(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_nationkey").cast("long").as("nation"))
           .agg(sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
             1L).otherwise(0L)).as("a"),
             sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-              0L).otherwise(1L)).as("b"))
-          .persist()
+              0L).otherwise(1L)).as("b")))
         val tot = census.agg(sum(col("a")).cast("long").as("aa"),
           sum(col("b")).cast("long").as("bb"))
         census.crossJoin(broadcast(tot))
@@ -5278,7 +5267,7 @@ object Relational {
     Q("q_shift_share",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val census = t(s, dir, "orders")
+        val census = Artifacts.persist(t(s, dir, "orders")
           .filter(year(col("o_orderdate")).isin(1996, 1997))
           .join(t(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
@@ -5289,8 +5278,7 @@ object Relational {
             .otherwise(0L).cast(dec38)).as("base"),
             sum(when(year(col("o_orderdate")) === 1997,
               (dec2(col("o_totalprice")) * 100).cast("long"))
-              .otherwise(0L).cast(dec38)).as("cur"))
-          .persist()
+              .otherwise(0L).cast(dec38)).as("cur")))
         val segRates = census.groupBy("segment")
           .agg(sum(col("base")).as("sb"), sum(col("cur")).as("sc"))
           .select(col("segment"),
@@ -5447,11 +5435,10 @@ object Relational {
     Q("q_lorenz_asymmetry",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val spend = t(s, dir, "orders")
+        val spend = Artifacts.persist(t(s, dir, "orders")
           .groupBy("o_custkey")
           .agg((sum(dec2(col("o_totalprice"))) * 100).cast("long")
-            .as("x"))
-          .persist()
+            .as("x")))
         val tot = spend.agg(count(lit(1)).cast("long").as("n"),
           sum(col("x").cast(dec38)).as("t"))
         spend.crossJoin(broadcast(tot))
@@ -5660,14 +5647,13 @@ object Relational {
     // is FULLY exact integers — no FP anywhere.
     Q("q_median_polish",
       (s, dir) => {
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .join(t(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_nationkey").cast("long").as("nation"),
             year(col("o_orderdate")).cast("long").as("y"))
           .agg((sum(dec2(col("o_totalprice"))) * 100).cast("long")
-            .as("v"))
-          .persist()
+            .as("v")))
         val wRow = Window.partitionBy("nation").orderBy("v", "y")
         val rowMed = cells
           .withColumn("rn", row_number().over(wRow))
@@ -6902,13 +6888,12 @@ object Relational {
     // identical integers, so the 2σ boundary cannot flip between them.
     Q("q_deep_discount",
       (s, dir) => {
-        val li = t(s, dir, "lineitem")
+        val li = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_partkey"),
             round(col("l_discount") * 10000).cast("long").as("bp"))
           .join(t(s, dir, "part").select(col("p_partkey"), col("p_type")),
             col("l_partkey") === col("p_partkey"))
-          .select(col("p_type"), col("bp"))
-          .persist()
+          .select(col("p_type"), col("bp")))
         // Σbp and Σbp² in DECIMAL(38,0): bp² reaches 1e8 per row, so a
         // plain long sum wraps silently past ~9e10 rows per type — the
         // same dec38/HUGEINT discipline as the neighboring moment
@@ -7041,7 +7026,7 @@ object Relational {
     Q("q_decile_transition",
       (s, dir) => {
         val cut = lit("1995-07-01").cast("timestamp")
-        val per = t(s, dir, "orders")
+        val per = Artifacts.persist(t(s, dir, "orders")
           .groupBy("o_custkey")
           .agg(
             (sum(when(col("o_orderdate") < cut, dec2(col("o_totalprice")))
@@ -7049,8 +7034,7 @@ object Relational {
               .cast("long").as("c1"),
             (sum(when(col("o_orderdate") >= cut, dec2(col("o_totalprice")))
               .otherwise(lit(0).cast(DecimalType(18, 2)))) * 100)
-              .cast("long").as("c2"))
-          .persist()
+              .cast("long").as("c2")))
         def deciles(cents: String, out: String) =
           RangeRank.ranked(
               per.filter(col(cents) > 0).select(col("o_custkey"), col(cents)),
@@ -7255,7 +7239,7 @@ object Relational {
     Q("q_spearman_customers",
       (s, dir) => {
         val cut = lit("1995-07-01").cast("timestamp")
-        val per = t(s, dir, "orders")
+        val per = Artifacts.persist(t(s, dir, "orders")
           .groupBy("o_custkey")
           .agg(
             (sum(when(col("o_orderdate") < cut, dec2(col("o_totalprice")))
@@ -7264,8 +7248,7 @@ object Relational {
             (sum(when(col("o_orderdate") >= cut, dec2(col("o_totalprice")))
               .otherwise(lit(0).cast(DecimalType(18, 2)))) * 100)
               .cast("long").as("c2"))
-          .filter(col("c1") > 0 && col("c2") > 0)
-          .persist()
+          .filter(col("c1") > 0 && col("c2") > 0))
         def rk(c: String, out: String) =
           RangeRank.ranked(per.select(col("o_custkey"), col(c)),
               Seq.empty, Seq(col(c), col("o_custkey")), nName = None)
@@ -7694,11 +7677,10 @@ object Relational {
     Q("q_month_end_load",
       (s, dir) => {
         val dom = dayofmonth(col("o_orderdate")).cast("long")
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .groupBy(when(dom <= 10, "d01_10").when(dom <= 20, "d11_20")
             .when(dom <= 28, "d21_28").otherwise("d29_31").as("dom_band"))
-          .agg(count(lit(1)).as("n_orders"))
-          .persist()
+          .agg(count(lit(1)).as("n_orders")))
         val tot = cells.agg(sum(col("n_orders")).as("n_all"))
         cells.crossJoin(broadcast(tot))
           .select(col("dom_band"), col("n_orders"),
@@ -7801,15 +7783,14 @@ object Relational {
     // (the q_type_share_drift discipline on the revenue axis).
     Q("q_brand_momentum",
       (s, dir) => {
-        val cells = t(s, dir, "lineitem")
+        val cells = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_partkey"), col("l_shipdate"),
             dec2(col("l_extendedprice")).as("p"))
           .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand")),
             col("l_partkey") === col("p_partkey"))
           .groupBy(col("p_brand"),
             year(col("l_shipdate")).cast("long").as("yr"))
-          .agg((sum(col("p")) * 100).cast("long").as("cents"))
-          .persist()
+          .agg((sum(col("p")) * 100).cast("long").as("cents")))
         val wLag = Window.partitionBy("p_brand").orderBy("yr")
         val pick = Window.partitionBy("p_brand")
           .orderBy(abs(col("delta")).desc, col("yr"))
@@ -7935,11 +7916,10 @@ object Relational {
     // calendar × customer-keyed, exact counts.
     Q("q_customer_growth",
       (s, dir) => {
-        val cm = t(s, dir, "orders")
+        val cm = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_custkey"),
             date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-          .distinct()
-          .persist()
+          .distinct())
         val first = cm.groupBy("o_custkey").agg(min(col("month")).as("fm"))
         cm.join(first, "o_custkey")
           .groupBy("month")
@@ -8051,7 +8031,7 @@ object Relational {
     // exact-integer averages.
     Q("q_brand_price_index",
       (s, dir) => {
-        val cen = t(s, dir, "lineitem")
+        val cen = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_partkey"), dec2(col("l_extendedprice")).as("p"),
             col("l_quantity"))
           .join(t(s, dir, "part")
@@ -8059,8 +8039,7 @@ object Relational {
             col("l_partkey") === col("p_partkey"))
           .groupBy("p_brand", "p_type")
           .agg(count(lit(1)).as("n_lines"),
-            (sum(col("p")) * 100).cast("long").as("cents"))
-          .persist()
+            (sum(col("p")) * 100).cast("long").as("cents")))
         val perType = cen.groupBy("p_type")
           .agg((sum(col("cents")).cast("double")
             / sum(col("n_lines")).cast("double")).as("type_avg"))
@@ -8096,11 +8075,10 @@ object Relational {
     // DECIMAL sums on the ≤|positions|-row census.
     Q("q_line_position_effect",
       (s, dir) => {
-        val li = t(s, dir, "lineitem")
+        val li = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             (dec2(col("l_quantity")) * 100).cast("long").as("qty_c"),
-            (dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
-          .persist()
+            (dec2(col("l_extendedprice")) * 100).cast("long").as("cents")))
         val tot = li.groupBy("l_orderkey")
           .agg(sum(col("cents")).cast("long").as("order_cents"))
         li.join(tot, "l_orderkey")
@@ -8152,7 +8130,7 @@ object Relational {
     // the nation-pinned fold.
     Q("q_theil_between",
       (s, dir) => {
-        val cen = t(s, dir, "orders")
+        val cen = Artifacts.persist(t(s, dir, "orders")
           .join(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey")),
             col("o_custkey") === col("c_custkey"))
@@ -8162,8 +8140,7 @@ object Relational {
           .groupBy("n_name")
           .agg(count(lit(1)).cast("long").as("n_g"),
             (sum(dec2(col("o_totalprice"))) * 100).cast("decimal(38,0)")
-              .as("cents_g"))
-          .persist()
+              .as("cents_g")))
         val tot = cen.agg(sum(col("n_g")).cast("long").as("n_tot"),
           sum(col("cents_g")).as("cents_tot"))
         cen.crossJoin(broadcast(tot))
@@ -8529,7 +8506,7 @@ object Relational {
     // product of identical doubles. NULL-guarded zero-variance cells.
     Q("q_simpson_reversal",
       (s, dir) => {
-        val cen = t(s, dir, "lineitem")
+        val cen = Artifacts.persist(t(s, dir, "lineitem")
           .join(broadcast(t(s, dir, "part")
             .select(col("p_partkey"), col("p_brand"))),
             col("l_partkey") === col("p_partkey"))
@@ -8541,8 +8518,7 @@ object Relational {
             sum(col("x").cast("decimal(38,0)")).as("sx"),
             sum(col("y").cast("decimal(38,0)")).as("sy"),
             sum(col("x").cast("decimal(38,0)") * col("x")).as("sxx"),
-            sum(col("x").cast("decimal(38,0)") * col("y")).as("sxy"))
-          .persist()
+            sum(col("x").cast("decimal(38,0)") * col("y")).as("sxy")))
         val pooled = cen.agg(
           sum(col("n")).cast("long").as("np"),
           sum(col("sx")).as("px"), sum(col("sy")).as("py"),
@@ -8624,7 +8600,7 @@ object Relational {
     // division. NULL-guarded for n ≤ 1.
     Q("q_kendall_w",
       (s, dir) => {
-        val cen = t(s, dir, "lineitem")
+        val cen = Artifacts.persist(t(s, dir, "lineitem")
           .join(broadcast(t(s, dir, "part")
             .select(col("p_partkey"), col("p_brand"))),
             col("l_partkey") === col("p_partkey"))
@@ -8639,8 +8615,7 @@ object Relational {
             col("c_nationkey") === col("n_nationkey"))
           .groupBy(col("n_regionkey").as("rk"), col("p_brand"))
           .agg((sum(dec2(col("l_extendedprice"))) * 100)
-            .cast("decimal(38,0)").as("cents"))
-          .persist()
+            .cast("decimal(38,0)").as("cents")))
         val grid = cen.select(col("rk")).distinct()
           .crossJoin(cen.select(col("p_brand")).distinct())
           .join(cen, Seq("rk", "p_brand"), "left")
@@ -8651,10 +8626,9 @@ object Relational {
           .orderBy(col("cents").desc, col("p_brand"))
         val ranks = grid
           .withColumn("rank", row_number().over(wr).cast("long"))
-        val rs = ranks.groupBy("p_brand")
+        val rs = Artifacts.persist(ranks.groupBy("p_brand")
           .agg(count(lit(1)).cast("long").as("m"),
-            sum(col("rank")).cast("long").as("r_i"))
-          .persist()
+            sum(col("rank")).cast("long").as("r_i")))
         val nrow = rs.agg(count(lit(1)).cast("long").as("n"))
         rs.crossJoin(broadcast(nrow))
           .select(col("n"), col("m"),
@@ -8725,7 +8699,7 @@ object Relational {
     // double). Cell readout: part counts + revenue share.
     Q("q_abc_xyz",
       (s, dir) => {
-        val pm = t(s, dir, "lineitem")
+        val pm = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_partkey").as("pk"),
             expr("""(year(l_shipdate) * 12 + month(l_shipdate) - 1)""")
               .cast("long").as("m"),
@@ -8733,9 +8707,8 @@ object Relational {
             (dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
           .groupBy("pk", "m")
           .agg(sum(col("q").cast("decimal(38,0)")).as("mq"),
-            sum(col("cents").cast("decimal(38,0)")).as("mc"))
-          .persist()
-        val parts = pm.groupBy("pk")
+            sum(col("cents").cast("decimal(38,0)")).as("mc")))
+        val parts = Artifacts.persist(pm.groupBy("pk")
           .agg(count(lit(1)).cast("long").as("n_m"),
             sum(col("mc")).as("rev"),
             sum(col("mq")).as("sq"),
@@ -8743,8 +8716,7 @@ object Relational {
           .withColumn("cum",
             sum(col("rev")).over(Window
               .orderBy(col("rev").desc, col("pk"))
-              .rowsBetween(Window.unboundedPreceding, 0)))
-          .persist()
+              .rowsBetween(Window.unboundedPreceding, 0))))
         val tot = parts.agg(sum(col("rev")).as("trev"))
         parts.crossJoin(broadcast(tot))
           .select(col("pk"), col("rev"),
@@ -9126,7 +9098,7 @@ object Relational {
               .as("q"),
             expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("cents"))
-        val census = li.groupBy("l_partkey")
+        val census = Artifacts.persist(li.groupBy("l_partkey")
           .agg(
             sum(when(col("base"), col("q")).otherwise(lit(0L))
               .cast(dec38)).as("q0"),
@@ -9139,8 +9111,7 @@ object Relational {
           .filter(col("q0") > 0 && col("q1") > 0)
           .select(col("l_partkey"), col("c0"), col("c1"),
             expr("CAST((c0 * 1000000) div q0 AS BIGINT)").as("p0"),
-            expr("CAST((c1 * 1000000) div q1 AS BIGINT)").as("p1"))
-          .persist()
+            expr("CAST((c1 * 1000000) div q1 AS BIGINT)").as("p1")))
         val tot = census.agg(sum(col("c0")).as("tc0"),
           sum(col("c1")).as("tc1")).localCheckpoint(false)
         census.crossJoin(broadcast(tot))
@@ -9304,13 +9275,12 @@ object Relational {
           .rowsBetween(Window.unboundedPreceding, 0)
         // persist: the customer census feeds the decile cut AND the
         // grand totals — un-persisted, each consumer re-scans orders
-        val cust = t(s, dir, "orders")
+        val cust = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_custkey"),
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("c"))
           .groupBy("o_custkey")
-          .agg(sum(col("c").cast(DecimalType(38, 0))).as("cents"))
-          .persist()
+          .agg(sum(col("c").cast(DecimalType(38, 0))).as("cents")))
         RangeRank.ranked(cust, Seq.empty,
             Seq(col("cents"), col("o_custkey")))
           .select(col("cents"),
@@ -9381,7 +9351,7 @@ object Relational {
     // The cell census is nations×priorities-bounded; one orders scan.
     Q("q_friedman_test",
       (s, dir) => {
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .join(broadcast(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey"))),
             col("o_custkey") === col("c_custkey"))
@@ -9393,11 +9363,10 @@ object Relational {
             sum(col("c").cast(DecimalType(38, 0))).as("sc"))
           .select(col("c_nationkey"), col("o_orderpriority"),
             (col("sc").cast("double") / col("n").cast("double"))
-              .as("m"))
+              .as("m")))
           // persist: the ≤nations×priorities census feeds the k probe,
           // the full-block filter and the ranking — un-persisted, each
           // consumer re-runs the orders⋈customer scan
-          .persist()
         val k = cells.groupBy("c_nationkey")
           .agg(count(lit(1)).as("kb"))
           .agg(max(col("kb")).cast("long").as("k"))
@@ -9477,7 +9446,7 @@ object Relational {
     // feeds the k probe, the full-block filter and the ranking).
     Q("q_nemenyi_posthoc",
       (s, dir) => {
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .join(broadcast(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey"))),
             col("o_custkey") === col("c_custkey"))
@@ -9489,8 +9458,7 @@ object Relational {
             sum(col("c").cast(DecimalType(38, 0))).as("sc"))
           .select(col("c_nationkey"), col("o_orderpriority"),
             (col("sc").cast("double") / col("n").cast("double"))
-              .as("m"))
-          .persist()
+              .as("m")))
         val k = cells.groupBy("c_nationkey")
           .agg(count(lit(1)).as("kb"))
           .agg(max(col("kb")).cast("long").as("k"))
@@ -9578,7 +9546,7 @@ object Relational {
     // ranks/ranges are census-grid windows.
     Q("q_quade",
       (s, dir) => {
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .join(broadcast(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey"))),
             col("o_custkey") === col("c_custkey"))
@@ -9590,8 +9558,7 @@ object Relational {
             sum(col("c").cast(DecimalType(38, 0))).as("sc"))
           .select(col("c_nationkey"), col("o_orderpriority"),
             (col("sc").cast("double") / col("n").cast("double"))
-              .as("m"))
-          .persist()
+              .as("m")))
         val k = cells.groupBy("c_nationkey")
           .agg(count(lit(1)).as("kb"))
           .agg(max(col("kb")).cast("long").as("k"))
@@ -9613,10 +9580,9 @@ object Relational {
             .over(Window.orderBy(col("rng"), col("c_nationkey")))
             .cast("long"))
           .select("c_nationkey", "qb")
-        val scored = full.join(broadcast(qb), "c_nationkey")
+        val scored = Artifacts.persist(full.join(broadcast(qb), "c_nationkey")
           .select(col("o_orderpriority"), col("k"),
-            (col("qb") * (col("r") * 2 - (col("k") + 1))).as("s2"))
-          .persist()
+            (col("qb") * (col("r") * 2 - (col("k") + 1))).as("s2")))
         val perTreat = scored.groupBy("o_orderpriority")
           .agg(sum(col("s2")).cast("long").as("s2_sum"),
             count(lit(1)).cast("long").as("b"),
@@ -9904,7 +9870,7 @@ object Relational {
     // strata census.
     Q("q_breslow_day",
       (s, dir) => {
-        val cells = t(s, dir, "orders")
+        val cells = Artifacts.persist(t(s, dir, "orders")
           .join(broadcast(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey"))),
             col("o_custkey") === col("c_custkey"))
@@ -9921,8 +9887,7 @@ object Relational {
             sum(when(!col("e") && col("y"), 1L).otherwise(0L))
               .cast("long").as("c"),
             sum(when(!col("e") && !col("y"), 1L).otherwise(0L))
-              .cast("long").as("d"))
-          .persist()
+              .cast("long").as("d")))
         val orMh = cells
           .select(col("c_nationkey"),
             (col("a") + col("b") + col("c") + col("d")).as("n"),
@@ -9944,7 +9909,7 @@ object Relational {
               .as("sum_s"))
           .select(round(col("sum_r") / col("sum_s"), 6).as("orc"))
           .localCheckpoint(false)
-        val strata = cells.crossJoin(broadcast(orMh))
+        val strata = Artifacts.persist(cells.crossJoin(broadcast(orMh))
           .select(col("c_nationkey"), col("a"),
             (col("a") + col("b")).cast("double").as("n1"),
             (col("c") + col("d")).cast("double").as("n2"),
@@ -9983,8 +9948,7 @@ object Relational {
             round(col("ea"), 6).as("exp_a"),
             round((col("a").cast("double") - col("ea"))
               * (col("a").cast("double") - col("ea")) * col("vinv"), 6)
-              .as("term"))
-          .persist()
+              .as("term")))
         val tot = strata.agg(
           count(lit(1)).cast("long").as("n_strata"),
           expr("""aggregate(array_sort(collect_list(
@@ -10091,13 +10055,12 @@ object Relational {
       (s, dir) => {
         // persist: the day census feeds the moment agg AND the argmax
         // scan — un-persisted, each consumer re-scans orders
-        val days = t(s, dir, "orders")
+        val days = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderdate").cast("date").as("d"),
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("c"))
           .groupBy("d")
-          .agg(sum(col("c").cast(DecimalType(38, 0))).as("x"))
-          .persist()
+          .agg(sum(col("c").cast(DecimalType(38, 0))).as("x")))
         val mom = days.agg(count(lit(1)).cast("long").as("n"),
             sum(col("x")).as("s1"),
             sum(col("x") * col("x").cast(DecimalType(38, 0))).as("s2"))
@@ -10201,7 +10164,7 @@ object Relational {
     // everything after the ≤25-row census is 1-row arithmetic.
     Q("q_icc",
       (s, dir) => {
-        val census = t(s, dir, "orders")
+        val census = Artifacts.persist(t(s, dir, "orders")
           .join(broadcast(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey"))),
             col("o_custkey") === col("c_custkey"))
@@ -10211,8 +10174,7 @@ object Relational {
           .groupBy("c_nationkey")
           .agg(count(lit(1)).cast("long").as("n"),
             sum(col("c").cast(DecimalType(38, 0))).as("s"),
-            sum((col("c") * col("c")).cast(DecimalType(38, 0))).as("ss"))
-          .persist()
+            sum((col("c") * col("c")).cast(DecimalType(38, 0))).as("ss")))
         val tot = census.agg(sum(col("n")).cast("long").as("n_tot"),
           sum(col("s")).as("s_tot"),
           sum(col("n").cast(DecimalType(38, 0)) * col("n")).as("sn2"))
@@ -10321,14 +10283,13 @@ object Relational {
       (s, dir) => {
         // persist: the demand-day census feeds the top-10 pick AND the
         // replay — un-persisted, each consumer re-scans lineitem
-        val demands = t(s, dir, "lineitem")
+        val demands = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_partkey"),
             col("l_shipdate").cast("date").as("d"),
             expr("CAST(CAST(l_quantity AS DECIMAL(18,0)) AS BIGINT)")
               .as("q"))
           .groupBy("l_partkey", "d")
-          .agg(sum(col("q")).cast("long").as("q"))
-          .persist()
+          .agg(sum(col("q")).cast("long").as("q")))
         val top = demands.groupBy("l_partkey")
           .agg(count(lit(1)).cast("long").as("n_demand_days"))
           .orderBy(col("n_demand_days").desc, col("l_partkey"))
@@ -10592,7 +10553,7 @@ object Relational {
     // pick sorts the 12-dec-rounded d² with a day tiebreak.
     Q("q_mahalanobis_outliers",
       (s, dir) => {
-        val days = t(s, dir, "lineitem")
+        val days = Artifacts.persist(t(s, dir, "lineitem")
           .select(col("l_shipdate").cast("date").as("d"),
             expr("CAST(CAST(l_quantity AS DECIMAL(18,0)) AS BIGINT)")
               .as("q"),
@@ -10600,8 +10561,7 @@ object Relational {
               .as("c"))
           .groupBy("d")
           .agg(sum(col("q")).cast("long").as("xq"),
-            sum(col("c").cast(DecimalType(38, 0))).cast("long").as("yc"))
-          .persist()
+            sum(col("c").cast(DecimalType(38, 0))).cast("long").as("yc")))
         // moments from EXACT integer sums — covar_samp would float-sum
         // in partial-agg order (nondeterministic and engine-divergent)
         val mom = days
@@ -10773,7 +10733,7 @@ object Relational {
         val monthSums = (1 to 12).map(m =>
           sum(when(month(col("o_orderdate")) === m, col("c"))
             .otherwise(lit(0L)).cast(DecimalType(38, 0))).as(s"m$m"))
-        val census = t(s, dir, "orders")
+        val census = Artifacts.persist(t(s, dir, "orders")
           .join(broadcast(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey"))),
             col("o_custkey") === col("c_custkey"))
@@ -10781,8 +10741,7 @@ object Relational {
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("c"))
           .groupBy("c_nationkey")
-          .agg(monthSums.head, monthSums.tail: _*)
-          .persist()
+          .agg(monthSums.head, monthSums.tail: _*))
         val totExpr = (1 to 12).map(m => s"m$m").mkString(" + ")
         val nat = census
           .withColumn("tot", expr(totExpr))
@@ -10858,7 +10817,7 @@ object Relational {
     // frame. E[I] = −1/(n−1) is the null reference.
     Q("q_morans_i",
       (s, dir) => {
-        val rev = t(s, dir, "orders")
+        val rev = Artifacts.persist(t(s, dir, "orders")
           .join(broadcast(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_nationkey"))),
             col("o_custkey") === col("c_custkey"))
@@ -10866,13 +10825,12 @@ object Relational {
           .agg(sum(expr(
             "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
             .cast(DecimalType(38, 0))).as("cents"))
-          .select(col("nk"), (col("cents").cast("double") / 1e8).as("x"))
-          .persist()
+          .select(col("nk"), (col("cents").cast("double") / 1e8).as("x")))
         val xbar = rev.agg(count(lit(1)).cast("long").as("n"),
             expr("""aggregate(array_sort(collect_list(struct(nk, x))),
                     CAST(0 AS DOUBLE), (a, e) -> a + e.x)""").as("sx"))
           .select(col("n"), (col("sx") / col("n").cast("double")).as("xb"))
-        val trade = t(s, dir, "lineitem")
+        val trade = Artifacts.persist(t(s, dir, "lineitem")
           .join(broadcast(t(s, dir, "supplier")
             .select(col("s_suppkey"), col("s_nationkey"))),
             col("l_suppkey") === col("s_suppkey"))
@@ -10885,8 +10843,7 @@ object Relational {
           .groupBy(col("s_nationkey").as("i"), col("c_nationkey").as("j"))
           .agg(sum(expr(
             "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .cast(DecimalType(38, 0))).as("w"))
-          .persist()
+            .cast(DecimalType(38, 0))).as("w")))
         val wtot = trade.agg(sum(col("w")).as("wt"))
         val wn = trade.crossJoin(broadcast(wtot))
           .select(col("i"), col("j"),
@@ -10994,15 +10951,14 @@ object Relational {
               .as("net8"))
           .groupBy("l_orderkey")
           .agg(sum(col("net8")).as("line8"))
-        val diffs = t(s, dir, "orders")
+        val diffs = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderkey"),
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("hc"))
           .join(lines, col("o_orderkey") === col("l_orderkey"))
           .select(expr(
             "CAST((CAST(hc AS DECIMAL(38,0)) * 100000000 - line8) div 10000 AS BIGINT)")
-            .as("d4"))
-          .persist()
+            .as("d4")))
         val mom = diffs.agg(count(lit(1)).cast("long").as("n"),
             sum(col("d4").cast(DecimalType(38, 0))).as("s1"),
             sum(col("d4").cast(DecimalType(38, 0)) * col("d4")).as("s2"))
@@ -11079,13 +11035,12 @@ object Relational {
     // 1e-9 → the mean is an exact-integer sum ÷ k. α = 1/ĥ.
     Q("q_hill_tail",
       (s, dir) => {
-        val top = t(s, dir, "orders")
+        val top = Artifacts.persist(t(s, dir, "orders")
           .select(col("o_orderkey"),
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
               .as("c"))
           .orderBy(col("c").desc, col("o_orderkey"))
-          .limit(1001)
-          .persist()
+          .limit(1001))
         val boundary = top.agg(min(col("c")).cast("long").as("xk"))
         top.crossJoin(broadcast(boundary))
           .withColumn("rn", row_number().over(
@@ -11148,13 +11103,12 @@ object Relational {
     // final dollar conversion.
     Q("q_quantile_treatment_effect",
       (s, dir) => {
-        val base = t(s, dir, "orders")
+        val base = Artifacts.persist(t(s, dir, "orders")
           .select(
             when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
               lit("urgent")).otherwise(lit("rest")).as("g"),
             expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-              .as("cents"))
-          .persist()
+              .as("cents")))
         // rank targets reference the count column by name (exact
         // integer div — no FP rank arithmetic)
         val wide = RangeRank.groupValuesAtRanks(base, Seq("g"), "cents",
@@ -11420,15 +11374,14 @@ object Relational {
     Q("q_hoover_index",
       (s, dir) => {
         val dec38 = DecimalType(38, 0)
-        val spend = t(s, dir, "orders")
+        val spend = Artifacts.persist(t(s, dir, "orders")
           .groupBy("o_custkey")
           .agg((sum(dec2(col("o_totalprice"))) * 100).cast("long")
             .as("cents"))
           .join(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_mktsegment").as("segment")),
             col("o_custkey") === col("c_custkey"))
-          .select("segment", "cents")
-          .persist()
+          .select("segment", "cents"))
         val totals = spend.groupBy("segment")
           .agg(count(lit(1)).cast("long").as("n"),
             sum(col("cents").cast(dec38)).as("t"))

@@ -233,11 +233,10 @@ object TextOps {
         // persist: tf feeds BOTH the df census and the score join —
         // without it the explode+groupBy subtree runs twice (the
         // canonical "materialize the TF matrix" move of every IR stack)
-        val tf = docs
+        val tf = Artifacts.persist(docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
           .filter(col("tok") =!= "")
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-          .persist()
+          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
         val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
         val nDocs = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
         tf.join(dfreq, "tok")
@@ -279,13 +278,11 @@ object TextOps {
     Q("q_collocations",
       (s, dir) => {
         val tl = t(s, dir, "documents").select(split(col("text"), " ").as("toks"))
-        // persist both censuses and DERIVE the stream totals from them
-        // (n_uni = Σc, n_bi = Σc_xy): the unigram census is consumed by
-        // both join sides + its total, the bigram census by the main
-        // frame + its total — un-persisted, each consumer re-ran the
-        // corpus explode; now each explode runs exactly once
+        // DERIVE the stream totals from the censuses (n_uni = Σc,
+        // n_bi = Σc_xy): the unigram census feeds both join sides + its
+        // total, the bigram census the main frame + its total
         val uni = tl.select(explode(col("toks")).as("tok")).filter(col("tok") =!= "")
-        val u = uni.groupBy("tok").agg(count(lit(1)).as("c")).persist()
+        val u = uni.groupBy("tok").agg(count(lit(1)).as("c"))
         val nUni = u.agg(sum(col("c")).as("n_uni"))
         val bi = tl.select(explode(expr(
             """CASE WHEN size(toks) >= 2
@@ -294,7 +291,7 @@ object TextOps {
                ELSE array() END""")).as("b"))
           .select(col("b.x").as("x"), col("b.y").as("y"))
           .filter(col("x") =!= "" && col("y") =!= "")
-        val bc = bi.groupBy("x", "y").agg(count(lit(1)).as("c_xy")).persist()
+        val bc = bi.groupBy("x", "y").agg(count(lit(1)).as("c_xy"))
         val nBi = bc.agg(sum(col("c_xy")).as("n_bi"))
         bc.filter(col("c_xy") >= 5)
           .join(u.select(col("tok").as("x"), col("c").as("c_x")), Seq("x"))
@@ -374,7 +371,7 @@ object TextOps {
         // persist: dl feeds the corpus stats AND the score join — the
         // doc-length census is doc-bounded, caching it halves the
         // corpus explode passes
-        val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl")).persist()
+        val dl = Artifacts.persist(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
         val stats = dl.agg(sum(col("dl")).as("sum_dl"), count(lit(1)).as("n_docs"))
         val tf = toks.filter(col("tok").isin(qterms: _*))
           .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -822,9 +819,9 @@ object TextOps {
         // from them (tt = Σct, tn = Σcn): the corpus token stream was
         // exploded four times (tc, cc, tot, main join) — now the tot
         // consumer reads census caches and only tc/cc/main pay explodes
-        val tc = toks.filter(col("lang") === "en")
-          .groupBy("w").agg(count(lit(1)).as("ct")).persist()
-        val cc = toks.groupBy("w").agg(count(lit(1)).as("cn")).persist()
+        val tc = Artifacts.persist(toks.filter(col("lang") === "en")
+          .groupBy("w").agg(count(lit(1)).as("ct")))
+        val cc = Artifacts.persist(toks.groupBy("w").agg(count(lit(1)).as("cn")))
         val tot = tc.agg(coalesce(sum(col("ct")), lit(0L)).as("tt"))
           .crossJoin(cc.agg(sum(col("cn")).as("tn")))
         toks
@@ -1094,7 +1091,7 @@ object TextOps {
     // the fold and the output.
     Q("q_mrr",
       (s, dir) => {
-        val hits = t(s, dir, "documents")
+        val hits = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"), col("doc_id"), col("n_chars"))
           .groupBy("source")
           .agg(expr("graft_topk(doc_id, CAST(n_chars AS DOUBLE), 10)")
@@ -1106,8 +1103,7 @@ object TextOps {
           .agg(min(when(col("rel") === 4, col("i"))).as("first_rel"))
           .select(col("source"), col("first_rel"),
             coalesce(lit(1.0) / col("first_rel").cast("double"), lit(0.0))
-              .as("rr"))
-          .persist()
+              .as("rr")))
         val mrr = hits.agg(
           (expr("""aggregate(array_sort(collect_list(struct(source, rr))),
                    CAST(0 AS DOUBLE), (a, x) -> a + x.rr)""")
@@ -1141,16 +1137,14 @@ object TextOps {
     // (same graft_topk heap and tie rule), how many are grade-4
     // relevant (precision@10), and what share of ALL its grade-4 docs
     // did the cut capture (recall@10)? The projected corpus base
-    // persists (the q_corpus_report discipline) because the relevant-
-    // total census and the top-k ranking both consume it — one
-    // documents scan, two bounded readouts; rates are IEEE divisions
+    // feeds the relevant-total census and the top-k ranking — two
+    // bounded readouts; rates are IEEE divisions
     // of exact counts.
     Q("q_precision_recall_at_k",
       (s, dir) => {
         val base = t(s, dir, "documents")
           .select(col("source"), col("doc_id"), col("n_chars"),
             expr("pmod(((doc_id % 2147483648) * 2654435761) div 65536, 4) + 1").as("rel"))
-          .persist()
         val totals = base.filter(col("rel") === 4)
           .groupBy("source").agg(count(lit(1)).as("n_rel"))
         val top = base.groupBy("source")
@@ -1275,16 +1269,14 @@ object TextOps {
     // order — exact ints end to end, no division at all.
     Q("q_rare_token_docs",
       (s, dir) => {
-        // ONE persisted TF matrix feeds both consumers (the q_tfidf
-        // discipline): its group keys ARE the per-doc distinct tokens,
-        // and summing its counts rebuilds the full-occurrence corpus
-        // frequency (rarity counts repeats inside one doc) — one scan +
-        // one explode instead of two of each
+        // ONE TF matrix feeds both consumers: its group keys ARE the
+        // per-doc distinct tokens, and summing its counts rebuilds the
+        // full-occurrence corpus frequency (rarity counts repeats inside
+        // one doc) — one scan + one explode instead of two of each
         val tf = t(s, dir, "documents")
           .select(col("doc_id"),
             explode(expr("filter(split(text, ' '), x -> x <> '')")).as("w"))
           .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-          .persist()
         val docTok = tf.select(col("doc_id"), col("w"))
         val freq = tf.groupBy("w").agg(sum(col("c")).as("cnt"))
         val pick = Window.partitionBy("doc_id")
@@ -1428,13 +1420,10 @@ object TextOps {
     // invariant because it is a VALUE, not a row.
     Q("q_zipf_fit",
       (s, dir) => {
-        // persist: the census feeds the head cut AND the max(cnt) ratio
-        // base — un-persisted, the corpus explode+agg runs twice
         val census = t(s, dir, "documents")
           .select(explode(split(col("text"), " ")).as("tok"))
           .filter(col("tok") =!= "")
           .groupBy("tok").agg(count(lit(1)).as("cnt"))
-          .persist()
         val top = census.orderBy(col("cnt").desc, col("tok")).limit(100)
           .withColumn("rank",
             row_number().over(Window.orderBy(col("cnt").desc, col("tok")))
@@ -1518,11 +1507,10 @@ object TextOps {
     // per-source frame.
     Q("q_map_at_k",
       (s, dir) => {
-        val base = t(s, dir, "documents")
+        val base = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"), col("doc_id"), col("n_chars"),
             expr("pmod(((doc_id % 2147483648) * 2654435761) div 65536, 4) + 1")
-              .as("rel"))
-          .persist()
+              .as("rel")))
         val totals = base.filter(col("rel") === 4)
           .groupBy("source").agg(count(lit(1)).as("n_rel"))
         val ap = base.groupBy("source")
@@ -1541,13 +1529,12 @@ object TextOps {
                           CAST(a.cum + hits[i - 1] AS DOUBLE) / CAST(i AS DOUBLE),
                           CAST(0 AS DOUBLE))),
                       a -> a.ap)""").as("ap_sum"))
-        val perSrc = ap.join(totals, Seq("source"), "left")
+        val perSrc = Artifacts.persist(ap.join(totals, Seq("source"), "left")
           .select(col("source"),
             coalesce(col("n_rel"), lit(0L)).as("n_rel"),
             when(coalesce(col("n_rel"), lit(0L)) === 0, lit(0.0))
               .otherwise(col("ap_sum")
-                / least(col("n_rel"), lit(10L)).cast("double")).as("ap"))
-          .persist()
+                / least(col("n_rel"), lit(10L)).cast("double")).as("ap")))
         val map = perSrc.agg(
           (expr("""aggregate(array_sort(collect_list(struct(source, ap))),
                    CAST(0 AS DOUBLE), (a, x) -> a + x.ap)""")
@@ -1761,7 +1748,7 @@ object TextOps {
         val score = (markers: Seq[String]) =>
           markers.map(m => size(filter(split(col("text"), " "),
             x => x === lit(m))).cast("long")).reduce(_ + _)
-        val cells = t(s, dir, "documents")
+        val cells = Artifacts.persist(t(s, dir, "documents")
           .select(col("lang"),
             score(Seq("the", "a", "of")).as("s_en"),
             score(Seq("el", "la", "de")).as("s_es"),
@@ -1770,8 +1757,7 @@ object TextOps {
             when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de"), "en")
               .when(col("s_es") >= col("s_de"), "es")
               .otherwise("de").as("guess"))
-          .groupBy("lang", "guess").agg(count(lit(1)).as("n"))
-          .persist()
+          .groupBy("lang", "guess").agg(count(lit(1)).as("n")))
         val acc = cells.agg(
           (sum(when(col("lang") === col("guess"), col("n")).otherwise(0L))
             .cast("double") / sum(col("n")).cast("double")).as("accuracy"))
@@ -1916,11 +1902,10 @@ object TextOps {
     // classic 100-TB funnel. Coverage = exact-integer prefix / total.
     Q("q_token_coverage",
       (s, dir) => {
-        val census = t(s, dir, "documents")
+        val census = Artifacts.persist(t(s, dir, "documents")
           .select(explode(split(col("text"), " ")).as("tok"))
           .filter(col("tok") =!= "")
-          .groupBy("tok").agg(count(lit(1)).as("c"))
-          .persist()
+          .groupBy("tok").agg(count(lit(1)).as("c")))
         val tot = census.agg(sum(col("c")).as("total_tokens"),
           count(lit(1)).as("vocab_n"))
         RangeRank.ranked(census, Seq.empty,
@@ -2119,12 +2104,11 @@ object TextOps {
     // single-task window would funnel it.
     Q("q_source_keywords",
       (s, dir) => {
-        val cen = t(s, dir, "documents")
+        val cen = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"),
             explode(split(col("text"), " ")).as("tok"))
           .filter(col("tok") =!= "")
-          .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-          .persist()
+          .groupBy("source", "tok").agg(count(lit(1)).as("c")))
         val df = cen.groupBy("tok").agg(count(lit(1)).as("df"))
         val nS = cen.agg(countDistinct(col("source")).as("n_sources"))
         val scored = cen.join(df, "tok").crossJoin(broadcast(nS))
@@ -2265,19 +2249,17 @@ object TextOps {
       (s, dir) => {
         val tl = t(s, dir, "documents")
           .select(split(col("text"), " ").as("toks"))
-        val u = tl.select(explode(col("toks")).as("tok"))
+        val u = Artifacts.persist(tl.select(explode(col("toks")).as("tok"))
           .filter(col("tok") =!= "")
-          .groupBy("tok").agg(count(lit(1)).as("c"))
-          .persist()
+          .groupBy("tok").agg(count(lit(1)).as("c")))
         val nUni = u.agg(sum(col("c")).as("n_uni"))
-        val pairs = tl.select(explode(expr(
+        val pairs = Artifacts.persist(tl.select(explode(expr(
             """flatten(transform(toks, (x, i) ->
                  transform(slice(toks, i + 2, 3),
                    y -> struct(x AS x, y AS y))))""")).as("p"))
           .filter(col("p.x") =!= "" && col("p.y") =!= "")
           .select(col("p.x").as("x"), col("p.y").as("y"))
-          .groupBy("x", "y").agg(count(lit(1)).as("c_xy"))
-          .persist()
+          .groupBy("x", "y").agg(count(lit(1)).as("c_xy")))
         val nPairs = pairs.agg(sum(col("c_xy")).as("n_pairs"))
         pairs.filter(col("c_xy") >= 10)
           .join(u.select(col("tok").as("x"), col("c").as("c_x")), Seq("x"))
@@ -2344,15 +2326,14 @@ object TextOps {
     // bounded by the ≤langs² catalog, sizes census-over-census.
     Q("q_lang_vocab_jaccard",
       (s, dir) => {
-        val lg = t(s, dir, "documents")
+        val lg = Artifacts.persist(t(s, dir, "documents")
           .select(col("lang"), split(col("text"), " ").as("toks"))
           .select(col("lang"), explode(expr(
             """CASE WHEN size(toks) >= 2
                THEN transform(sequence(0, size(toks) - 2),
                       i -> concat(toks[i], ' ', toks[i+1]))
                ELSE array() END""")).as("g"))
-          .distinct()
-          .persist()
+          .distinct())
         val sz = lg.groupBy("lang").agg(count(lit(1)).as("n"))
         val inter = lg.select(col("lang").as("la"), col("g"))
           .join(lg.select(col("lang").as("lb"), col("g")), "g")
@@ -2394,10 +2375,9 @@ object TextOps {
     // co-partitioned rejoin — private share = exact counts.
     Q("q_vocab_private_share",
       (s, dir) => {
-        val st = t(s, dir, "documents")
+        val st = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-          .filter(col("tok") =!= "").distinct()
-          .persist()
+          .filter(col("tok") =!= "").distinct())
         val df = st.groupBy("tok").agg(count(lit(1)).as("df"))
         st.join(df, "tok")
           .groupBy("source")
@@ -2435,13 +2415,12 @@ object TextOps {
     // token-pinned sorted fold — both engines reduce identically.
     Q("q_source_kl",
       (s, dir) => {
-        val census = t(s, dir, "documents")
+        val census = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"),
             explode(split(col("text"), " ")).as("tok"))
           .filter(col("tok") =!= "")
           .groupBy("source", "tok")
-          .agg(count(lit(1)).cast("long").as("n"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("n")))
         val top = census.groupBy("tok")
           .agg(sum(col("n")).cast("long").as("n_tok"))
           .orderBy(col("n_tok").desc, col("tok"))
@@ -2515,9 +2494,8 @@ object TextOps {
     // (descending-sequence trap).
     Q("q_bigram_cond_entropy",
       (s, dir) => {
-        val toks = t(s, dir, "documents")
-          .select(split(col("text"), " ").as("w"))
-          .persist()
+        val toks = Artifacts.persist(t(s, dir, "documents")
+          .select(split(col("text"), " ").as("w")))
         val top = toks.select(explode(col("w")).as("u"))
           .filter(col("u") =!= "")
           .groupBy("u").agg(count(lit(1)).cast("long").as("n_u"))
@@ -2531,7 +2509,7 @@ object TextOps {
           .select(col("p.u").as("u"), col("p.v").as("v"))
           .filter(col("u") =!= "" && col("v") =!= "")
           .groupBy("u", "v").agg(count(lit(1)).cast("long").as("n_uv"))
-        val restricted = bi.join(broadcast(top.select("u")), "u").persist()
+        val restricted = Artifacts.persist(bi.join(broadcast(top.select("u")), "u"))
         val den = restricted.groupBy("u")
           .agg(sum(col("n_uv")).cast("long").as("n_u_dot"))
         restricted.join(broadcast(den), "u")
@@ -2590,7 +2568,7 @@ object TextOps {
     // an exact total order, no double-keyed ranking.
     Q("q_negative_sampling",
       (s, dir) => {
-        val head = t(s, dir, "documents")
+        val head = Artifacts.persist(t(s, dir, "documents")
           .select(explode(
             expr("filter(split(text, ' '), x -> x <> '')")).as("tok"))
           .groupBy("tok")
@@ -2599,8 +2577,7 @@ object TextOps {
           .limit(200)
           .withColumn("w",
             round(sqrt(col("c").cast("double"))
-              * sqrt(sqrt(col("c").cast("double"))), 12))
-          .persist()
+              * sqrt(sqrt(col("c").cast("double"))), 12)))
         val z = head.agg(
           expr("""aggregate(array_sort(collect_list(struct(tok, w))),
                   CAST(0 AS DOUBLE), (a, x) -> a + x.w)""").as("z"))
@@ -2683,24 +2660,22 @@ object TextOps {
     // fan-out is |sources|² — catalog-bounded, never corpus².
     Q("q_burrows_delta",
       (s, dir) => {
-        val cen = t(s, dir, "documents")
+        val cen = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"), explode(
             expr("filter(split(text, ' '), x -> x <> '')")).as("tok"))
           .groupBy("source", "tok")
-          .agg(count(lit(1)).cast("long").as("c"))
-          .persist()
+          .agg(count(lit(1)).cast("long").as("c")))
         val totals = cen.groupBy("source")
           .agg(sum(col("c")).cast("long").as("n_s"))
         val head = cen.groupBy("tok")
           .agg(sum(col("c")).cast("long").as("ct"))
           .orderBy(col("ct").desc, col("tok")).limit(30)
           .select(col("tok"))
-        val grid = head.crossJoin(totals)
+        val grid = Artifacts.persist(head.crossJoin(totals)
           .join(cen, Seq("source", "tok"), "left")
           .select(col("tok"), col("source"),
             round(coalesce(col("c"), lit(0L)).cast("double")
-              / col("n_s").cast("double"), 12).as("f"))
-          .persist()
+              / col("n_s").cast("double"), 12).as("f")))
         val mom = grid.groupBy("tok")
           .agg(count(lit(1)).cast("long").as("ns"),
             expr("""aggregate(array_sort(collect_list(struct(source, f))),
@@ -3007,7 +2982,7 @@ object TextOps {
                + ascii(substring(tok, 4, 1)) * 7
                + ascii(substring(tok, -1, 1)) * 127
                + length(tok), 1024)""")
-        val loads = t(s, dir, "documents")
+        val loads = Artifacts.persist(t(s, dir, "documents")
           .select(expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
           .select(explode(expr(
             """transform(
@@ -3016,8 +2991,7 @@ object TextOps {
                  i -> concat(toks[i - 1], ' ', toks[i]))""")).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("cnt"))
           .select(bucket.cast("long").as("b"))
-          .groupBy("b").agg(count(lit(1)).cast("long").as("load"))
-          .persist()
+          .groupBy("b").agg(count(lit(1)).cast("long").as("load")))
         val tot = loads.agg(sum(col("load")).cast("long").as("n_vocab"),
           count(lit(1)).cast("long").as("n_used"),
           sum(col("load") * (col("load") - 1)).cast("long").as("coll2"))
@@ -3227,12 +3201,11 @@ object TextOps {
     Q("q_token_dispersion",
       (s, dir) => {
         val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val cells = t(s, dir, "documents")
+        val cells = Artifacts.persist(t(s, dir, "documents")
           .select(col("source"),
             explode(split(col("text"), " ")).as("tok"))
           .filter(col("tok") =!= "")
-          .groupBy("source", "tok").agg(count(lit(1)).as("v"))
-          .persist()
+          .groupBy("source", "tok").agg(count(lit(1)).as("v")))
         val sizes = cells.groupBy("source")
           .agg(sum(col("v")).cast("long").as("t_i"))
         val tot = sizes.agg(sum(col("t_i")).cast("long").as("tt"))

@@ -858,7 +858,7 @@ object VectorOps {
           .filter(col("tok") =!= "")
         // persist: dl feeds the corpus stats AND the score join (the
         // q_bm25 fix applied to the sparse leg)
-        val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl")).persist()
+        val dl = Artifacts.persist(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
         val stats = dl.agg(sum(col("dl")).as("sum_dl"), count(lit(1)).as("n_docs"))
         val tf = toks.filter(col("tok").isin(qterms: _*))
           .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -1226,7 +1226,6 @@ object VectorOps {
           .agg(sum(round(col("x").cast("double") * lit(1e12)).cast(dec38))
             .as("sxu"),
             count(lit(1)).as("n"))
-          .persist()
         val perLabel = comp.groupBy("label")
           .agg(sort_array(collect_list(struct(col("j"),
             (col("sxu").cast("double") / lit(1e12)
@@ -1463,20 +1462,18 @@ object VectorOps {
           .filter(col("n2") > 0)
         val probe = emb.filter(col("vec_id") === 0)
           .select(col("embedding").as("pf"), col("n2").as("pn2"))
-        val cands = emb.crossJoin(broadcast(probe))
+        val cands = Artifacts.persist(emb.crossJoin(broadcast(probe))
           .filter(col("vec_id") =!= 0)
           .select(col("vec_id"), col("embedding"), col("n2"),
             (dot(col("pf"), col("embedding"))
               / sqrt(col("pn2") * col("n2"))).as("rel"))
           .orderBy(col("rel").desc, col("vec_id"))
-          .limit(20)
-          .persist()
-        val sims = cands.as("x").join(cands.as("y"),
+          .limit(20))
+        val sims = Artifacts.persist(cands.as("x").join(cands.as("y"),
             col("x.vec_id") =!= col("y.vec_id"))
           .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
             (dot(col("x.embedding"), col("y.embedding"))
-              / sqrt(col("x.n2") * col("y.n2"))).as("sim"))
-          .persist()
+              / sqrt(col("x.n2") * col("y.n2"))).as("sim")))
         val pool = cands.select(col("vec_id"), col("rel"))
         var selected = pool
           .orderBy(col("rel").desc, col("vec_id")).limit(1)
@@ -1627,7 +1624,7 @@ object VectorOps {
     */
   def powerIterate(s: SparkSession, dir: String, rounds: Int): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val q = t(s, dir, "embeddings")
+    val q = Artifacts.persist(t(s, dir, "embeddings")
       // the float→double widening is EXPLICIT: a float-domain multiply
       // moves ~0.4% of elements across the rounding boundary (DuckDB
       // multiplies FLOAT[] elements in float; Spark widens) — pin both
@@ -1635,8 +1632,7 @@ object VectorOps {
       .select(expr(
         """transform(embedding,
            x -> cast(round(cast(x as double) * 1000000.0d) as long))""")
-        .as("q"))
-      .persist()
+        .as("q")))
     var v: IndexedSeq[BigInt] = IndexedSeq.fill(64)(BigInt(1000000))
     var rayleigh = 0.0
     for (_ <- 1 to rounds) {

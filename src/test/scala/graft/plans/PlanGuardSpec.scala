@@ -9,8 +9,15 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 class PlanGuardSpec extends SparkSpec {
 
-  private def qe(name: String) =
+  /** Each query is planned on an empty SQL cache. The suite builds its
+    * queries outside any `Artifacts.scoped`, so their persists stay
+    * cached, and a later query whose census has the same plan would read
+    * that cache: a scan budget would then hold on another query's persist.
+    */
+  private def qe(name: String) = {
+    spark.catalog.clearCache()
     SparkEntry.queries(name)(spark, sfDir).queryExecution
+  }
 
   private def formatted(name: String): String =
     qe(name).explainString(ExplainMode.fromString("formatted"))
@@ -892,8 +899,8 @@ class PlanGuardSpec extends SparkSpec {
       // round-6 continuation batches (stat tests / graph / LM)
       "q_mann_whitney" -> 1, // single customer chain to the cents census
       "q_mcnemar" -> 1, // ONE events agg to the 2×2 discordant census
-      "q_levene" -> 0, // persisted (seg, cents) census: totals + medians + z-join
-      "q_hits" -> 0, // edges persisted src-partitioned; rounds ride the cache
+      "q_levene" -> 0, // anovaFinish persists the z census; the readout reads it
+      "q_hits" -> 0, // eager per-round checkpoints; the readout reads only them
       "q_adamic_adar" -> 2, // single li⋈orders chain to the basket fan-out
       "q_line_position_effect" -> 0, // persisted projection: totals + rejoin
       "q_source_kl" -> 0, // persisted (source, token) census: top + grid + totals
